@@ -30,7 +30,10 @@ import org.apache.spark.sql.Row
   *     "this instance only" partial state to expose; Spark's shuffle
   *     replaced scatter-gather, SURVEY §0);
   *   - validation failure → HTTP 400 with
-  *     `ErrorMessage{errorMessage, errorCode}` (model/ErrorMessage.java).
+  *     `ErrorMessage{errorMessage, errorCode}` (model/ErrorMessage.java);
+  *   - any other failure → HTTP 500 with a fixed `ErrorMessage` text;
+  *     the exception itself goes to stderr, never into the body (it can
+  *     carry store paths and planner internals).
   *
   * Timestamp keys are epoch SECONDS (`ts_s` — the library-wide
   * presentation convention), where the reference emits the view's epoch
@@ -56,8 +59,18 @@ import org.apache.spark.sql.Row
   * MERGE upserts swap whole partition directories). `local=true` is
   * honored with the full answer because no instance holds partial
   * state.
+  *
+  * TCP_NODELAY: the JDK server writes a response's headers and its
+  * body as two sends. With Nagle's algorithm on, the body waits until
+  * the client ACKs the headers, and a client that delays its ACK
+  * (Linux: up to 40 ms) stalls every response by that much — a bare 404
+  * round trip took ~47 ms instead of ~4 ms. [[start]] therefore sets
+  * `sun.net.httpserver.nodelay=true` unless the operator already set
+  * it. The JDK reads the property once, when its server class is first
+  * loaded, so it is set before the first `HttpServer.create`.
   */
 class ExploraHttpServer(service: ExploraService, requestedPort: Int = 0) {
+  import ExploraHttpServer.NoDelay
 
   private val mapper = new ObjectMapper()
   @volatile private var server: HttpServer = _
@@ -67,6 +80,7 @@ class ExploraHttpServer(service: ExploraService, requestedPort: Int = 0) {
 
   def start(): Int = synchronized {
     require(server == null, "server already started")
+    if (System.getProperty(NoDelay) == null) System.setProperty(NoDelay, "true")
     server = HttpServer.create(new InetSocketAddress(requestedPort), 0)
     server.createContext("/", (ex: HttpExchange) => route(ex))
     server.setExecutor(Executors.newFixedThreadPool(8))
@@ -104,7 +118,9 @@ class ExploraHttpServer(service: ExploraService, requestedPort: Int = 0) {
       }
     } catch {
       case e: IllegalArgumentException => respond(ex, 400, errorJson(e.getMessage, 400))
-      case e: Exception => respond(ex, 500, errorJson(String.valueOf(e.getMessage), 500))
+      case e: Exception =>
+        System.err.println(s"[ExploraHttpServer] 500 for ${ex.getRequestURI}: $e")
+        respond(ex, 500, errorJson(ExploraHttpServer.InternalErrorText, 500))
     } finally ex.close()
 
   /** GET …/history (QueryingService.java:38-135): same parameter names,
@@ -308,4 +324,12 @@ class ExploraHttpServer(service: ExploraService, requestedPort: Int = 0) {
     try os.write(bytes)
     finally os.close()
   }
+}
+
+object ExploraHttpServer {
+
+  /** The `errorMessage` of every 500 response. */
+  val InternalErrorText = "internal server error"
+
+  private val NoDelay = "sun.net.httpserver.nodelay"
 }

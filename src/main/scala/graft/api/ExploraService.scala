@@ -5,6 +5,9 @@ import java.time.Instant
 import graft.geo.{GeoHash, QuadKey}
 import graft.operators.{ExploraQueries, QueryValidation, ViewBuilder}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.PartitionedFileUtil
+import org.apache.spark.sql.execution.datasources.{
+  FilePartition, HadoopFsRelation, LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.functions._
 
 /** The reference's query-service surface as a library API: the same
@@ -46,16 +49,36 @@ final case class SnapshotParams(
   *   geo key (`geo_part`) — the 100 TB layout: a snapshot/history probe
   *   carries a `geo_part` predicate, so the scan prunes to the probed
   *   partitions at the FILE level (PartitionFilters, asserted in
-  *   ExploraServiceSpec) instead of reading the whole view. When None,
-  *   views are kept as in-process persisted DataFrames (harness mode).
+  *   ExploraServiceSpec) instead of reading the whole view. `geo_part`
+  *   is read as the string it was written as: inference would type
+  *   quadtiling's all-digit directories (`00`…`33`) as integers, and a
+  *   prefix such as `"03"` would then compare against `3`.
+  *
+  *   One split, one job: when the `geo_part` directories a probe
+  *   selects pack into ONE input split — decided with Spark's own
+  *   packing (`FilePartition.maxSplitBytes`, then the open-cost
+  *   bin-packing of `FilePartition.getFilePartitions`) over the file
+  *   index the view already holds, so deciding plans nothing — the
+  *   pruned slice is `coalesce(1)`-ed. Its single partition satisfies
+  *   the distribution the query's `groupBy` and `orderBy` require, so
+  *   the probe runs as one job of one task with no hash or range
+  *   exchange, instead of a scan stage plus exchange stages and their
+  *   per-job driver overhead. This is safe because the scan was one
+  *   task anyway: the coalesce removes only the exchanges, never scan
+  *   parallelism, and the rows are the same. A slice spanning several
+  *   splits (the 100 TB case) keeps the parallel plan unchanged.
+  *
+  *   When None, views are kept as in-process persisted DataFrames
+  *   (harness mode), also unchanged by the one-split rule.
   */
 class ExploraService(
     readings: DataFrame,
     viewStore: Option[String] = None,
     geoPartLen: Int = 2) {
+  import ExploraService.View
 
   private val viewCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, String), DataFrame]
+    scala.collection.concurrent.TrieMap.empty[(String, Int, String), View]
 
   private def geoExpr(geoIndex: String, precision: Int) = geoIndex match {
     // prefix property: substring of a finer key IS the coarser key,
@@ -64,7 +87,7 @@ class ExploraService(
     case _            => substring(col("gh12"), 1, precision)
   }
 
-  private def view(geoIndex: String, precision: Int, resolution: String): DataFrame =
+  private def view(geoIndex: String, precision: Int, resolution: String): View =
     viewCache.getOrElseUpdate(
       (geoIndex, precision, resolution),
       viewStore match {
@@ -73,9 +96,10 @@ class ExploraService(
           val path = s"$base/${geoIndex}_p${precision}_$resolution"
           val p = new org.apache.hadoop.fs.Path(path)
           val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          val built = ViewBuilder.build(readings, geoExpr(geoIndex, precision), resolution)
+            .withColumn("geo_part", substring(col("geo"), 1, geoPartLen))
           if (!fs.exists(p))
-            ViewBuilder.build(readings, geoExpr(geoIndex, precision), resolution)
-              .withColumn("geo_part", substring(col("geo"), 1, geoPartLen))
+            built
               // cluster rows by (geo, ts) inside each partition so
               // parquet row-group min/max statistics line up with the
               // probe predicates: a snapshot probe (geo IN-list + one ts)
@@ -93,25 +117,53 @@ class ExploraService(
               .mode("overwrite")
               .partitionBy("geo_part")
               .parquet(path)
-          spark.read.parquet(path)
+          // the written schema, geo_part a string (class scaladoc)
+          val df = spark.read.schema(built.schema).parquet(path)
+          val index = df.queryExecution.analyzed.collectFirst {
+            case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r.location
+          }.get
+          // a null geo_part (no geo key) lies under no probe prefix
+          val parts = index.listFiles(Nil, Nil).collect {
+            case d if !d.values.isNullAt(0) => d.values.getString(0) -> d
+          }
+          View(df, Some(parts.toMap))
         case None =>
-          ViewBuilder.build(readings, geoExpr(geoIndex, precision), resolution)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          View(
+            ViewBuilder.build(readings, geoExpr(geoIndex, precision), resolution)
+              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
+            None)
       })
 
-  /** Partition-level pre-filter: geo probe prefixes → `geo_part`
-    * predicate (a SUPERSET of the row-level geo predicate, which still
-    * applies afterwards). No-op for in-process views.
+  /** Partition-level pre-filter: the `geo_part` partitions under the
+    * geo probe prefixes (a SUPERSET of the row-level geo predicate,
+    * which still applies afterwards), coalesced to one partition when
+    * their files are one input split (class scaladoc). No-op for
+    * in-process views.
     */
-  private def partPruned(v: DataFrame, prefixes: Seq[String]): DataFrame =
-    if (!v.columns.contains("geo_part") || prefixes.isEmpty) v
-    else {
-      val preds = prefixes.map(_.take(geoPartLen)).distinct.map { q =>
-        if (q.length == geoPartLen) col("geo_part") === q
-        else col("geo_part").startsWith(q) // coarser-than-partition prefix
-      }
-      v.filter(preds.reduce(_ || _))
+  private def partPruned(v: View, prefixes: Seq[String]): DataFrame =
+    v.parts match {
+      case Some(parts) if prefixes.nonEmpty =>
+        // a prefix coarser than the partition key selects every partition under it
+        val qs = prefixes.map(_.take(geoPartLen)).distinct
+        val selected = parts.filter { case (part, _) => qs.exists(part.startsWith) }
+        val pruned = v.df.filter(col("geo_part").isin(selected.keys.toSeq: _*))
+        if (oneSplit(selected.values.toSeq)) pruned.coalesce(1) else pruned
+      case _ => v.df
     }
+
+  /** Whether a scan of `dirs` is one input split: the split size and
+    * bin-packing FileSourceScanExec applies (parquet is splittable).
+    */
+  private def oneSplit(dirs: Seq[PartitionDirectory]): Boolean = {
+    val spark = readings.sparkSession
+    val maxSplitBytes = FilePartition.maxSplitBytes(spark, dirs)
+    val splits = for {
+      d <- dirs
+      f <- d.files
+      s <- PartitionedFileUtil.splitFiles(f, f.getPath, true, maxSplitBytes, d.values)
+    } yield s
+    FilePartition.getFilePartitions(spark, splits.sortBy(-_.length), maxSplitBytes).size <= 1
+  }
 
   /** GET …/history equivalent (QueryingService.java:38-135). */
   def history(p: HistoryParams): DataFrame = {
@@ -246,4 +298,12 @@ class ExploraService(
     */
   private def rawAsView(precision: Int, resolution: String): DataFrame =
     ViewBuilder.build(readings, substring(col("gh12"), 1, precision), resolution)
+}
+
+object ExploraService {
+
+  /** A cached view. `parts` lists a disk view's files by `geo_part`
+    * value, taken once from the view's own file index (None in-process).
+    */
+  private final case class View(df: DataFrame, parts: Option[Map[String, PartitionDirectory]])
 }

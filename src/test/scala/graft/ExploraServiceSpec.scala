@@ -1,7 +1,17 @@
 package graft
 
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+
 import graft.api.{ExploraService, HistoryParams, SnapshotParams}
+import graft.functions.GeoFunctions
 import graft.sources.SensorGrid
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.StringType
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The service facade: same routing as the reference's REST endpoints. */
@@ -13,6 +23,77 @@ class ExploraServiceSpec extends AnyFunSuite {
   private val gh6 = SensorGrid.cellGeo.map(_._2.substring(0, 6)).distinct.sorted
   private val from = java.time.Instant.parse("2024-01-01T00:00:00Z").toEpochMilli
   private val to = java.time.Instant.parse("2024-02-01T00:00:00Z").toEpochMilli
+
+  private def tempDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toFile.getAbsolutePath
+
+  /** Every node of an executed plan. AQE wraps the plan and its
+    * QueryStageExec nodes are LEAVES, so both adaptive layers are
+    * unwrapped recursively.
+    */
+  private def planNodes(p: SparkPlan): Seq[SparkPlan] =
+    p.collect {
+      case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+      case q: QueryStageExec        => q +: planNodes(q.plan)
+      case n                        => Seq(n)
+    }.flatten
+
+  private def scansOf(df: DataFrame): Seq[FileSourceScanExec] =
+    planNodes(df.queryExecution.executedPlan).collect { case f: FileSourceScanExec => f }
+
+  private def shufflesOf(df: DataFrame): Seq[ShuffleExchangeExec] =
+    planNodes(df.queryExecution.executedPlan).collect { case e: ShuffleExchangeExec => e }
+
+  /** `df.collect()` and the number of Spark jobs it started. Jobs are
+    * told apart by a job group; listener events arrive asynchronously
+    * but in order, so a marker job run afterwards under another group
+    * flushes them: once its end is seen, every earlier event has been.
+    */
+  private def collectCountingJobs(df: DataFrame): (Array[Row], Int) = {
+    val sc = spark.sparkContext
+    val group = s"explora-probe-${java.util.UUID.randomUUID()}"
+    val marker = s"$group-marker"
+    val probeJobs = ConcurrentHashMap.newKeySet[Int]()
+    val markerDone = new CountDownLatch(1)
+    val markerJobs = ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`)  => probeJobs.add(e.jobId)
+          case Some(`marker`) => markerJobs.add(e.jobId)
+          case _              =>
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (markerJobs.contains(e.jobId)) markerDone.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "probe")
+      val rows = df.collect()
+      sc.setJobGroup(marker, "listener flush")
+      sc.parallelize(Seq(1), 1).count()
+      assert(markerDone.await(60, TimeUnit.SECONDS), "listener never saw the marker job")
+      (rows, probeJobs.size)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** Same rows in the same order; doubles may differ in the last bits,
+    * because the disk and in-process plans sum in different orders.
+    */
+  private def assertSameRows(got: Array[Row], want: Array[Row], clue: String): Unit = {
+    assert(got.length === want.length, clue)
+    got.zip(want).foreach { case (g, w) =>
+      assert(g.length === w.length, clue)
+      g.toSeq.zip(w.toSeq).foreach {
+        case (a: Double, b: Double) =>
+          assert(math.abs(a - b) <= 1e-9 * math.max(1.0, math.abs(b)), s"$clue: $g vs $w")
+        case (a, b) => assert(a === b, s"$clue: $g vs $w")
+      }
+    }
+  }
 
   test("history with explicit resolution returns an ordered time series") {
     val df = svc.history(HistoryParams(
@@ -92,7 +173,7 @@ class ExploraServiceSpec extends AnyFunSuite {
   }
 
   test("disk-backed view store: snapshot probe prunes geo_part partitions at file level") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-viewstore").toFile.getAbsolutePath
+    val tmp = tempDir("graft-viewstore")
     // geoPartLen 5: the sf0.001 grid is all one Antwerp geohash-4 cell
     // (u155…), so partitions only separate at the 5th character
     val disk = new ExploraService(
@@ -113,18 +194,8 @@ class ExploraServiceSpec extends AnyFunSuite {
     assert(mem.nonEmpty, "probe bbox/date has no data — pick one that does")
     assert(probe.collect().map(_.toSeq).sortBy(_.mkString).sameElements(mem))
 
-    // the scan must prune on the partition column, not read-all-then-filter.
-    // AQE wraps the plan and QueryStageExec nodes are LEAVES, so unwrap
-    // both adaptive layers recursively to reach the file scan.
-    def scansOf(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.FileSourceScanExec] =
-      p.collect {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          scansOf(a.executedPlan)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => scansOf(q.plan)
-        case f: org.apache.spark.sql.execution.FileSourceScanExec => Seq(f)
-      }.flatten
-    val scans = scansOf(probe.queryExecution.executedPlan)
+    // the scan must prune on the partition column, not read-all-then-filter
+    val scans = scansOf(probe)
     assert(scans.nonEmpty, "expected a parquet file scan under the disk-backed service")
     val pf = scans.head.metadata.getOrElse("PartitionFilters", "")
     assert(pf.contains("geo_part"), s"no geo_part partition filter in scan: $pf")
@@ -133,6 +204,102 @@ class ExploraServiceSpec extends AnyFunSuite {
       .listFiles().count(_.getName.startsWith("geo_part="))
     assert(scans.head.selectedPartitions.partitionCount < allParts,
       s"probe read all $allParts partitions — no pruning")
+  }
+
+  // one disk store per geo_part length, shared by the plan-shape tests:
+  // at geoPartLen 2 the whole sf0.001 grid (Antwerp, u1…) is one
+  // partition of one file, so every probe is one input split; at 5 the
+  // Antwerp box spans several partitions, one file each. The readings
+  // need a plan of their own: over `svc`'s readings, Spark's cache
+  // manager would write `svc`'s persisted four-partition views, four
+  // files to every partition
+  private lazy val storeReadings = SensorGrid.readings(spark, Sf0001).repartition(1).cache()
+  private lazy val disk2 = new ExploraService(storeReadings, viewStore = Some(tempDir("graft-vs2")))
+  private lazy val disk5 =
+    new ExploraService(storeReadings, viewStore = Some(tempDir("graft-vs5")), geoPartLen = 5)
+
+  private val snapTs = java.time.Instant.parse("2024-01-15T07:00:00Z").toEpochMilli
+  private val (u1555jLat, u1555jLon) = graft.geo.GeoHash.decode("u1555j")
+  // a small box around the one cell with signup data that day at sf0.001
+  private val smallBox = SnapshotParams(
+    "signup", "count", snapTs, u1555jLat + 0.01, u1555jLon - 0.01, u1555jLat - 0.01,
+    u1555jLon + 0.01, 6, "day", geoIndex = "geohashing")
+  private val antwerpBox = SnapshotParams(
+    "signup", "count", snapTs, 51.31, 4.31, 51.17, 4.50, 6, "day", geoIndex = "geohashing")
+  private val januaryHistory = HistoryParams(
+    "click", "avg", gh6, 6, resolution = Some("day"), fromMs = Some(from), toMs = to)
+
+  private val oneSplitProbes: Seq[(String, ExploraService => DataFrame)] = Seq(
+    "snapshot geohashing" -> (_.snapshot(smallBox)),
+    "snapshot quadtiling" -> (_.snapshot(antwerpBox.copy(precision = 14, geoIndex = "quadtiling"))),
+    "history" -> (_.history(januaryHistory)),
+    "snapshotFull (local=true)" -> (_.snapshotFull(antwerpBox)),
+    "historyFull (local=true)" -> (_.historyFull(januaryHistory)),
+    "snapshotPolygon" -> (_.snapshotPolygon(
+      Seq((u1555jLat + 0.02, u1555jLon - 0.02), (u1555jLat + 0.02, u1555jLon + 0.02),
+        (u1555jLat - 0.02, u1555jLon)),
+      "signup", "count", snapTs, 6, "day", geoIndex = "geohashing")))
+
+  for ((name, probe) <- oneSplitProbes)
+    test(s"disk-backed view store: a one-split $name probe is one Spark job with no exchange") {
+      val want = probe(svc).collect()
+      probe(disk2).collect() // the first probe of a view also writes it
+      val fresh = probe(disk2)
+      val (rows, jobs) = collectCountingJobs(fresh)
+      assertSameRows(rows, want, name)
+      assert(jobs === 1, s"$name ran $jobs Spark jobs")
+      assert(shufflesOf(fresh).isEmpty, s"$name planned an exchange:\n${fresh.queryExecution.executedPlan}")
+      // the coalesce keeps the partition pruning
+      val scans = scansOf(fresh)
+      assert(scans.size === 1 &&
+        scans.head.metadata.getOrElse("PartitionFilters", "").contains("geo_part"), name)
+    }
+
+  test("one-split probes return data (the equalities above are not vacuous)") {
+    for ((name, probe) <- oneSplitProbes) assert(probe(svc).collect().nonEmpty, name)
+  }
+
+  test("disk-backed view store: a probe spanning several input splits keeps its exchanges") {
+    val df = disk5.snapshot(antwerpBox)
+    val rows = df.collect()
+    val scans = scansOf(df)
+    assert(scans.size === 1 && scans.head.selectedPartitions.partitionCount > 1,
+      "the Antwerp box should select several geo_part partitions at geoPartLen 5")
+    assert(shufflesOf(df).nonEmpty, s"multi-split probe lost its exchanges:\n${df.queryExecution.executedPlan}")
+    val want = svc.snapshot(antwerpBox).collect()
+    assert(want.nonEmpty)
+    assertSameRows(rows, want, "multi-split snapshot")
+  }
+
+  test("disk-backed quadtiling store: geo_part is a string, so leading-zero coarse covers keep their partitions") {
+    // quadkeys of the north-west quadrant start with 0; their all-digit
+    // geo_part directories would be inferred as integers ("03201" → 3201)
+    val points = Seq(
+      (40.71, -74.00), (41.88, -87.63), (47.61, -122.33), (19.43, -99.13), // 0…
+      (51.22, 4.40), (-33.87, 151.21)) // 1…, 3…
+    val ts = new java.sql.Timestamp(snapTs)
+    import spark.implicits._
+    val readings = points.zipWithIndex.map { case ((lat, lon), i) => (lat, lon, ts, i + 1.0) }
+      .toDF("lat", "lon", "ts", "value")
+      .select(
+        lit("signup").as("metric"), col("ts"), col("value"),
+        GeoFunctions.geohash_encode(col("lat"), col("lon"), 12).as("gh12"),
+        GeoFunctions.quadkey(col("lat"), col("lon"), 14).as("qk14"))
+      .cache()
+    val world = SnapshotParams(
+      "signup", "count", snapTs, 80.0, -180.0, -60.0, 180.0, 14, "day", geoIndex = "quadtiling")
+    val cover = graft.geo.QuadKey.coverPrefixes(world.north, world.west, world.south, world.east, 14)
+    assert(cover.forall(_.length < 5) && cover.exists(_.startsWith("0")),
+      s"the box must coarsen below zoom 5 with leading-zero prefixes: ${cover.take(8)}")
+
+    val disk = new ExploraService(readings, viewStore = Some(tempDir("graft-vs-qk")), geoPartLen = 5)
+    val probe = disk.snapshot(world)
+    val rows = probe.collect()
+    val want = new ExploraService(readings).snapshot(world).collect()
+    assert(want.length === points.size)
+    assertSameRows(rows, want, "leading-zero quadtiling cover")
+    val partType = scansOf(probe).head.relation.partitionSchema("geo_part").dataType
+    assert(partType === StringType)
   }
 
   test("invalid parameters are rejected before any Spark work") {

@@ -24,14 +24,19 @@ class HttpFacadeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = httpServer.stop()
 
-  private def get(pathAndQuery: String): (Int, JsonNode) = {
-    val conn = URI.create(base + pathAndQuery).toURL
+  private def getRaw(baseUrl: String, pathAndQuery: String): (Int, String) = {
+    val conn = URI.create(baseUrl + pathAndQuery).toURL
       .openConnection().asInstanceOf[HttpURLConnection]
     conn.setRequestMethod("GET")
     val code = conn.getResponseCode
     val stream = if (code >= 400) conn.getErrorStream else conn.getInputStream
     val body = new String(stream.readAllBytes(), StandardCharsets.UTF_8)
     conn.disconnect()
+    (code, body)
+  }
+
+  private def get(pathAndQuery: String): (Int, JsonNode) = {
+    val (code, body) = getRaw(base, pathAndQuery)
     (code, mapper.readTree(body))
   }
 
@@ -181,6 +186,48 @@ class HttpFacadeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(json.get("errorCode").asInt === 404)
   }
 
+  test("the server turns Nagle off: a 404 round trip is not held for the client's delayed ACK") {
+    val request = java.net.http.HttpRequest.newBuilder(URI.create(s"$base/api/airquality/click/nope"))
+      .GET().build()
+    assert(System.getProperty("sun.net.httpserver.nodelay") === "true")
+    // one kept-alive connection, as a real client holds it: a fresh
+    // connection starts in quick-ACK mode and would not show the stall
+    val client = java.net.http.HttpClient.newBuilder()
+      .version(java.net.http.HttpClient.Version.HTTP_1_1).build()
+    val ms = (1 to 20).map { _ =>
+      val t0 = System.nanoTime()
+      val code = client.send(request, java.net.http.HttpResponse.BodyHandlers.ofString()).statusCode
+      assert(code === 404)
+      (System.nanoTime() - t0) / 1e6
+    }.sorted
+    val median = (ms(9) + ms(10)) / 2
+    info(f"404 round trip: median $median%.1f ms of 20")
+    // the JDK server sends headers and body separately; with Nagle on,
+    // the body waits for the client's delayed ACK (~40 ms on Linux)
+    assert(median < 20.0, f"404 round trip median $median%.1f ms: a delayed-ACK stall")
+  }
+
+  test("500: the body is a fixed message, never the exception's text") {
+    // a view store "directory" that is a file: building a view fails
+    val notADir = java.nio.file.Files.createTempFile("graft-store", ".file").toString
+    val broken = new ExploraService(SensorGrid.readings(spark, Sf0001), viewStore = Some(notADir))
+    val params = SnapshotParams(
+      "signup", "avg", snapTsMs, 51.31, 4.31, 51.17, 4.50, 6, "day", geoIndex = "geohashing")
+    val detail = String.valueOf(intercept[Exception](broken.snapshot(params).collect()).getMessage)
+    val server = new ExploraHttpServer(broken)
+    val brokenBase = s"http://127.0.0.1:${server.start()}"
+    try {
+      val (code, body) = getRaw(brokenBase,
+        s"/api/airquality/signup/aggregate/avg/snapshot?ts=$snapTsMs" +
+          "&res=day&gh_precision=6&bbox=51.31,4.31,51.17,4.50")
+      assert(code === 500)
+      val json = mapper.readTree(body)
+      assert(json.get("errorCode").asInt === 500)
+      assert(json.get("errorMessage").asText === ExploraHttpServer.InternalErrorText)
+      assert(!body.contains(detail) && !body.contains(notADir), s"500 body leaks: $body")
+    } finally server.stop()
+  }
+
   test("concurrent serving: 200 GETs at concurrency 10 return one consistent envelope (sim_api_load.sh shape)") {
     // the reference's load protocol (sim_api_load.sh:1-5): 200 identical
     // snapshot GETs fanned out 10-wide against ONE server. Every
@@ -227,13 +274,7 @@ class HttpFacadeSpec extends AnyFunSuite with BeforeAndAfterAll {
     val baseDisk = s"http://127.0.0.1:${serverDisk.start()}"
     try {
       def getDisk(pathAndQuery: String): (Int, JsonNode) = {
-        val conn = URI.create(baseDisk + pathAndQuery).toURL
-          .openConnection().asInstanceOf[HttpURLConnection]
-        conn.setRequestMethod("GET")
-        val code = conn.getResponseCode
-        val stream = if (code >= 400) conn.getErrorStream else conn.getInputStream
-        val body = new String(stream.readAllBytes(), StandardCharsets.UTF_8)
-        conn.disconnect()
+        val (code, body) = getRaw(baseDisk, pathAndQuery)
         (code, mapper.readTree(body))
       }
       val path =

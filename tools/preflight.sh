@@ -5,7 +5,9 @@
 # validation ran all round).
 #
 #   tools/preflight.sh          # compile main + tests + entry-count pin
-#   tools/preflight.sh --full   # + graft.Verify at sf0.01 replayed in DuckDB
+#   tools/preflight.sh --full   # + graft.Verify at sf0.01 replayed in DuckDB,
+#                               #   + a short serve benchmark run, which must
+#                               #   answer every GET correctly
 #   tools/preflight.sh --anchor # + DuckDB anchor vs the 2x bar (needs a
 #                               #   fresh sf0.1 oracle dump + Spark bench;
 #                               #   see ANCHOR_* env overrides below)
@@ -53,6 +55,17 @@ fi
 
 if [[ "${1:-}" == "--full" ]]; then
   python3 tools/check_local.py /root/testdata/sf0.01 /tmp/verify_out
+  # the serving path against the benchmark's independent reference: a
+  # serving change cannot close a round with a wrong or failed GET
+  serve_line=$(python3 perfbench/run.py --workload serve --seed 1 --seconds 4 --trace 0 | tail -1)
+  python3 - "$serve_line" <<'EOF'
+import json, sys
+r = json.loads(sys.argv[1])
+if r.get("correct") is not True or r.get("failed") != 0:
+    print(f"preflight FAIL: serve benchmark correct={r.get('correct')} failed={r.get('failed')}")
+    sys.exit(1)
+print(f"serve benchmark OK: {r.get('attempted')} GETs, all correct")
+EOF
 fi
 
 # --anchor: the 2x acceptance bar as a one-command check (VERDICT r12
