@@ -1824,7 +1824,8 @@ object SparkEntry {
       val path = java.nio.file.Files
         .createTempDirectory("graft_cm_stream").toString + "/counters"
       graft.streaming.StreamingViews.runCmCountersAvailableNow(s, d, path)
-      CorpusSignals.cmCertifyAgainst(s.read.parquet(path), Tables.load(s, d, "documents"))
+      CorpusSignals.cmCertifyAgainst(
+        graft.streaming.StreamingViews.readLog(s, path), Tables.load(s, d, "documents"))
     }),
     // ---- deterministic HyperLogLog (Cardinality): the OPEN mergeable
     //      distinct-count sketch — md5-derived registers both engines
@@ -1877,7 +1878,7 @@ object SparkEntry {
         .createTempDirectory("graft_bloom_stream").toString + "/bits"
       graft.streaming.StreamingViews.runBloomBitsAvailableNow(s, d, path)
       Membership.bloomCertifyFromLog(
-        s.read.parquet(path),
+        graft.streaming.StreamingViews.readLog(s, path),
         Membership.evalFixture(Tables.load(s, d, "documents")))
     }),
     // the sketch DEPLOYED at ingest: per-micro-batch register partials
@@ -1889,7 +1890,9 @@ object SparkEntry {
         .createTempDirectory("graft_hll_stream").toString + "/registers"
       graft.streaming.StreamingViews.runHllRegistersAvailableNow(s, d, path)
       Cardinality.hllServeFromLog(
-        s.read.parquet(path), Tables.load(s, d, "lineitem"), col("l_orderkey"))
+        graft.streaming.StreamingViews.readLog(s, path),
+        Tables.load(s, d, "lineitem"),
+        col("l_orderkey"))
     }),
     // ---- mergeable quantile sketch (QuantileSketch): order statistics
     //      join the open sketch family (CM=frequency, HLL=cardinality)
@@ -1907,7 +1910,8 @@ object SparkEntry {
         .createTempDirectory("graft_qsk_stream").toString + "/counts"
       graft.streaming.StreamingViews.runQuantileCountsAvailableNow(s, d, path)
       QuantileSketch.serveQuantiles(
-        s.read.parquet(path).groupBy(col("bin")).agg(sum(col("cnt")).as("cnt")),
+        graft.streaming.StreamingViews.readLog(s, path)
+          .groupBy(col("bin")).agg(sum(col("cnt")).as("cnt")),
         Tables.load(s, d, "events"),
         "value")
     }),
@@ -1926,7 +1930,7 @@ object SparkEntry {
       val path = java.nio.file.Files
         .createTempDirectory("graft_psi_stream").toString + "/cells"
       graft.streaming.StreamingViews.runPsiCellsAvailableNow(s, d, path)
-      graft.operators.Drift.psiFromCellCounts(s, s.read.parquet(path))
+      graft.operators.Drift.psiFromCellCounts(s, graft.streaming.StreamingViews.readLog(s, path))
     }),
     // decontamination at 100 TB: the small eval split's distinct grams
     // fold into Spark's own BloomFilterAggregate, shipped as a foldable
@@ -2554,7 +2558,7 @@ object SparkEntry {
       val path = java.nio.file.Files
         .createTempDirectory("graft_imgsig_stream").toString + "/sigs"
       graft.streaming.StreamingViews.runImageSigsAvailableNow(s, d, path)
-      ImageHash.dedupSurvivors(s.read.parquet(path))
+      ImageHash.dedupSurvivors(graft.streaming.StreamingViews.readLog(s, path))
     }),
     // REAL lossy decode: synthesize baseline grayscale JPEGs (ImageIO
     // writer, quality 1.0), decode them back through the full JPEG

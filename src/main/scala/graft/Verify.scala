@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,28 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      // fork-free local chmod — graft.hadoop.NioLocalFileSystem note
-      .config(
-        graft.hadoop.NioLocalFileSystem.SparkConfKey,
-        graft.hadoop.NioLocalFileSystem.className)
-      // ...and its FileContext twin: the streaming checkpoint layer
-      // (offset/commit logs, state-store deltas) binds file:// through
-      // fs.AbstractFileSystem.file.impl, a separate hierarchy that
-      // still forked per state file (NioLocalFileSystem scaladoc)
-      .config(
-        graft.hadoop.NioLocalFileSystem.SparkAbstractConfKey,
-        graft.hadoop.NioLocalFileSystem.abstractClassName)
-      // driver-side listing for ≤1024-dir local stores (Bench note)
-      .config(
-        "spark.sql.sources.parallelPartitionDiscovery.threshold",
-        sys.env.getOrElse("SPARK_GRAFT_LIST_THRESHOLD", "1024"))
-      .getOrCreate()
+    val spark = GraftSession.local(cpus, cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=a,b,c restricts the dump for local spot-checks of

@@ -42,9 +42,11 @@ object Drift {
 
   /** The ADDITIVE monitoring state: per-(dim, bucket) reference/current
     * counts. Additivity is the streaming contract — per-micro-batch
-    * cell frames APPEND to a counter log and merge by summation, so
-    * replay boundaries can never lose or double mass (the Count-Min
-    * ingest pattern), and stream == batch holds exactly.
+    * cell frames go to an epoch-keyed counter log
+    * ([[graft.streaming.StreamingViews.appendLog]]) and merge by
+    * summation, so a replayed batch replaces its own cells instead of
+    * doubling them (the Count-Min ingest pattern), and stream == batch
+    * holds exactly.
     */
   def psiCells(emb: DataFrame): DataFrame =
     emb

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: synthesize an N× scale fixture from an existing SF dir, for
@@ -74,25 +74,7 @@ object ScaleUp {
       s"factor=$factor out of [1, 1000]")
     val perms = buildPerms(factor)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      // same local-FS repairs as Bench/Verify (ADVICE r15): fork-free
-      // chmod on both FS hierarchies + driver-side store listing, so
-      // scale-up runs don't pay the per-file fork the suite eliminated
-      .config(
-        graft.hadoop.NioLocalFileSystem.SparkConfKey,
-        graft.hadoop.NioLocalFileSystem.className)
-      .config(
-        graft.hadoop.NioLocalFileSystem.SparkAbstractConfKey,
-        graft.hadoop.NioLocalFileSystem.abstractClassName)
-      .config(
-        "spark.sql.sources.parallelPartitionDiscovery.threshold",
-        sys.env.getOrElse("SPARK_GRAFT_LIST_THRESHOLD", "1024"))
-      .getOrCreate()
+    val spark = graft.GraftSession.local(cpus, cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def stride(df: DataFrame, key: String): Long =

@@ -144,7 +144,9 @@ class CardinalitySpec extends AnyFunSuite {
     graft.streaming.StreamingViews.runHllRegistersAvailableNow(spark, Sf0001, path)
     val served = Cardinality
       .hllServeFromLog(
-        spark.read.parquet(path), Tables.load(spark, Sf0001, "lineitem"), col("l_orderkey"))
+        graft.streaming.StreamingViews.readLog(spark, path),
+        Tables.load(spark, Sf0001, "lineitem"),
+        col("l_orderkey"))
       .collect().head
     val batch = Cardinality
       .hllCertify(Tables.load(spark, Sf0001, "lineitem"), col("l_orderkey"))

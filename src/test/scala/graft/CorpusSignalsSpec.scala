@@ -361,13 +361,14 @@ class CorpusSignalsSpec extends AnyFunSuite {
     // the log holds one partial frame per batch; merged it IS the batch
     // sketch, and the certificate built from it matches exactly
     import org.apache.spark.sql.functions.{col, sum => fsum}
-    val merged = spark.read.parquet(path)
+    val merged = graft.streaming.StreamingViews.readLog(spark, path)
       .groupBy(col("i"), col("bucket")).agg(fsum(col("c")).as("c"))
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
     val batch = CorpusSignals.cmCounters(d)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
     assert(merged === batch, "merged streamed partials != batch sketch")
-    val streamed = CorpusSignals.cmCertifyAgainst(spark.read.parquet(path), d).collect().toSeq
+    val streamed = CorpusSignals.cmCertifyAgainst(
+      graft.streaming.StreamingViews.readLog(spark, path), d).collect().toSeq
     assert(streamed === CorpusSignals.heavyHittersCm(d).collect().toSeq)
   }
 }

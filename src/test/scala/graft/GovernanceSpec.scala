@@ -83,7 +83,7 @@ class GovernanceSpec extends AnyFunSuite {
     graft.streaming.StreamingViews.runPsiCellsAvailableNow(
       spark, flat, cells, maxFilesPerTrigger = Some(1))
     // the log is fragmented (multiple partial rows per cell)...
-    val log = spark.read.parquet(cells)
+    val log = graft.streaming.StreamingViews.readLog(spark, cells)
     val merged = log.groupBy("dim", "bucket").count()
     assert(log.count() > merged.count(), "expected fragmented per-batch partials")
     // ...but serving merges to EXACTLY the batch report

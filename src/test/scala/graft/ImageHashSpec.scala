@@ -111,7 +111,7 @@ class ImageHashSpec extends AnyFunSuite {
     val path = java.nio.file.Files
       .createTempDirectory("graft_imgsig_spec").toString + "/sigs"
     graft.streaming.StreamingViews.runImageSigsAvailableNow(spark, Sf0001, path)
-    val served = ImageHash.dedupSurvivors(spark.read.parquet(path))
+    val served = ImageHash.dedupSurvivors(graft.streaming.StreamingViews.readLog(spark, path))
       .collect().map(_.toSeq)
     val batch = ImageHash.dedupSurvivors(hashes()).collect().map(_.toSeq)
     assert(served.toSeq === batch.toSeq)

@@ -83,7 +83,8 @@ class MembershipSpec extends AnyFunSuite {
     graft.streaming.StreamingViews.runBloomBitsAvailableNow(spark, Sf0001, path)
     val docs = Tables.load(spark, Sf0001, "documents")
     val served = Membership
-      .bloomCertifyFromLog(spark.read.parquet(path), Membership.evalFixture(docs))
+      .bloomCertifyFromLog(
+        graft.streaming.StreamingViews.readLog(spark, path), Membership.evalFixture(docs))
       .collect().head
     val batch = Membership
       .bloomCertify(docs, col("text"), Membership.evalFixture(docs))

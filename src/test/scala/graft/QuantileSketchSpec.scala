@@ -79,7 +79,7 @@ class QuantileSketchSpec extends AnyFunSuite {
     graft.streaming.StreamingViews.runQuantileCountsAvailableNow(spark, Sf0001, path)
     val ev = Tables.load(spark, Sf0001, "events")
     val served = QuantileSketch.serveQuantiles(
-      spark.read.parquet(path).groupBy(col("bin")).agg(sum(col("cnt")).as("cnt")),
+      graft.streaming.StreamingViews.readLog(spark, path).groupBy(col("bin")).agg(sum(col("cnt")).as("cnt")),
       ev, "value").collect().map(_.toSeq)
     val batch = QuantileSketch.quantileCertify(ev).collect().map(_.toSeq)
     assert(served.toSeq === batch.toSeq)

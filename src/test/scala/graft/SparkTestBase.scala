@@ -5,29 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for all Spark specs (JVM-forked by sbt). */
 object SparkTestBase {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // fork-free local chmod — graft.hadoop.NioLocalFileSystem note
-      .config(
-        graft.hadoop.NioLocalFileSystem.SparkConfKey,
-        graft.hadoop.NioLocalFileSystem.className)
-      // ...and its FileContext twin: the streaming checkpoint layer
-      // (offset/commit logs, state-store deltas) binds file:// through
-      // fs.AbstractFileSystem.file.impl, a separate hierarchy that
-      // still forked per state file (NioLocalFileSystem scaladoc)
-      .config(
-        graft.hadoop.NioLocalFileSystem.SparkAbstractConfKey,
-        graft.hadoop.NioLocalFileSystem.abstractClassName)
-      // driver-side listing for ≤1024-dir local stores (Bench note)
-      .config(
-        "spark.sql.sources.parallelPartitionDiscovery.threshold",
-        sys.env.getOrElse("SPARK_GRAFT_LIST_THRESHOLD", "1024"))
-      .getOrCreate()
+    val s = GraftSession.local("4", "4").appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }

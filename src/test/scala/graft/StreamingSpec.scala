@@ -159,49 +159,72 @@ class StreamingSpec extends AnyFunSuite {
     assert(pruned.count() === batch.filter(col("metric") === "click").count())
   }
 
-  test("time-partitioned upsert: a batch touches only its own (metric, day) partitions") {
-    // The 100 TB read-amplification bound: with (metric, ts_part)
-    // partitions, a batch of CURRENT rows must leave every older day's
-    // files byte-identical — per-batch cost is O(admitted partitions),
-    // not O(table age). (In the streaming path the watermark is what
-    // keeps scattered late rows from widening the admitted set —
-    // watermark-drop is asserted separately above.)
-    val tmp = Files.createTempDirectory("graft-bounded").toFile.getAbsolutePath
-    val out = s"$tmp/out"
-    def mkBatch(metric: String, days: Seq[Int], geo: String) = {
-      import SparkTestBase.spark.implicits._
-      days.map(d => (metric, geo, java.sql.Timestamp.valueOf(f"2024-01-$d%02d 00:00:00"), 1L, 1.0, 1.0))
-        .toDF("metric", "geo", "ts", "cnt", "sum_val", "avg_val")
-        .withColumn("ts_part", to_date(col("ts")))
+  // Both MERGE steps share one body; each must leave untouched
+  // partitions byte-identical. KEYED replaces a stored row with the
+  // batch row of the same key; ADDITIVE sums a batch partial into the
+  // stored cell. (geo -> cnt) on a touched day after the second batch,
+  // which re-sends the seed's geo and adds a new one:
+  private val keyedUpsert: (org.apache.spark.sql.DataFrame, String) => Unit =
+    (b, out) => StreamingViews.upsertKeyed(
+      b, out, Seq("metric", "geo", "ts"), Seq("metric", "ts_part"))
+  private val additiveUpsert: (org.apache.spark.sql.DataFrame, String) => Unit =
+    (b, out) => StreamingViews.upsertAdditive(
+      b.drop("avg_val"), out,
+      keys = Seq("metric", "geo", "ts", "ts_part"),
+      partitionCols = Seq("metric", "ts_part"),
+      sumCols = Seq("cnt", "sum_val"))
+  Seq(
+    ("", keyedUpsert, Map("u1555j" -> 1L, "u1555k" -> 1L)),
+    (" (additive merge: overlapping cells summed)", additiveUpsert,
+      Map("u1555j" -> 2L, "u1555k" -> 1L))
+  ).foreach { case (suffix, upsertInto, touchedDay) =>
+    test(s"time-partitioned upsert: a batch touches only its own (metric, day) partitions$suffix") {
+      // The 100 TB read-amplification bound: with (metric, ts_part)
+      // partitions, a batch of CURRENT rows must leave every older day's
+      // files byte-identical — per-batch cost is O(admitted partitions),
+      // not O(table age). (In the streaming path the watermark is what
+      // keeps scattered late rows from widening the admitted set —
+      // watermark-drop is asserted separately above.)
+      val tmp = Files.createTempDirectory("graft-bounded").toFile.getAbsolutePath
+      val out = s"$tmp/out"
+      def mkBatch(metric: String, days: Seq[Int], geo: String) = {
+        import SparkTestBase.spark.implicits._
+        days.map(d => (metric, geo, java.sql.Timestamp.valueOf(f"2024-01-$d%02d 00:00:00"), 1L, 1.0, 1.0))
+          .toDF("metric", "geo", "ts", "cnt", "sum_val", "avg_val")
+          .withColumn("ts_part", to_date(col("ts")))
+      }
+      // seed: 2 metrics × 10 days
+      upsertInto(mkBatch("click", 1 to 10, "u1555j").unionAll(mkBatch("view", 1 to 10, "u1555j")), out)
+      def listing(): Map[String, Seq[(String, Long, Long)]] = {
+        def walk(f: java.io.File): Seq[java.io.File] =
+          if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+        walk(new java.io.File(out)).filter(_.getName.endsWith(".parquet"))
+          .groupBy(_.getParentFile.toString.stripPrefix(out))
+          .map { case (k, fs) => k -> fs.map(f => (f.getName, f.length, f.lastModified)).sortBy(_._1) }
+      }
+      val before = listing()
+      assert(before.size === 20)
+      // batch: one metric, the two most recent days only — the seed's
+      // geo again plus a new one
+      upsertInto(
+        mkBatch("click", Seq(9, 10), "u1555k").unionAll(mkBatch("click", Seq(9, 10), "u1555j")),
+        out)
+      val after = listing()
+      val touched = Seq("/metric=click/ts_part=2024-01-09", "/metric=click/ts_part=2024-01-10")
+      before.keys.filterNot(touched.contains).foreach { k =>
+        assert(after(k) === before(k), s"untouched partition rewritten: $k")
+      }
+      touched.foreach(k => assert(after(k) !== before(k), s"touched partition not rewritten: $k"))
+      // merge semantics held on the touched days: both geos present,
+      // the re-sent cell replaced (keyed) or summed (additive)
+      Seq("2024-01-09", "2024-01-10").foreach { day =>
+        val cells = spark.read.parquet(out)
+          .filter(col("metric") === "click" && col("ts_part") === day)
+          .select(col("geo"), col("cnt"))
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        assert(cells === touchedDay, s"merged cells on $day")
+      }
     }
-    // seed: 2 metrics × 10 days
-    StreamingViews.upsertKeyed(
-      mkBatch("click", 1 to 10, "u1555j").unionAll(mkBatch("view", 1 to 10, "u1555j")),
-      out, Seq("metric", "geo", "ts"), Seq("metric", "ts_part"))
-    def listing(): Map[String, Seq[(String, Long, Long)]] = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-      walk(new java.io.File(out)).filter(_.getName.endsWith(".parquet"))
-        .groupBy(_.getParentFile.toString.stripPrefix(out))
-        .map { case (k, fs) => k -> fs.map(f => (f.getName, f.length, f.lastModified)).sortBy(_._1) }
-    }
-    val before = listing()
-    assert(before.size === 20)
-    // batch: one metric, the two most recent days only
-    StreamingViews.upsertKeyed(
-      mkBatch("click", Seq(9, 10), "u1555k"),
-      out, Seq("metric", "geo", "ts"), Seq("metric", "ts_part"))
-    val after = listing()
-    val touched = Seq("/metric=click/ts_part=2024-01-09", "/metric=click/ts_part=2024-01-10")
-    before.keys.filterNot(touched.contains).foreach { k =>
-      assert(after(k) === before(k), s"untouched partition rewritten: $k")
-    }
-    touched.foreach(k => assert(after(k) !== before(k), s"touched partition not rewritten: $k"))
-    // merge semantics held: both geos present on the touched days
-    assert(
-      spark.read.parquet(out)
-        .filter(col("metric") === "click" && col("ts_part") === "2024-01-09")
-        .count() === 2)
   }
 
   test("compactViews: bloated partitions collapse to one file each, data and layout intact") {
@@ -380,6 +403,52 @@ class StreamingSpec extends AnyFunSuite {
     assert(nView + deadRows.size === rows.size, s"rows lost or double-counted: $nView + ${deadRows.size}")
     val sumView = view.agg(sum(col("sum_value"))).head.getDouble(0)
     assert(math.abs(sumView - 2.5 * nView) < 1e-6, s"admitted sum drifted: $sumView")
+  }
+
+  test("append logs are replay-safe: a batch re-run after a crash before its commit is counted once") {
+    // Crash window of an append-log sink: the last micro-batch's output
+    // is written but its commit is not. Deleting commits/<n> leaves the
+    // checkpoint in exactly that state; the restart on the same
+    // checkpoint replays batch n (same offsets, same epoch id), and the
+    // merged log must still equal the batch sketch — for the three
+    // ADDITIVE logs, where a second copy of batch n would double mass.
+    import org.apache.spark.sql.functions.{sum => fsum}
+    val src = Files.createTempDirectory("graft-replay-src").toString
+    Seq("documents", "events", "embeddings").foreach { t =>
+      graft.sources.Tables.load(spark, Sf0001, t)
+        .repartition(3) // 3 files -> 3 micro-batches at maxFilesPerTrigger=1
+        .write.parquet(s"$src/$t.parquet")
+    }
+    type Partials = org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame
+    // (log, source table, per-batch partials, merge keys, summed columns)
+    Seq[(String, String, Partials, Seq[String], Seq[String])](
+      ("Count-Min counters", "documents",
+        graft.operators.CorpusSignals.cmCounters, Seq("i", "bucket"), Seq("c")),
+      ("quantile bin counts", "events",
+        graft.operators.QuantileSketch.binCounts(_, col("value")), Seq("bin"), Seq("cnt")),
+      ("PSI cells", "embeddings",
+        graft.operators.Drift.psiCells, Seq("dim", "bucket"), Seq("r", "c"))
+    ).foreach { case (what, table, partials, keys, values) =>
+      val tmp = Files.createTempDirectory("graft-replay").toString
+      val (log, ckpt) = (s"$tmp/log", s"$tmp/ckpt")
+      StreamingViews.appendLog(spark, src, table, log, Some(1), ckpt)(partials)
+      val commits = new java.io.File(s"$ckpt/commits")
+      val last = commits.listFiles().filter(_.getName.forall(_.isDigit)).maxBy(_.getName.toLong)
+      assert(last.getName.toLong >= 2, s"$what: expected >= 3 micro-batches")
+      // the crash: batch n's output is in the log, its commit is not
+      assert(last.delete())
+      new java.io.File(commits, s".${last.getName}.crc").delete()
+      StreamingViews.appendLog(spark, src, table, log, Some(1), ckpt)(partials)
+      assert(last.exists(), s"$what: the restart did not replay batch ${last.getName}")
+      def merged(df: org.apache.spark.sql.DataFrame) = df
+        .groupBy(keys.map(col): _*)
+        .agg(fsum(col(values.head)).as(values.head), values.tail.map(v => fsum(col(v)).as(v)): _*)
+        .collect().map(_.toSeq).toSet
+      assert(
+        merged(StreamingViews.readLog(spark, log)) ===
+          merged(partials(graft.sources.Tables.load(spark, src, table))),
+        s"$what: replayed batch counted twice")
+    }
   }
 
   test("streaming PQ store: multi-batch upserts build exactly the store a batch write would") {

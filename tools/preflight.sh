@@ -6,8 +6,8 @@
 #
 #   tools/preflight.sh          # compile main + tests + entry-count pin
 #   tools/preflight.sh --full   # + graft.Verify at sf0.01 replayed in DuckDB,
-#                               #   + a short serve benchmark run, which must
-#                               #   answer every GET correctly
+#                               #   + short serve and maintain benchmark runs,
+#                               #   which must answer every operation correctly
 #   tools/preflight.sh --anchor # + DuckDB anchor vs the 2x bar (needs a
 #                               #   fresh sf0.1 oracle dump + Spark bench;
 #                               #   see ANCHOR_* env overrides below)
@@ -38,7 +38,9 @@ grep -q "^Entry count: $N$" SURVEY.md || {
   grep -n "^Entry count:" SURVEY.md || echo "  (no 'Entry count:' line found)"
   exit 1
 }
-latest_checklocal=$(ls -t CHECKLOCAL_*.json 2>/dev/null | head -1 || true)
+# newest = highest round number: a fresh checkout gives every artifact
+# the same mtime, so `ls -t` picked the alphabetically first (r10)
+latest_checklocal=$(ls CHECKLOCAL_*.json 2>/dev/null | sort -V | tail -1 || true)
 if [[ -n "$latest_checklocal" ]]; then
   python3 - "$latest_checklocal" "$N" <<'EOF'
 import json, sys
@@ -55,17 +57,21 @@ fi
 
 if [[ "${1:-}" == "--full" ]]; then
   python3 tools/check_local.py /root/testdata/sf0.01 /tmp/verify_out
-  # the serving path against the benchmark's independent reference: a
-  # serving change cannot close a round with a wrong or failed GET
-  serve_line=$(python3 perfbench/run.py --workload serve --seed 1 --seconds 4 --trace 0 | tail -1)
-  python3 - "$serve_line" <<'EOF'
+  # the serving path and both write paths (streaming view builder,
+  # index upsert) against the benchmark's independent reference: a
+  # serving or streaming-sink change cannot close a round with a wrong
+  # view or a failed operation
+  for workload in serve maintain; do
+    line=$(python3 perfbench/run.py --workload "$workload" --seed 1 --seconds 4 --trace 0 | tail -1)
+    python3 - "$workload" "$line" <<'EOF'
 import json, sys
-r = json.loads(sys.argv[1])
+w, r = sys.argv[1], json.loads(sys.argv[2])
 if r.get("correct") is not True or r.get("failed") != 0:
-    print(f"preflight FAIL: serve benchmark correct={r.get('correct')} failed={r.get('failed')}")
+    print(f"preflight FAIL: {w} benchmark correct={r.get('correct')} failed={r.get('failed')}")
     sys.exit(1)
-print(f"serve benchmark OK: {r.get('attempted')} GETs, all correct")
+print(f"{w} benchmark OK: {r.get('attempted')} operations, all correct")
 EOF
+  done
 fi
 
 # --anchor: the 2x acceptance bar as a one-command check (VERDICT r12
