@@ -292,17 +292,9 @@ object SparkEntry {
       LanguageModel.vocabFrom(docTokensCached(s, dir))
     }
 
-  /** 16-permutation md5 MinHash signature, shared by dedup_minhash_sig
-    * (first 8 columns) and dedup_minhash_pairs (all 16, banded).
-    */
-  private def mdSig16(s: SparkSession, dir: String): DataFrame =
-    cachedView(s, dir, "md5sig", "16") {
-      Dedup.md5Signature(docShingles(s, dir), 16)
-    }
-
-  /** 16-permutation xxhash64 MinHash signature (the production hash
-    * family) — cached so the banded candidate self-join reads it
-    * instead of re-deriving the 16 min-hash aggregations per side.
+  /** 16-permutation xxhash64 MinHash signature — cached so the banded
+    * candidate self-join reads it instead of re-deriving the 16 min-hash
+    * aggregations per side.
     */
   private def xxSig16(s: SparkSession, dir: String): DataFrame =
     cachedView(s, dir, "xxsig", "16") {
@@ -585,15 +577,7 @@ object SparkEntry {
     weightsFrom(clfHashedTable(s, dir), TextClassifier.HashedFeatureNames)
 
   /** Maximal cross-document duplicated spans — the gram explode + window
-    * is the dominant cost, shared by dup_spans and dup_span_stats.
-    */
-  private def spanFrame(s: SparkSession, dir: String): DataFrame =
-    cachedView(s, dir, "spans", SpanDedup.GramLen.toString) {
-      SpanDedup.spanFrame(Tables.load(s, dir, "documents"))
-    }
-
-  /** xxhash64 production twin of [[spanFrame]] (long gram digests —
-    * ¼ the shuffle width), shared by dup_spans_xx and dup_span_stats_xx.
+    * is the dominant cost, shared by dup_spans_xx and dup_span_stats_xx.
     */
   private def spanFrameXx(s: SparkSession, dir: String): DataFrame =
     cachedView(s, dir, "spans_xx", SpanDedup.GramLen.toString) {
@@ -610,29 +594,17 @@ object SparkEntry {
     }
 
   /** Winnowing fingerprint frame — the gram explode + selection window
-    * is the dominant cost, shared by winnow_stats and winnow_pairs.
+    * is the dominant cost, shared by winnow_stats_xx and winnow_pairs_xx.
     */
-  private def winnowFp(s: SparkSession, dir: String): DataFrame =
-    cachedView(s, dir, "winnow_fp", s"${Winnowing.GramLen}x${Winnowing.WindowGrams}") {
-      Winnowing.fingerprints(Tables.load(s, dir, "documents"))
+  private def winnowFpXx(s: SparkSession, dir: String): DataFrame =
+    cachedView(s, dir, "winnow_fp_xx", s"${Winnowing.GramLen}x${Winnowing.WindowGrams}") {
+      Winnowing.fingerprintsXx(Tables.load(s, dir, "documents"))
     }
 
   /** Doc-level posting frame for the pair join — cached because the
     * self-join reads it twice (an unpersisted derivation would run the
     * postings groupBy + df window once per join side).
     */
-  private def winnowPost(s: SparkSession, dir: String): DataFrame =
-    cachedView(s, dir, "winnow_post", "uncapped") {
-      Winnowing.postings(winnowFp(s, dir))
-    }
-
-  /** xxhash64 production twin of [[winnowFp]] (long fingerprints). */
-  private def winnowFpXx(s: SparkSession, dir: String): DataFrame =
-    cachedView(s, dir, "winnow_fp_xx", s"${Winnowing.GramLen}x${Winnowing.WindowGrams}") {
-      Winnowing.fingerprintsXx(Tables.load(s, dir, "documents"))
-    }
-
-  /** xx posting frame for the xx pair self-join. */
   private def winnowPostXx(s: SparkSession, dir: String): DataFrame =
     cachedView(s, dir, "winnow_post_xx", "uncapped") {
       Winnowing.postings(winnowFpXx(s, dir))
@@ -653,8 +625,8 @@ object SparkEntry {
     * assignments) are charged ONCE and visibly — instead of silently
     * charged to whichever consumer query happens to sort first in the
     * run (round-2/3 benches attributed ~30 s of shared
-    * shingle+signature builds to `dedup_clusters`/`dedup_minhash_sig`
-    * purely by iteration order).
+    * shingle+signature builds to whichever dedup entries sorted
+    * first).
     */
   def sharedBuilds(s: SparkSession, dir: String): Seq[(String, () => Any)] =
     Seq(
@@ -669,7 +641,6 @@ object SparkEntry {
       "bigram_counts" -> (() => bigramCountsCached(s, dir)),
       "vocab" -> (() => vocabCached(s, dir)),
       "simhash_sig64" -> (() => simhashSig64(s, dir)),
-      "md5_sig16" -> (() => mdSig16(s, dir)),
       "xx_sig16" -> (() => xxSig16(s, dir)),
       "ngram_pairs" -> (() => ngramPairs(s, dir)),
       "lsh_sig_auto" -> (() => lshSigAuto(s, dir)),
@@ -689,11 +660,8 @@ object SparkEntry {
       "pq_codes_sampled" -> (() => pqEncodedSampled(s, dir)),
       "clf_train" -> (() => clfTable(s, dir)),
       "clf_train_hashed" -> (() => clfHashedTable(s, dir)),
-      "span_frame" -> (() => spanFrame(s, dir)),
       "span_frame_xx" -> (() => spanFrameXx(s, dir)),
       "bpe_merges" -> (() => bpeMergesCached(s, dir)),
-      "winnow_fp" -> (() => winnowFp(s, dir)),
-      "winnow_post" -> (() => winnowPost(s, dir)),
       "winnow_fp_xx" -> (() => winnowFpXx(s, dir)),
       "winnow_post_xx" -> (() => winnowPostXx(s, dir)),
       "ngram_clusters" -> (() => ngramClusters(s, dir)))
@@ -1022,12 +990,6 @@ object SparkEntry {
     "token_top20" -> ((s, d) => TextAnalysis.tokenTopK(Tables.load(s, d, "documents"), 20)),
     // ---- deduplication over documents ----
     "dedup_exact" -> ((s, d) => Dedup.exact(Tables.load(s, d, "documents"))),
-    "dedup_minhash_sig" -> ((s, d) =>
-      // first 8 of the shared 16-permutation signature (same min-aggs)
-      mdSig16(s, d)
-        .select(col("doc_id") +: (0 until 8).map(i => col(s"s$i")): _*)
-        .orderBy(col("doc_id"))),
-    "dedup_simhash16" -> ((s, d) => Dedup.simhash16(Tables.load(s, d, "documents"))),
     // production 64-bit signature (4×16-bit words)
     "dedup_simhash64" -> ((s, d) => simhashSig64(s, d)),
     // Manku WWW'07 Hamming near-dup search: pigeonhole over the four
@@ -1099,13 +1061,10 @@ object SparkEntry {
     // shingle frame as the Jaccard family
     "containment_pairs" -> ((s, d) =>
       Dedup.containmentPairsFrom(docShingles(s, d), 0.8)),
-    // full MinHash-LSH pipeline, md5 family → the ENTIRE pipeline
-    // (signatures, bands, candidate join, exact verify) is oracle-checked
-    "dedup_minhash_pairs" -> ((s, d) =>
-      Dedup.minhashLshPairsMd5From(mdSig16(s, d), docShingles(s, d), 16, 4, 0.5)),
-    // production twin (xxhash64). Oracle: Verify precomputes the expected
-    // pairs with the independent pure-Scala XxHash64Ref pipeline and
-    // emits VALUES literals (oracleSqlFor) — the geo_reindex technique.
+    // full MinHash-LSH pipeline (xxhash64). Oracle: Verify precomputes
+    // the expected pairs with the independent pure-Scala XxHash64Ref
+    // pipeline and emits VALUES literals (oracleSqlFor) — the
+    // geo_reindex technique.
     "dedup_minhash_lsh" -> ((s, d) =>
       Dedup.minhashLshPairsFrom(xxSig16(s, d), docShingles(s, d), 16, 4, 0.5)),
     // ---- similarity search over embeddings ----
@@ -2403,15 +2362,6 @@ object SparkEntry {
     // sequence, the reproducible training order for dataloaders
     "epoch_shuffle" -> ((s, d) =>
       Sampling.epochShuffle(Tables.load(s, d, "documents"))),
-    // span-level exact dedup (Lee et al. arXiv:2107.06499): maximal
-    // cross-document duplicated character spans via distributed gram
-    // matching + gaps-and-islands (the suffix-array replacement)
-    "dup_spans" -> ((s, d) =>
-      spanFrame(s, d).orderBy(col("doc_id"), col("span_start"))),
-    // per-doc duplicated-char audit: interval-union of the span frame
-    // (overlapping islands must not double-count), integer per-mille
-    "dup_span_stats" -> ((s, d) =>
-      SpanDedup.spanStatsFrom(spanFrame(s, d), Tables.load(s, d, "documents"))),
     // hashed-feature linear classifier serving plan: narrow integer
     // fold per doc, exact and order-independent, one final division
     "quality_classify" -> ((s, d) =>
@@ -2802,25 +2752,24 @@ object SparkEntry {
     // survivors re-joined in block order and digested per doc
     "unit_dedup" -> ((s, d) => UnitDedup.dedupUnits(Tables.load(s, d, "documents"))),
     // MOSS winnowing fingerprints (SIGMOD 2003): window-min k-gram
-    // hashes with rightmost tie-break folded into one sortable key;
-    // per-doc fingerprint count + position-ordered digest
-    "winnow_stats" -> ((s, d) => Winnowing.fingerprintStatsFrom(winnowFp(s, d))),
+    // xxhash64 hashes with rightmost tie-break folded into one sortable
+    // key; per-doc fingerprint count + position-sensitive xor checksum.
+    // Oracles for the winnowing and span-dedup entries: pure-Scala
+    // FineDedupRef via oracleSqlFor VALUES — the dedup_minhash_lsh
+    // technique.
+    "winnow_stats_xx" -> ((s, d) => Winnowing.fingerprintStatsXxFrom(winnowFpXx(s, d))),
     // MOSS match step: doc pairs sharing >= MinShared (10) distinct
     // fingerprints — posting self-equi-join on the fingerprint hash,
     // never all-pairs; postings frame session-cached for the self-join
-    "winnow_pairs" -> ((s, d) =>
-      Winnowing.sharedFingerprintPairsFromPost(winnowPost(s, d))),
-    // xxhash64 production twins of the winnowing + span-dedup family:
-    // same selection/span algebra over codegen'd 64-bit hash longs
-    // instead of md5 hex (¼ the shuffle width, no digest+hex cost).
-    // Oracles: pure-Scala FineDedupRef via oracleSqlFor VALUES — the
-    // dedup_minhash_lsh technique; the md5 twins above stay the
-    // DuckDB-replayable anchors.
-    "winnow_stats_xx" -> ((s, d) => Winnowing.fingerprintStatsXxFrom(winnowFpXx(s, d))),
     "winnow_pairs_xx" -> ((s, d) =>
       Winnowing.sharedFingerprintPairsFromPost(winnowPostXx(s, d))),
+    // span-level exact dedup (Lee et al. arXiv:2107.06499): maximal
+    // cross-document duplicated character spans via distributed gram
+    // matching + gaps-and-islands (the suffix-array replacement)
     "dup_spans_xx" -> ((s, d) =>
       spanFrameXx(s, d).orderBy(col("doc_id"), col("span_start"))),
+    // per-doc duplicated-char audit: interval-union of the span frame
+    // (overlapping islands must not double-count), integer per-mille
     "dup_span_stats_xx" -> ((s, d) =>
       SpanDedup.spanStatsFrom(spanFrameXx(s, d), Tables.load(s, d, "documents"))),
     // per-source report card: docs/langs/exact-dup incidence/token
@@ -3214,14 +3163,9 @@ object SparkEntry {
     "mixture_resample" -> Sampling.MixtureResampleSql,
     "sample_k_per_group" -> Sampling.sampleKPerGroupSql(10),
     "epoch_shuffle" -> Sampling.EpochShuffleSql,
-    "dup_spans" -> SpanDedup.duplicatedSpansSql(),
-    "dup_span_stats" -> SpanDedup.spanStatsSql(),
     "doc_fingerprint" -> TextAnalysis.FingerprintSql,
     "token_top20" -> TextAnalysis.tokenTopKSql(20),
     "dedup_exact" -> Dedup.ExactSql,
-    "dedup_minhash_sig" -> Dedup.minhashSignatureSql(3, 8),
-    "dedup_minhash_pairs" -> Dedup.minhashLshPairsMd5Sql(3, 16, 4, 0.5),
-    "dedup_simhash16" -> Dedup.simhash16Sql,
     "dedup_simhash64" -> Dedup.simhash64Sql,
     "dedup_simhash_pairs" -> Dedup.simhashNearDupSql(),
     "dedup_simhash_pairs_w32" -> Dedup.simhashNearDupSql(maxHamming = 1),
@@ -3576,8 +3520,6 @@ object SparkEntry {
     "multimodal_resize_stats" -> Multimodal.bmpResizeStatsSql(2),
     "wav_resample_stats" -> Multimodal.wavResampleStatsSql(3),
     "multimodal_avi_frames" -> Multimodal.aviFrameStatsSql(2),
-    "winnow_stats" -> Winnowing.fingerprintStatsSql(),
-    "winnow_pairs" -> Winnowing.sharedFingerprintPairsSql(),
     "source_report" -> CorpusSignals.SourceReportSql,
     "lang_source_chi2" -> CorpusSignals.LangSourceChi2Sql,
     // semantic_clusters: auto-width — oracle emitted by oracleSqlFor
@@ -4138,7 +4080,7 @@ object SparkEntry {
         out += ("bpe_encode" -> encSql)
       }
     }
-    // xx fine-dedup twins: expected outputs from the pure-Scala
+    // winnowing and span-dedup entries: expected outputs from the pure-Scala
     // FineDedupRef (XXH64 from the public spec, no Spark code), emitted
     // as VALUES literals. One fingerprint/span computation feeds both
     // consumers of its family.

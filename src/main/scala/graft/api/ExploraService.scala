@@ -4,10 +4,10 @@ import java.time.Instant
 
 import graft.geo.{GeoHash, QuadKey}
 import graft.operators.{ExploraQueries, QueryValidation, ViewBuilder}
+import graft.sources.Tables
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.PartitionedFileUtil
 import org.apache.spark.sql.execution.datasources.{
-  FilePartition, HadoopFsRelation, LogicalRelation, PartitionDirectory}
+  HadoopFsRelation, LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.functions._
 
 /** The reference's query-service surface as a library API: the same
@@ -147,23 +147,10 @@ class ExploraService(
         val qs = prefixes.map(_.take(geoPartLen)).distinct
         val selected = parts.filter { case (part, _) => qs.exists(part.startsWith) }
         val pruned = v.df.filter(col("geo_part").isin(selected.keys.toSeq: _*))
-        if (oneSplit(selected.values.toSeq)) pruned.coalesce(1) else pruned
+        if (Tables.splitCount(readings.sparkSession, selected.values.toSeq) <= 1) pruned.coalesce(1)
+        else pruned
       case _ => v.df
     }
-
-  /** Whether a scan of `dirs` is one input split: the split size and
-    * bin-packing FileSourceScanExec applies (parquet is splittable).
-    */
-  private def oneSplit(dirs: Seq[PartitionDirectory]): Boolean = {
-    val spark = readings.sparkSession
-    val maxSplitBytes = FilePartition.maxSplitBytes(spark, dirs)
-    val splits = for {
-      d <- dirs
-      f <- d.files
-      s <- PartitionedFileUtil.splitFiles(f, f.getPath, true, maxSplitBytes, d.values)
-    } yield s
-    FilePartition.getFilePartitions(spark, splits.sortBy(-_.length), maxSplitBytes).size <= 1
-  }
 
   /** GET …/history equivalent (QueryingService.java:38-135). */
   def history(p: HistoryParams): DataFrame = {

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Document deduplication for large-scale training-data pipelines:
@@ -14,10 +14,10 @@ import org.apache.spark.sql.functions._
   *     not O(docs²));
   *   - the exact-verify step touches candidates only.
   *
-  * Hash choice: the oracle-checked variants use md5 (available and
-  * bit-identical in both Spark and DuckDB); the production path uses
-  * xxhash64 (codegen'd, ~10× cheaper) — same pipeline, different hash,
-  * equivalence of the pipeline itself is what CORRECTNESS proves.
+  * Hash choice: one family per operator. MinHash-LSH hashes with
+  * `xxhash64` (codegen'd); its oracle is the pure-Scala [[MinHashRef]]
+  * (VALUES literals). SimHash votes on `md5` bits, which DuckDB replays
+  * verbatim ([[simhash64Sql]]).
   */
 object Dedup {
 
@@ -70,113 +70,6 @@ object Dedup {
   val ExactSql: String =
     "SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text) ORDER BY 1"
 
-  // ---- MinHash (md5 variant, oracle-checkable) -----------------------
-
-  /** k-permutation MinHash signature columns s0..s{k-1} from a
-    * `(doc_id, shingles)` frame: sig_i = min over shingles of
-    * md5(i || '|' || shingle). Lexicographic min of the hex string ==
-    * min of the 128-bit hash, so DuckDB replays it exactly.
-    */
-  def md5Signature(sh: DataFrame, k: Int): DataFrame = {
-    val aggs = (0 until k).map(i => min(md5(concat(lit(s"$i|"), col("s")))).as(s"s$i"))
-    explodeShingles(sh).groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
-  }
-
-  def minhashSignature(docs: DataFrame, n: Int, k: Int): DataFrame =
-    md5Signature(shingleSets(docs, n), k).orderBy(col("doc_id"))
-
-  def minhashSignatureSql(n: Int, k: Int): String = {
-    val mins = (0 until k).map(i => s"min(md5('$i|' || s)) AS s$i").mkString(", ")
-    val grams = (1 to n).map(j => s"t[i+$j]").mkString(", ")
-    s"""WITH toks AS (
-       |  SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS t
-       |  FROM documents),
-       |sh AS (
-       |  SELECT doc_id, list_distinct(list_transform(range(0, len(t) - ${n - 1}),
-       |    i -> concat_ws(' ', $grams))) AS shingles
-       |  FROM toks WHERE len(t) >= $n),
-       |u AS (SELECT doc_id, unnest(shingles) AS s FROM sh)
-       |SELECT doc_id, $mins FROM u GROUP BY doc_id ORDER BY doc_id""".stripMargin
-  }
-
-  /** MinHash-LSH near-dup pairs with the md5 hash family — functionally
-    * the same pipeline as [[minhashLshPairs]] but every step is
-    * DuckDB-replayable, so the WHOLE LSH pipeline (signatures → band
-    * buckets → candidate join → exact verify) is oracle-checked, not
-    * just property-tested. Production uses the xxhash64 twin.
-    */
-  def minhashLshPairsMd5(
-      docs: DataFrame,
-      n: Int,
-      k: Int,
-      bands: Int,
-      threshold: Double): DataFrame = {
-    val sh = shingleSets(docs, n)
-    minhashLshPairsMd5From(md5Signature(sh, k), sh, k, bands, threshold)
-  }
-
-  /** [[minhashLshPairsMd5]] over a precomputed (cached) signature and
-    * shingle frame — bands → bucket equi-join → exact verify only.
-    */
-  def minhashLshPairsMd5From(
-      sig: DataFrame,
-      sh: DataFrame,
-      k: Int,
-      bands: Int,
-      threshold: Double): DataFrame = {
-    require(k % bands == 0, s"k=$k not divisible by bands=$bands")
-    val rows = k / bands
-    val banded = (0 until bands).foldLeft(sig) { (df, b) =>
-      val cols = (b * rows until (b + 1) * rows).map(i => col(s"s$i"))
-      df.withColumn(s"band$b", md5(concat_ws("|", cols: _*)))
-    }
-    val cands = (0 until bands)
-      .map { b =>
-        val a = banded.select(col("doc_id").as("a_id"), col(s"band$b").as("bk"))
-        val bb = banded.select(col("doc_id").as("b_id"), col(s"band$b").as("bk"))
-        a.join(bb, Seq("bk")).filter(col("a_id") < col("b_id")).select(col("a_id"), col("b_id"))
-      }
-      .reduce(_ unionAll _)
-      .distinct()
-    verifyJaccard(sh, cands, threshold)
-  }
-
-  def minhashLshPairsMd5Sql(n: Int, k: Int, bands: Int, threshold: Double): String = {
-    val rows = k / bands
-    val mins = (0 until k).map(i => s"min(md5('$i|' || s)) AS s$i").mkString(", ")
-    val bandCols = (0 until bands)
-      .map { b =>
-        val parts = (b * rows until (b + 1) * rows).map(i => s"s$i").mkString(" || '|' || ")
-        s"md5($parts) AS band$b"
-      }
-      .mkString(", ")
-    val candUnion = (0 until bands)
-      .map(b =>
-        s"SELECT a.doc_id AS a_id, b.doc_id AS b_id FROM banded a JOIN banded b ON a.band$b = b.band$b AND a.doc_id < b.doc_id")
-      .mkString("\n  UNION\n  ")
-    val grams = (1 to n).map(j => s"t[i+$j]").mkString(", ")
-    s"""WITH toks AS (
-       |  SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS t
-       |  FROM documents),
-       |sh AS (
-       |  SELECT doc_id, list_distinct(list_transform(range(0, len(t) - ${n - 1}),
-       |    i -> concat_ws(' ', $grams))) AS shingles
-       |  FROM toks WHERE len(t) >= $n),
-       |u AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
-       |sig AS (SELECT doc_id, $mins FROM u GROUP BY doc_id),
-       |banded AS (SELECT doc_id, $bandCols FROM sig),
-       |cand AS (\n  $candUnion\n),
-       |v AS (
-       |  SELECT c.a_id, c.b_id,
-       |         len(list_intersect(a.shingles, b.shingles)) AS inter,
-       |         len(a.shingles) AS na, len(b.shingles) AS nb
-       |  FROM cand c JOIN sh a ON a.doc_id = c.a_id JOIN sh b ON b.doc_id = c.b_id)
-       |SELECT a_id, b_id,
-       |       round(CAST(inter AS DOUBLE) / (na + nb - inter), 6) AS jac
-       |FROM v WHERE CAST(inter AS DOUBLE) / (na + nb - inter) >= $threshold
-       |ORDER BY a_id, b_id""".stripMargin
-  }
-
   // ---- MinHash + LSH (xxhash64 production path) ----------------------
 
   /** Near-duplicate pairs: k xxhash64 min-hashes per doc, banded into
@@ -194,9 +87,7 @@ object Dedup {
     minhashLshPairsFrom(xxSignature(sh, k), sh, k, bands, threshold)
   }
 
-  /** xxhash64 MinHash signature columns m0..m{k-1} (codegen'd; the
-    * production hash family — ~10× cheaper than md5).
-    */
+  /** xxhash64 MinHash signature columns m0..m{k-1} (codegen'd). */
   def xxSignature(sh: DataFrame, k: Int): DataFrame = {
     val aggs = (0 until k).map(i => min(xxhash64(lit(i), col("s"))).as(s"m$i"))
     explodeShingles(sh).groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
@@ -591,7 +482,7 @@ object Dedup {
        |       CASE WHEN c.doc_id = s.survivor_id THEN 1 ELSE 0 END AS is_survivor
        |FROM c JOIN s USING (canonical_id) ORDER BY 1""".stripMargin
 
-  // ---- SimHash (16-bit, md5-based, oracle-checkable) -----------------
+  // ---- SimHash (64-bit, md5-based, oracle-checkable) -----------------
 
   /** Hex digits of a given nibble whose bit `bitInNibble` (3 = MSB) is
     * set — membership test replaces bit arithmetic so the expression is
@@ -608,48 +499,14 @@ object Dedup {
     s"(CASE WHEN substring(h, ${nibble + 1}, 1) IN ($set) THEN 1 ELSE -1 END)"
   }
 
-  /** SimHash over the doc's DISTINCT tokens: bit b = sign of the summed
-    * per-token contributions; 16 bits packed MSB-first.
-    */
-  def simhash16(docs: DataFrame): DataFrame = {
-    // per-distinct-token md5 dominates and runs BEFORE the first
-    // exchange — fan the scan out so it isn't single-task on the
-    // one-file test corpus
-    val tok = withTokens(graft.sources.Tables.fanOut(docs))
-      .select(col("doc_id"), explode(array_distinct(col("toks"))).as("tk"))
-      .withColumn("h", md5(col("tk")))
-    val sums = (0 until 16).map(b => sum(expr(bitContrib(b))).as(s"c$b"))
-    val packed = (0 until 16)
-      .map(b => s"(CASE WHEN c$b > 0 THEN ${1 << (15 - b)} ELSE 0 END)")
-      .mkString(" + ")
-    tok
-      .groupBy(col("doc_id"))
-      .agg(sums.head, sums.tail: _*)
-      .withColumn("simhash", expr(packed))
-      .select(col("doc_id"), col("simhash"))
-      .orderBy(col("doc_id"))
-  }
-
-  def simhash16Sql: String = {
-    val sums = (0 until 16).map(b => s"sum(${bitContrib(b)}) AS c$b").mkString(", ")
-    val packed = (0 until 16)
-      .map(b => s"(CASE WHEN c$b > 0 THEN ${1 << (15 - b)} ELSE 0 END)")
-      .mkString(" + ")
-    s"""WITH tok AS (
-       |  SELECT doc_id, unnest(list_distinct(
-       |    list_filter(string_split_regex(text, '\\s+'), x -> x <> ''))) AS tk
-       |  FROM documents),
-       |hashed AS (SELECT doc_id, md5(tk) AS h FROM tok),
-       |s AS (SELECT doc_id, $sums FROM hashed GROUP BY doc_id)
-       |SELECT doc_id, $packed AS simhash FROM s ORDER BY doc_id""".stripMargin
-  }
-
-  /** PRODUCTION-width SimHash: 64 bits from md5's first 16 nibbles
-    * (the 16-bit [[simhash16]] is the oracle-friendly teaching size;
-    * at 16 bits a Hamming-≤2 search over 500 docs already flags 15% of
-    * ALL pairs — random collisions, a disguised all-pairs. At 64 bits
-    * the random Hamming-≤3 collision probability is ~2·10⁻¹⁵, so every
-    * reported pair is a genuine near-duplicate). Packed as FOUR 16-bit
+  /** SimHash over the doc's DISTINCT tokens: bit b = sign of the
+    * summed per-token votes of md5(token)'s bit b, 64 bits from md5's
+    * first 16 nibbles (at 16 bits a Hamming-≤2 search over 500 docs
+    * already flags 15% of ALL pairs — random collisions, a disguised
+    * all-pairs. At 64 bits the random Hamming-≤3 collision probability
+    * is ~2·10⁻¹⁵, so every reported pair is a genuine near-duplicate).
+    * The per-distinct-token md5 runs before the first exchange, so the
+    * scan is fanned out first. Packed as FOUR 16-bit
     * columns `sh0..sh3` — which are exactly Manku's (WWW'07,
     * "Detecting Near-Duplicates for Web Crawling") block slices for
     * maxHamming=3, and sidestep 64-bit sign/overflow differences

@@ -4,8 +4,9 @@ import scala.collection.mutable
 
 import graft.functions.XxHash64Ref
 
-/** Independent pure-Scala reference for the xxhash64 fine-dedup twins
-  * (winnowing fingerprints and span-level dedup). DuckDB has no
+/** Independent pure-Scala reference for the fine-dedup operators
+  * ([[Winnowing]] fingerprints and [[SpanDedup]] spans), which hash
+  * every gram with xxhash64 — their one hash family. DuckDB has no
   * Spark-compatible `xxhash64`, so the driver oracle for
   * `winnow_stats_xx` / `winnow_pairs_xx` / `dup_spans_xx` /
   * `dup_span_stats_xx` is computed HERE — from the documents alone,

@@ -10,7 +10,9 @@ import graft.functions.XxHash64Ref
   * expected pair list with THIS code (plain Scala collections, no Spark)
   * and emits it as VALUES literals — the same technique as the
   * geo_reindex oracle. At correctness scale (sf0.01, 500 docs) this is
-  * milliseconds of driver-side work.
+  * milliseconds of driver-side work. xxhash64 is MinHash-LSH's one hash
+  * family, so this reference is the operator's only oracle: banding,
+  * candidate join and verify are all checked against it.
   *
   * Shared semantics with the distributed pipeline (deliberately
   * duplicated, since agreement is the point of the check):

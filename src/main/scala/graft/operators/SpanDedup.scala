@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -16,16 +16,16 @@ import org.apache.spark.sql.functions._
   * unusable at 100 TB. The distributed equivalent here is position-level
   * gram matching plus gaps-and-islands merging:
   *
-  *   1. explode every L-char window into `(doc_id, pos, md5(gram))` —
-  *      NARROW (sequence+explode+substring, whole-stage codegen; the
-  *      shuffle that follows carries a 32-char digest + two longs per
-  *      position, never document text);
+  *   1. explode every L-char window into `(doc_id, pos,
+  *      xxhash64(gram))` — NARROW (sequence+explode+substring,
+  *      whole-stage codegen; the shuffle that follows carries three
+  *      longs per position, never document text);
   *   2. keep grams seen in more than one document — a gram is
   *      cross-document iff `min(doc_id) != max(doc_id)` over its gram
   *      partition, so ONE window over `partition by g` replaces the
   *      groupBy + equi-join-back shape: the gram frame is materialized
   *      and shuffled ONCE (the join formulation computes the explode +
-  *      md5 twice and shuffles the wide frame twice — measured 11.8 s
+  *      hash twice and shuffles the wide frame twice — measured 11.8 s
   *      vs 3.6 s at sf0.1; no all-pairs anywhere either way);
   *   3. merge each doc's surviving positions into maximal runs —
   *      stride-1 islands via `pos - row_number()` over a window
@@ -37,11 +37,15 @@ import org.apache.spark.sql.functions._
   * dominant term (≈ corpus chars rows); a hot gram (a boilerplate line
   * shared by millions of docs) puts ALL its occurrence rows in one
   * window partition on one task — the skew remedy is the
-  * `maxOccurrences` OCCURRENCE ceiling on [[spanFrame]] (occurrence
+  * `maxOccurrences` OCCURRENCE ceiling on [[spanFrameXx]] (occurrence
   * rows, not distinct docs, are what a window partition holds, so
   * occurrences are the metric that matters for skew): a gram that hot
   * is boilerplate by definition, and dropping it removes or splits
   * only the spans made of it.
+  *
+  * Span formation tests only gram EQUALITY, so absent a 64-bit
+  * collision the spans do not depend on the hash. The driver oracle is
+  * the pure-Scala [[FineDedupRef.spans]] via VALUES literals.
   */
 object SpanDedup {
 
@@ -51,22 +55,11 @@ object SpanDedup {
     */
   val GramLen = 40
 
-  /** md5 hex prefix width for the md5 twin's gram digest: 64 bits, half
-    * the shuffle width of the full hex digest; both engines truncate
-    * identically so a collision cannot diverge them. The xxhash64 twin
-    * ([[spanFrameXx]]) carries a bare long instead.
-    */
-  val Md5Hex = 16
-
   /** `(doc_id, span_start, span_len)` of every maximal cross-document
-    * duplicated span, 1-based character positions.
-    */
-  def duplicatedSpans(docs: DataFrame, gramLen: Int = GramLen): DataFrame =
-    spanFrame(docs, gramLen).orderBy(col("doc_id"), col("span_start"))
-
-  /** The unordered maximal-span frame — shared by [[duplicatedSpans]]
-    * and [[spanStats]] (SparkEntry caches it per (session, sf) so the
-    * gram explode+window runs once, not once per consumer).
+    * duplicated span, 1-based character positions, unordered — shared
+    * by `dup_spans_xx` and [[spanStatsFrom]] (SparkEntry caches it per
+    * (session, sf) so the gram explode+window runs once, not once per
+    * consumer). The gram digest is the codegen'd 64-bit xxhash64 long.
     *
     * `maxOccurrences` is the hot-gram skew guard for the 100 TB run: a
     * gram with more OCCURRENCE ROWS than the cap (occurrences, not
@@ -80,32 +73,10 @@ object SpanDedup {
     * every gram is that hot disappears — by construction it is
     * boilerplate.
     */
-  def spanFrame(
-      docs: DataFrame,
-      gramLen: Int = GramLen,
-      maxOccurrences: Long = Long.MaxValue): DataFrame =
-    spanFrameWith(docs, gramLen, maxOccurrences,
-      g => substring(md5(g), 1, Md5Hex))
-
-  /** xxhash64 production twin of [[spanFrame]]: the gram digest is the
-    * codegen'd 64-bit hash long — ¼ the shuffle width of even the
-    * truncated hex digest and none of md5's per-gram digest+hex cost.
-    * Span formation only tests gram EQUALITY, so absent a 64-bit
-    * collision the output is IDENTICAL to the md5 twin's (spec-asserted
-    * on the planted corpus); the driver oracle is the pure-Scala
-    * [[FineDedupRef.spans]] via VALUES literals.
-    */
   def spanFrameXx(
       docs: DataFrame,
       gramLen: Int = GramLen,
-      maxOccurrences: Long = Long.MaxValue): DataFrame =
-    spanFrameWith(docs, gramLen, maxOccurrences, g => xxhash64(g))
-
-  private def spanFrameWith(
-      docs: DataFrame,
-      gramLen: Int,
-      maxOccurrences: Long,
-      hash: Column => Column): DataFrame = {
+      maxOccurrences: Long = Long.MaxValue): DataFrame = {
     val grams = docs
       .filter(length(col("text")) >= gramLen)
       .select(
@@ -115,7 +86,7 @@ object SpanDedup {
       .select(
         col("doc_id"),
         col("pos").cast("long").as("pos"),
-        hash(expr(s"substring(text, pos, $gramLen)")).as("g"))
+        xxhash64(expr(s"substring(text, pos, $gramLen)")).as("g"))
     val perGram = Window.partitionBy(col("g"))
     val hits = grams
       .withColumn("mn", min(col("doc_id")).over(perGram))
@@ -138,7 +109,7 @@ object SpanDedup {
     * duplicated character count, and the per-mille duplicated fraction
     * (integer arithmetic, so both engines agree exactly).
     *
-    * Maximal islands from [[duplicatedSpans]] can OVERLAP as character
+    * Maximal islands from [[spanFrameXx]] can OVERLAP as character
     * ranges (positions {p, p+2} with gram length L cover [p, p+2+L) but
     * sum their lengths to 2L), so the char count goes through a second
     * gaps-and-islands pass at interval level: a span opens a new group
@@ -148,9 +119,6 @@ object SpanDedup {
     * `documents` is an equi-join on doc_id for `n_chars`; the span side
     * is bounded by the number of duplicated docs, never corpus chars.
     */
-  def spanStats(docs: DataFrame, gramLen: Int = GramLen): DataFrame =
-    spanStatsFrom(spanFrame(docs, gramLen), docs)
-
   def spanStatsFrom(spanFr: DataFrame, docs: DataFrame): DataFrame = {
     val spans = spanFr
       .withColumn("span_end", col("span_start") + col("span_len"))
@@ -179,57 +147,4 @@ object SpanDedup {
       .select(col("doc_id"), col("n_spans"), col("dup_chars"), col("dup_permille"))
       .orderBy(col("doc_id"))
   }
-
-  /** Shared CTE prefix: `spans` = the maximal-span frame, unordered. */
-  private def spansCte(gramLen: Int): String =
-    s"""WITH grams AS (
-       |  SELECT doc_id, CAST(pos AS BIGINT) AS pos,
-       |         substr(md5(substr(text, pos, $gramLen)), 1, $Md5Hex) AS g
-       |  FROM (SELECT doc_id, text,
-       |               unnest(generate_series(1, length(text) - ${gramLen - 1})) AS pos
-       |        FROM documents WHERE length(text) >= $gramLen)),
-       |w AS (SELECT doc_id, pos,
-       |             min(doc_id) OVER (PARTITION BY g) AS mn,
-       |             max(doc_id) OVER (PARTITION BY g) AS mx
-       |      FROM grams),
-       |hits AS (SELECT doc_id, pos FROM w WHERE mn <> mx),
-       |isl AS (SELECT doc_id, pos,
-       |               pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS isl
-       |        FROM hits),
-       |spans AS (SELECT doc_id, MIN(pos) AS span_start,
-       |                 MAX(pos) - MIN(pos) + $gramLen AS span_len
-       |          FROM isl GROUP BY doc_id, isl)""".stripMargin
-
-  /** DuckDB twin: same gram length, same island arithmetic. */
-  def duplicatedSpansSql(gramLen: Int = GramLen): String =
-    s"""${spansCte(gramLen)}
-       |SELECT doc_id, span_start, span_len FROM spans
-       |ORDER BY doc_id, span_start""".stripMargin
-
-  /** DuckDB twin of [[spanStats]]: same interval-union window, same
-    * integer per-mille (`//` == Spark `DIV` on positive BIGINTs).
-    */
-  def spanStatsSql(gramLen: Int = GramLen): String =
-    s"""${spansCte(gramLen)},
-       |sp AS (SELECT doc_id, span_start, span_start + span_len AS span_end FROM spans),
-       |m AS (SELECT doc_id, span_start, span_end,
-       |             max(span_end) OVER (PARTITION BY doc_id ORDER BY span_start
-       |               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
-       |      FROM sp),
-       |g AS (SELECT doc_id, span_start, span_end,
-       |             sum(CASE WHEN prev_end IS NULL OR span_start > prev_end
-       |                      THEN 1 ELSE 0 END)
-       |               OVER (PARTITION BY doc_id ORDER BY span_start
-       |                     ROWS UNBOUNDED PRECEDING) AS grp
-       |      FROM m),
-       |iv AS (SELECT doc_id, grp, min(span_start) AS s, max(span_end) AS e,
-       |              count(*) AS n_raw
-       |       FROM g GROUP BY 1, 2),
-       |agg AS (SELECT doc_id, CAST(sum(n_raw) AS BIGINT) AS n_spans,
-       |               CAST(sum(e - s) AS BIGINT) AS dup_chars
-       |        FROM iv GROUP BY 1)
-       |SELECT d.doc_id, a.n_spans, a.dup_chars,
-       |       a.dup_chars * 1000 // d.n_chars AS dup_permille
-       |FROM documents d JOIN agg a ON d.doc_id = a.doc_id
-       |ORDER BY d.doc_id""".stripMargin
 }

@@ -33,7 +33,7 @@ import org.apache.spark.sql.functions._
   *
   * Skew: a boilerplate unit shared by millions of documents piles its
   * occurrence rows into ONE window partition on one task — the same
-  * hazard and the same remedy as [[SpanDedup.spanFrame]]: the
+  * hazard and the same remedy as [[SpanDedup.spanFrameXx]]: the
   * `maxOccurrences` occurrence ceiling rides the identical WindowExec
   * (a `count` over the same partition costs nothing extra), and a gram
   * that hot is boilerplate by definition — capping it only stops it

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -17,16 +17,9 @@ import org.apache.spark.sql.functions._
   * density of ~2/(w+1) selections per position instead of
   * [[SpanDedup]]'s one row per character.
   *
-  * TWO hash families share one selection skeleton (the MinHash-LSH
-  * pattern from [[Dedup]]):
-  *   - '''md5 twin''' ([[fingerprints]]): gram hash = the first 16 hex
-  *     chars of md5 — replayable verbatim in DuckDB, which is what makes
-  *     the whole selection ORACLE-checkable end to end;
-  *   - '''xxhash64 production twin''' ([[fingerprintsXx]]): gram hash =
-  *     the codegen'd 64-bit `xxhash64` long — ~¼ the shuffle width and
-  *     none of md5's per-gram digest+hex cost; its oracle is the
-  *     pure-Scala [[FineDedupRef]] (VALUES literals via
-  *     `SparkEntry.oracleSqlFor`, the `dedup_minhash_lsh` technique).
+  * Gram hash: the codegen'd 64-bit `xxhash64` long. Its oracle is the
+  * pure-Scala [[FineDedupRef]] (VALUES literals via
+  * `SparkEntry.oracleSqlFor`, the `dedup_minhash_lsh` technique).
   *
   * Selection key: the rightmost-tie rule is folded into a single
   * orderable key `struct(h, ep)` with `ep = 10^12 − pos` — the struct
@@ -37,15 +30,16 @@ import org.apache.spark.sql.functions._
   * ROWS [s, s+w−1]; trailing short windows are excluded by requiring
   * `count(*) == w` over the same frame (the paper's windows are exactly
   * the full ones). A document with fewer than w grams (len < k+w−1) has
-  * no full window and is absent from the output, in both engines.
+  * no full window and is absent from the output, here and in the
+  * reference.
   *
   * Plan shape: the gram explode is NARROW (sequence+substring, codegen;
   * dominated by ≈ corpus chars rows, like [[SpanDedup]]); ONE shuffle
   * partitions by doc_id for the per-doc ordered window (min and count
   * ride the same WindowExec); the distinct over selected keys and the
   * final per-doc digest re-shuffle only the FINGERPRINT frame — already
-  * winnowed to ~2/(w+1) of positions, and each row is a digest + two
-  * longs, never text. Nothing global: every stage is per-doc state.
+  * winnowed to ~2/(w+1) of positions, and each row is three longs,
+  * never text. Nothing global: every stage is per-doc state.
   */
 object Winnowing {
 
@@ -60,34 +54,26 @@ object Winnowing {
   val GramLen = 16
   val WindowGrams = 4
 
-  /** md5 hex prefix width for the md5 twin's gram hash: 16 hex chars =
-    * 64 bits, same collision budget as the xxhash64 twin and half the
-    * shuffle width of the full digest. Both engines truncate
-    * identically, so even a collision (p ≈ 2⁻⁶⁴ per gram pair) cannot
-    * diverge them.
-    */
-  val Md5Hex = 16
-
   /** Position encoding for the tie-break key: pos is embedded as
     * `10^12 − pos`, so the struct min picks the LARGEST position among
     * equal hashes ("rightmost" in the paper's terms).
     */
-  private val PosPad = 12
   private val PosBase = 1000000000000L
 
   /** Minimum shared distinct fingerprints for a reported pair. */
   val MinShared = 10
 
-  /** Shared selection skeleton: explode 1-based gram positions, hash
-    * each gram with `hash` (md5-prefix string or xxhash64 long), pick
-    * each full window's `min(struct(h, ep))`, dedup per doc. Returns
-    * `(doc_id, pos, fp)` with `fp` typed by the hash family.
+  /** `(doc_id, pos, fp)` — the selected fingerprints (1-based gram
+    * position, 64-bit signed xxhash64 long): what a matcher indexes as
+    * (fp → doc) postings. Explode the gram positions, hash each gram,
+    * pick each full window's `min(struct(h, ep))`, dedup per doc.
+    * Selection ties break on the SIGNED long order —
+    * [[FineDedupRef.winnowFingerprints]] replicates exactly that.
     */
-  private def selectedFingerprints(
+  def fingerprintsXx(
       docs: DataFrame,
-      gramLen: Int,
-      windowGrams: Int,
-      hash: Column => Column): DataFrame = {
+      gramLen: Int = GramLen,
+      windowGrams: Int = WindowGrams): DataFrame = {
     require(gramLen > 0 && windowGrams > 0, s"k=$gramLen w=$windowGrams must be positive")
     val grams = graft.sources.Tables.fanOut(docs)
       .filter(length(col("text")) >= gramLen)
@@ -102,15 +88,15 @@ object Winnowing {
       .select(
         col("doc_id"),
         (lit(PosBase) - col("pos")).cast("long").as("ep"),
-        hash(expr(s"substring(text, pos, $gramLen)")).as("h"))
+        xxhash64(expr(s"substring(text, pos, $gramLen)")).as("h"))
     val frame = Window
       .partitionBy(col("doc_id"))
       .orderBy(col("ep")) // encoded pos: ASC in encoding == DESC in pos
       .rowsBetween(Window.currentRow, windowGrams - 1)
     // ordering by the encoded position is ordering by pos DESC;
     // direction is irrelevant to "every full window of w consecutive
-    // grams" as long as both engines slide the same way — the DuckDB
-    // twin and FineDedupRef order identically.
+    // grams" as long as the reference slides the same way —
+    // FineDedupRef orders identically.
     grams
       .withColumn("mk", min(struct(col("h"), col("ep"))).over(frame))
       .withColumn("nw", count(lit(1)).over(frame))
@@ -122,52 +108,6 @@ object Winnowing {
         (lit(PosBase) - col("mk.ep")).as("pos"),
         col("mk.h").as("fp"))
   }
-
-  /** md5 twin: `(doc_id, pos, fp)` — the selected fingerprints (1-based
-    * gram position, [[Md5Hex]]-hex gram hash): what a matcher indexes as
-    * (fp → doc) postings. [[fingerprintStats]] digests this per doc for
-    * the fixed-width gate row.
-    */
-  def fingerprints(
-      docs: DataFrame,
-      gramLen: Int = GramLen,
-      windowGrams: Int = WindowGrams): DataFrame =
-    selectedFingerprints(docs, gramLen, windowGrams,
-      g => substring(md5(g), 1, Md5Hex))
-
-  /** xxhash64 production twin of [[fingerprints]]: `fp` is the 64-bit
-    * signed hash long. Selection ties break on the SIGNED long order —
-    * [[FineDedupRef.winnowFingerprints]] replicates exactly that.
-    */
-  def fingerprintsXx(
-      docs: DataFrame,
-      gramLen: Int = GramLen,
-      windowGrams: Int = WindowGrams): DataFrame =
-    selectedFingerprints(docs, gramLen, windowGrams, g => xxhash64(g))
-
-  /** `(doc_id, n_fp, fp_md5)` per document: fingerprint count and a
-    * digest of the `pos:hash` fingerprint sequence in position order.
-    */
-  def fingerprintStats(
-      docs: DataFrame,
-      gramLen: Int = GramLen,
-      windowGrams: Int = WindowGrams): DataFrame =
-    fingerprintStatsFrom(fingerprints(docs, gramLen, windowGrams))
-
-  /** [[fingerprintStats]] from an existing fingerprint frame (so the
-    * cached frame is shared with [[sharedFingerprintPairsFrom]]).
-    */
-  def fingerprintStatsFrom(fp: DataFrame): DataFrame =
-    fp
-      .groupBy(col("doc_id"))
-      .agg(
-        count(lit(1)).as("n_fp"),
-        md5(array_join(
-          transform(
-            array_sort(collect_list(struct(col("pos"), col("fp")))),
-            x => concat(x.getField("pos").cast("string"), lit(":"), x.getField("fp"))),
-          " ")).as("fp_md5"))
-      .orderBy(col("doc_id"))
 
   /** Per-doc stats over an xxhash64 fingerprint frame: count plus an
     * order-independent 64-bit checksum (`bit_xor` of `xxhash64(pos,
@@ -198,19 +138,8 @@ object Winnowing {
     * that common identifies nothing — dropping it mirrors the
     * [[SpanDedup]]/[[UnitDedup]] hot-key guard), and rides the posting
     * aggregation that is already computed. The gate entry runs
-    * uncapped.
-    */
-  def sharedFingerprintPairs(
-      docs: DataFrame,
-      gramLen: Int = GramLen,
-      windowGrams: Int = WindowGrams,
-      minShared: Int = MinShared,
-      maxPostings: Long = Long.MaxValue): DataFrame =
-    sharedFingerprintPairsFrom(
-      fingerprints(docs, gramLen, windowGrams), minShared, maxPostings)
-
-  /** [[sharedFingerprintPairs]] from an existing fingerprint frame (so
-    * the cached frame is shared with [[fingerprintStats]]).
+    * uncapped. Takes an existing fingerprint frame, so a cached frame
+    * is shared with [[fingerprintStatsXxFrom]].
     */
   def sharedFingerprintPairsFrom(
       fp: DataFrame,
@@ -221,7 +150,7 @@ object Winnowing {
   /** The capped doc-level posting frame `(fp, doc_id)` — cache THIS
     * before the pair join: the self-join reads it twice, so an
     * unpersisted postings derivation would run its groupBy + df window
-    * once per join side. Hash-family-agnostic (`fp` string or long).
+    * once per join side.
     */
   def postings(fp: DataFrame, maxPostings: Long = Long.MaxValue): DataFrame =
     fp
@@ -241,52 +170,4 @@ object Winnowing {
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
       .orderBy(col("a_id"), col("b_id"))
-
-  /** Shared CTE prefix for the md5 twin: `fp` = the selected (doc_id,
-    * pos, fp) fingerprint frame. The string key `h || lpad(ep)` is
-    * lexicographically identical to Spark's `struct(h, ep)` ordering —
-    * h is fixed-width hex, ep fixed-width zero-padded digits.
-    */
-  private def fpCte(gramLen: Int, windowGrams: Int): String =
-    s"""WITH grams AS (
-       |  SELECT doc_id,
-       |         substr(md5(substr(text, pos, $gramLen)), 1, $Md5Hex) ||
-       |           lpad(CAST($PosBase - pos AS VARCHAR), $PosPad, '0') AS key
-       |  FROM (SELECT doc_id, text,
-       |               unnest(generate_series(1, length(text) - ${gramLen - 1})) AS pos
-       |        FROM documents WHERE length(text) >= $gramLen)),
-       |w AS (
-       |  SELECT doc_id,
-       |         min(key) OVER (PARTITION BY doc_id ORDER BY substr(key, ${Md5Hex + 1}, $PosPad)
-       |                        ROWS BETWEEN CURRENT ROW AND ${windowGrams - 1} FOLLOWING) AS mk,
-       |         count(*) OVER (PARTITION BY doc_id ORDER BY substr(key, ${Md5Hex + 1}, $PosPad)
-       |                        ROWS BETWEEN CURRENT ROW AND ${windowGrams - 1} FOLLOWING) AS nw
-       |  FROM grams),
-       |sel AS (SELECT DISTINCT doc_id, mk FROM w WHERE nw = $windowGrams),
-       |fp AS (
-       |  SELECT doc_id,
-       |         $PosBase - CAST(substr(mk, ${Md5Hex + 1}, $PosPad) AS BIGINT) AS pos,
-       |         substr(mk, 1, $Md5Hex) AS fp
-       |  FROM sel)""".stripMargin
-
-  /** DuckDB twin: same key encoding, same window frame, same digest. */
-  def fingerprintStatsSql(
-      gramLen: Int = GramLen,
-      windowGrams: Int = WindowGrams): String =
-    s"""${fpCte(gramLen, windowGrams)}
-       |SELECT doc_id, count(*) AS n_fp,
-       |       md5(string_agg(CAST(pos AS VARCHAR) || ':' || fp, ' ' ORDER BY pos)) AS fp_md5
-       |FROM fp GROUP BY doc_id ORDER BY doc_id""".stripMargin
-
-  /** DuckDB twin of [[sharedFingerprintPairs]] (uncapped). */
-  def sharedFingerprintPairsSql(
-      gramLen: Int = GramLen,
-      windowGrams: Int = WindowGrams,
-      minShared: Int = MinShared): String =
-    s"""${fpCte(gramLen, windowGrams)},
-       |post AS (SELECT DISTINCT fp, doc_id FROM fp)
-       |SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS n_shared
-       |FROM post a JOIN post b ON a.fp = b.fp AND a.doc_id < b.doc_id
-       |GROUP BY 1, 2 HAVING count(*) >= $minShared
-       |ORDER BY 1, 2""".stripMargin
 }

@@ -1,6 +1,9 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.PartitionedFileUtil
+import org.apache.spark.sql.execution.datasources.{
+  FilePartition, HadoopFsRelation, LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
@@ -163,6 +166,21 @@ object Tables {
     if (cols.isEmpty) df
     else df.select(col("*") +: cols.map { case (n, c) => c.as(n) }: _*)
 
+  /** Input splits a scan of `dirs` reads — Spark's own split size,
+    * file splitting and bin-packing (what FileSourceScanExec applies;
+    * parquet is splittable), from file metadata only: no job, no
+    * physical planning.
+    */
+  def splitCount(spark: SparkSession, dirs: Seq[PartitionDirectory]): Int = {
+    val maxSplitBytes = FilePartition.maxSplitBytes(spark, dirs)
+    val splits = for {
+      d <- dirs
+      f <- d.files
+      s <- PartitionedFileUtil.splitFiles(f, f.getPath, true, maxSplitBytes, d.values)
+    } yield s
+    FilePartition.getFilePartitions(spark, splits.sortBy(-_.length), maxSplitBytes).size
+  }
+
   /** Spread a narrow compute-heavy stage across the cluster when the
     * scan gives too few input splits. The test corpus is ONE sub-MB
     * parquet file → one partition, so every per-row md5/shingle stage
@@ -170,53 +188,23 @@ object Tables {
     * round-2 "md5-family bench blowup"). A real 100 TB corpus has
     * thousands of splits and takes the `df` branch — the shuffle is
     * never paid where scan parallelism already exists.
+    *
+    * The split count comes from FILE METADATA of the optimized plan's
+    * file relations ([[splitCount]]), each root read once. `df.rdd`
+    * here would force physical planning and, under AQE, eagerly execute
+    * any upstream shuffle stages at plan-construction time. A frame
+    * with no file relation, no files, or only cached data (the
+    * optimizer swaps a cached subtree for its in-memory relation) is
+    * left alone.
     */
   def fanOut(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val target = spark.sparkContext.defaultParallelism
-    // Estimate scan splits from FILE METADATA only. `df.rdd` here would
-    // force physical planning and, under AQE, eagerly execute any
-    // upstream shuffle stages at plan-construction time — a latent
-    // hazard if fanOut ever wraps a derived frame (ADVICE round 3).
-    // inputFiles walks the logical plan without running a job.
-    val files = df.inputFiles
-    val estSplits =
-      if (files.isEmpty) Int.MaxValue // not a file scan: leave partitioning alone
-      else {
-        // Replicate Spark's actual scan partitioning (ADVICE round 4 —
-        // the old max(nFiles, bytes/maxPartitionBytes) overestimated and
-        // could skip a needed repartition): maxSplitBytes =
-        // min(filesMaxPartitionBytes, max(openCostInBytes,
-        // totalWithOpenCost/parallelism)), files cut into splits of that
-        // size, splits sorted by length descending and bin-packed with
-        // per-split open cost, closing a bin before it would overflow —
-        // the same algorithm as FilePartition.getFilePartitions, so the
-        // estimate IS the real partition count (modulo racing writers).
-        val conf = spark.sessionState.conf
-        val openCost = math.max(conf.filesOpenCostInBytes, 0L)
-        val hconf = spark.sparkContext.hadoopConfiguration
-        val lens = files.map { f =>
-          val p = new org.apache.hadoop.fs.Path(f)
-          try p.getFileSystem(hconf).getFileStatus(p).getLen
-          catch { case _: java.io.IOException => 0L }
-        }
-        val totalWithOpen = lens.map(_ + openCost).sum
-        val bytesPerCore = totalWithOpen / math.max(spark.sparkContext.defaultParallelism, 1)
-        val maxSplit = math.max(
-          1L,
-          math.min(conf.filesMaxPartitionBytes, math.max(openCost, bytesPerCore)))
-        val splits = lens.flatMap { len =>
-          (0L until len by maxSplit).map(off => math.min(maxSplit, len - off))
-        }.sortBy(-_)
-        var bins = 0L
-        var cur = -1L // force a first bin
-        splits.foreach { s =>
-          if (cur < 0 || cur + s > maxSplit) { bins += 1; cur = 0L }
-          cur += s + openCost
-        }
-        math.max(bins, 1L)
-      }
-    if (estSplits >= math.max(target / 2, 2)) df
+    val dirs = df.queryExecution.optimizedPlan
+      .collect { case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r.location }
+      .distinctBy(_.rootPaths.toSet)
+      .flatMap(_.listFiles(Nil, Nil))
+    if (dirs.forall(_.files.isEmpty) || splitCount(spark, dirs) >= math.max(target / 2, 2)) df
     else df.repartition(target)
   }
 }

@@ -5,6 +5,7 @@ import java.security.MessageDigest
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.functions.XxHash64Ref
 import graft.operators.{Bpe, BpeRef, CorpusSignals, FineDedupRef, SpanDedup, UnitDedup, Winnowing}
 
 /** Semantic checks for the unit-level dedup, winnowing fingerprints,
@@ -82,20 +83,21 @@ class FineDedupSpec extends AnyFunSuite {
   // ---- winnowing -----------------------------------------------------
 
   /** Independent in-spec winnowing reference: every full window of w
-    * consecutive k-gram hashes selects its min hash, rightmost position
-    * on ties; selections dedup to (pos, hash).
+    * consecutive k-gram hashes (xxhash64 longs, signed order) selects
+    * its min hash, rightmost position on ties; selections dedup to
+    * (pos, hash). ASCII texts only: positions are String indices.
     */
-  private def winnowRef(text: String, k: Int, w: Int): Set[(Long, String)] = {
+  private def winnowRef(text: String, k: Int, w: Int): Set[(Long, Long)] = {
     val n = text.length - k + 1
     if (n < w) Set.empty
     else {
       val hs = (1 to n).map(p =>
-        p.toLong -> md5hex(text.substring(p - 1, p - 1 + k)).substring(0, Winnowing.Md5Hex))
-      (0 to n - w).flatMap { s =>
+        p.toLong -> XxHash64Ref.sparkString(text.substring(p - 1, p - 1 + k)))
+      (0 to n - w).map { s =>
         val win = hs.slice(s, s + w)
         val minH = win.map(_._2).min
-        Seq(win.filter(_._2 == minH).maxBy(_._1)) // rightmost min
-      }.toSet.map((t: (Long, String)) => (t._1, t._2))
+        win.filter(_._2 == minH).maxBy(_._1) // rightmost min
+      }.toSet
     }
   }
 
@@ -105,10 +107,10 @@ class FineDedupSpec extends AnyFunSuite {
       1L -> "aaaaaaaaaaaaaaaaaaaa", // all grams identical: pure tie-break test
       2L -> "abcabcabcabcabcabcabc", // period-3 repeats: heavy ties
       3L -> "short") // < k: no grams at all
-    val got = Winnowing.fingerprints(docs(texts: _*))
+    val got = Winnowing.fingerprintsXx(docs(texts: _*))
       .collect()
       .groupBy(_.getLong(0))
-      .map { case (id, rs) => id -> rs.map(r => (r.getLong(1), r.getString(2))).toSet }
+      .map { case (id, rs) => id -> rs.map(r => (r.getLong(1), r.getLong(2))).toSet }
     for ((id, text) <- texts) {
       val want = winnowRef(text, Winnowing.GramLen, Winnowing.WindowGrams)
       assert(got.getOrElse(id, Set.empty) === want, s"doc $id")
@@ -120,9 +122,9 @@ class FineDedupSpec extends AnyFunSuite {
     val d = docs(
       0L -> s"left context padding $common right padding words",
       1L -> s"completely different beginning $common and a different end")
-    val fps = Winnowing.fingerprints(d).collect().groupBy(_.getLong(0))
-    val h0 = fps(0L).map(_.getString(2)).toSet
-    val h1 = fps(1L).map(_.getString(2)).toSet
+    val fps = Winnowing.fingerprintsXx(d).collect().groupBy(_.getLong(0))
+    val h0 = fps(0L).map(_.getLong(2)).toSet
+    val h1 = fps(1L).map(_.getLong(2)).toSet
     assert((h0 & h1).nonEmpty)
   }
 
@@ -142,24 +144,29 @@ class FineDedupSpec extends AnyFunSuite {
       a <- texts.keys; b <- texts.keys if a < b
       n = (refFps(a) & refFps(b)).size if n >= Winnowing.MinShared
     } yield (a, b, n.toLong)).toSet
-    val got = Winnowing.sharedFingerprintPairs(d).collect()
+    val fp = Winnowing.fingerprintsXx(d)
+    val got = Winnowing.sharedFingerprintPairsFrom(fp).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got === expected)
     assert(got.exists { case (a, b, _) => a == 0L && b == 1L }) // the planted overlap is found
 
     // cap=1: every cross-doc fingerprint has 2 postings -> all dropped
-    val capped = Winnowing.sharedFingerprintPairs(d, maxPostings = 1).collect()
+    val capped = Winnowing.sharedFingerprintPairsFrom(fp, maxPostings = 1).collect()
     assert(capped.isEmpty)
   }
 
   test("fingerprintStats digests agree with the fingerprint frame") {
     val d = docs(0L -> "the quick brown fox jumps over the lazy dog")
-    val fp = Winnowing.fingerprints(d).collect()
-      .map(r => (r.getLong(1), r.getString(2))).sortBy(_._1)
-    val stats = Winnowing.fingerprintStats(d).collect().head
+    val frame = Winnowing.fingerprintsXx(d)
+    val fp = frame.collect().map(r => (r.getLong(1), r.getLong(2)))
+    val stats = Winnowing.fingerprintStatsXxFrom(frame).collect().head
     assert(stats.getAs[Long]("n_fp") === fp.length.toLong)
-    assert(stats.getAs[String]("fp_md5") ===
-      md5hex(fp.map { case (p, h) => s"$p:$h" }.mkString(" ")))
+    assert(stats.getAs[Long]("fp_xor") ===
+      fp.map { case (p, h) => XxHash64Ref.sparkLongs(Seq(p, h)) }.reduce(_ ^ _))
+    assert((stats.getLong(0), stats.getLong(1), stats.getLong(2)) ===
+      FineDedupRef.winnowStats(
+        Seq(0L -> "the quick brown fox jumps over the lazy dog"),
+        Winnowing.GramLen, Winnowing.WindowGrams).head)
   }
 
   // ---- xxhash64 production twins vs FineDedupRef ---------------------
@@ -202,18 +209,15 @@ class FineDedupSpec extends AnyFunSuite {
     assert(gotPairs.exists { case (a, b, _) => a == 0L && b == 1L })
   }
 
-  test("spanFrameXx equals the md5 span frame and the FineDedupRef spans") {
+  test("spanFrameXx equals the FineDedupRef spans") {
     val boiler = "this exact forty-character boilerplate span!" // 44 chars >= GramLen
     val texts = Seq(
       0L -> s"unique leading content then $boiler trailing tail one",
       1L -> s"other document with $boiler plus entirely different ending",
       2L -> "no duplicated material in this document at all, fully unique text here")
     val d = docs(texts: _*)
-    val md5Spans = SpanDedup.spanFrame(d).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val xxSpans = SpanDedup.spanFrameXx(d).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(xxSpans === md5Spans) // span algebra is hash-agnostic absent collisions
     assert(xxSpans === FineDedupRef.spans(texts, SpanDedup.GramLen).toSet)
     assert(xxSpans.map(_._1) === Set(0L, 1L))
   }
@@ -234,7 +238,7 @@ class FineDedupSpec extends AnyFunSuite {
 
   // ---- 64-bit SimHash Hamming near-dup -------------------------------
 
-  test("simhash64: word 0 equals simhash16; pairs == brute-force Hamming filter (exact)") {
+  test("simhash64 pairs == brute-force Hamming filter (exact)") {
     import SparkTestBase.spark.implicits._
     import graft.operators.Dedup
     // long docs: simhash's near-dup property needs many features per
@@ -247,10 +251,7 @@ class FineDedupSpec extends AnyFunSuite {
       3L -> (1 to 300).map(i => s"other$i").mkString(" ")) // disjoint vocabulary
     val d = texts.toDF("doc_id", "text")
     val sig64 = Dedup.simhash64(d)
-    val sig16 = Dedup.simhash16(d).collect().map(r => r.getLong(0) -> r.getInt(1).toLong).toMap
-    // the first 16 bits of the 64-bit signature ARE the 16-bit signature
     val rows = sig64.collect()
-    rows.foreach(r => assert(r.getLong(1) === sig16(r.getLong(0)), s"doc ${r.getLong(0)}"))
 
     // EXACT spec: reported pairs == { (a,b) : bruteHamming(a,b) <= 3 },
     // with the reported distances matching the brute recount — both the
@@ -350,9 +351,8 @@ class FineDedupSpec extends AnyFunSuite {
     import graft.operators.{Bpe, Dedup, Multimodal}
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
     assert(UnitDedup.dedupUnits(empty).collect().isEmpty)
-    assert(Winnowing.fingerprintStats(empty).collect().isEmpty)
-    assert(Winnowing.sharedFingerprintPairs(empty).collect().isEmpty)
     assert(Winnowing.fingerprintStatsXxFrom(Winnowing.fingerprintsXx(empty)).collect().isEmpty)
+    assert(Winnowing.sharedFingerprintPairsFrom(Winnowing.fingerprintsXx(empty)).collect().isEmpty)
     assert(SpanDedup.spanFrameXx(empty).collect().isEmpty)
     assert(FineDedupRef.winnowStats(Nil, 16, 4).isEmpty && FineDedupRef.spans(Nil, 40).isEmpty)
     assert(Dedup.simhashNearDupPairsFrom(Dedup.simhash64(empty)).collect().isEmpty)

@@ -99,12 +99,17 @@ class PipelineOpsSpec extends AnyFunSuite {
   }
 
   test("simhash: near-identical docs (J≥0.8) agree on most bits") {
-    val sh = Dedup.simhash16(docs).collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    // four 16-bit words per doc; the bound is the 16-bit one (4 of 16
+    // bits) scaled to 64 bits
+    val sh = Dedup.simhash64(docs).collect()
+      .map(r => r.getLong(0) -> (1 to 4).map(r.getLong)).toMap
     val strong = Dedup.ngramJaccardPairs(docs, 3, 0.8)
       .select("a_id", "b_id").collect().map(r => (r.getLong(0), r.getLong(1)))
     if (strong.nonEmpty) {
-      val dists = strong.map { case (a, b) => Integer.bitCount(sh(a) ^ sh(b)) }
-      assert(dists.sum.toDouble / dists.length <= 4.0,
+      val dists = strong.map { case (a, b) =>
+        sh(a).zip(sh(b)).map { case (x, y) => java.lang.Long.bitCount(x ^ y) }.sum
+      }
+      assert(dists.sum.toDouble / dists.length <= 16.0,
         s"mean hamming ${dists.sum.toDouble / dists.length} over ${dists.length} near-dup pairs")
     }
   }

@@ -35,7 +35,7 @@ class SpanMixClassifySpec extends AnyFunSuite {
       0L -> (noise('x', 30) + shared + noise('y', 25)),
       1L -> (noise('z', 50) + shared + noise('w', 10)),
       2L -> noise('q', 120))
-    val spans = SpanDedup.duplicatedSpans(d, gramLen = 20).collect()
+    val spans = SpanDedup.spanFrameXx(d, gramLen = 20).collect()
     // doc2 shares nothing; docs 0 and 1 each report exactly ONE maximal
     // island covering the 40-char planted span (21 surviving 20-gram
     // positions merged into one row), at the right offset
@@ -51,7 +51,7 @@ class SpanMixClassifySpec extends AnyFunSuite {
     val d = docs(
       0L -> (s1 + noise('m', 40) + s2),
       1L -> (s2 + noise('n', 40) + s1))
-    val spans = SpanDedup.duplicatedSpans(d, gramLen = 20)
+    val spans = SpanDedup.spanFrameXx(d, gramLen = 20)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted
     assert(spans.toSeq === Seq((0L, 1L, 20L), (0L, 61L, 20L), (1L, 1L, 20L), (1L, 61L, 20L)))
   }
@@ -61,7 +61,7 @@ class SpanMixClassifySpec extends AnyFunSuite {
     val d = docs(
       0L -> (rep + noise('p', 30) + rep),
       1L -> noise('r', 80))
-    assert(SpanDedup.duplicatedSpans(d, gramLen = 20).count() === 0L)
+    assert(SpanDedup.spanFrameXx(d, gramLen = 20).count() === 0L)
   }
 
   test("spanFrame maxOccurrences drops only grams hotter than the cap") {
@@ -74,10 +74,10 @@ class SpanMixClassifySpec extends AnyFunSuite {
       3L -> (hot + noise('d', 30) + rare),
       4L -> (rare + noise('e', 30)))
     // uncapped: both planted grams form spans (docs 0-4 all appear)
-    val all = SpanDedup.spanFrame(d, gramLen = 20).collect().map(_.getLong(0)).toSet
+    val all = SpanDedup.spanFrameXx(d, gramLen = 20).collect().map(_.getLong(0)).toSet
     assert(all === Set(0L, 1L, 2L, 3L, 4L))
     // cap 3: the hot gram (4 occurrences) is dropped, the rare one stays
-    val capped = SpanDedup.spanFrame(d, gramLen = 20, maxOccurrences = 3L)
+    val capped = SpanDedup.spanFrameXx(d, gramLen = 20, maxOccurrences = 3L)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(capped === Set((3L, 51L, 20L), (4L, 1L, 20L)))
   }

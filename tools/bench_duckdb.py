@@ -15,13 +15,13 @@ SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 ORACLE = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out/oracle_sql.json"
 HEADLINE = [
     "q1_agg", "view_min", "history_avg", "snapshot_gh_sum",
-    "token_top20", "dedup_ngram_pairs", "dedup_minhash_pairs",
+    "token_top20", "dedup_ngram_pairs",
     "similarity_topk", "embedding_neardup_lsh", "user_sessions",
     "repetition_stats", "tfidf_top3", "sketch_certify", "data_profile",
     "value_histogram", "decontaminate", "semantic_clusters",
-    "dup_spans", "dup_span_stats", "mixture_resample", "quality_classify",
+    "mixture_resample", "quality_classify",
     "ann_recall", "embedding_quantize", "knn_join_lsh_auto",
-    "unit_dedup", "winnow_stats", "winnow_pairs", "source_report",
+    "unit_dedup", "source_report",
     "multimodal_pixels", "dedup_survivors", "multimodal_png_pixels",
     "multimodal_gif_pixels", "wav_audio_stats", "dedup_simhash_pairs",
     "multimodal_resize_stats", "wav_resample_stats",
@@ -88,8 +88,11 @@ HEADLINE = [
     "ann_ivf_asof", "ann_ivf_vacuum", "ann_ivf_vacuum_pinned",
     "bm25_asof", "hybrid_rrf_asof",
 ]
-# intentionally absent: bpe_encode / dedup_minhash_lsh and the other
-# *_xx production twins use precomputed VALUES oracles, not real queries
+# intentionally absent: bpe_encode, dedup_minhash_lsh and the xxhash64
+# winnowing / span-dedup entries (winnow_stats_xx, winnow_pairs_xx,
+# dup_spans_xx, dup_span_stats_xx) use precomputed VALUES oracles from
+# pure-Scala references, not real queries — DuckDB has no
+# Spark-compatible xxhash64 to recompute them with
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 con = duckdb.connect()
