@@ -75,10 +75,13 @@ class ExploraService(
     readings: DataFrame,
     viewStore: Option[String] = None,
     geoPartLen: Int = 2) {
-  import ExploraService.View
+  import ExploraService.{Once, View}
 
+  // TrieMap.getOrElseUpdate may evaluate its default in every thread
+  // that races on a key; caching a once-only holder means only the
+  // holder that won the insert builds — and writes — the view
   private val viewCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, String), View]
+    scala.collection.concurrent.TrieMap.empty[(String, Int, String), Once[View]]
 
   private def geoExpr(geoIndex: String, precision: Int) = geoIndex match {
     // prefix property: substring of a finer key IS the coarser key,
@@ -90,7 +93,7 @@ class ExploraService(
   private def view(geoIndex: String, precision: Int, resolution: String): View =
     viewCache.getOrElseUpdate(
       (geoIndex, precision, resolution),
-      viewStore match {
+      new Once(viewStore match {
         case Some(base) =>
           val spark = readings.sparkSession
           val path = s"$base/${geoIndex}_p${precision}_$resolution"
@@ -100,13 +103,16 @@ class ExploraService(
             .withColumn("geo_part", substring(col("geo"), 1, geoPartLen))
           if (!fs.exists(p))
             built
-              // cluster rows by (geo, ts) inside each partition so
-              // parquet row-group min/max statistics line up with the
-              // probe predicates: a snapshot probe (geo IN-list + one ts)
-              // or history probe (geo prefix + ts range) then skips
-              // whole row groups, not just whole partitions — the layout
-              // that matters once a geo_part partition holds many
-              // row groups at 100 TB. geo_part LEADS the sort: the
+              // cluster rows by geo inside each partition so parquet
+              // row-group min/max statistics on `geo` line up with the
+              // probe's geo predicate (a cell IN-list, or a prefix
+              // cover's string range): a probe then skips whole row
+              // groups, not just whole partitions — the layout that
+              // matters once a geo_part partition holds many row groups
+              // at 100 TB. `ts` follows in the sort but skips nothing:
+              // it is written as INT96 (Spark's default
+              // outputTimestampType), which has no min/max statistics.
+              // geo_part LEADS the sort: the
               // partitioned writer requires ordering by the partition
               // column, and a sort that doesn't satisfy it as a prefix
               // gets a SECOND planner-inserted sort on geo_part alone —
@@ -132,7 +138,7 @@ class ExploraService(
             ViewBuilder.build(readings, geoExpr(geoIndex, precision), resolution)
               .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
             None)
-      })
+      })).value
 
   /** Partition-level pre-filter: the `geo_part` partitions under the
     * geo probe prefixes (a SUPERSET of the row-level geo predicate,
@@ -293,4 +299,9 @@ object ExploraService {
     * value, taken once from the view's own file index (None in-process).
     */
   private final case class View(df: DataFrame, parts: Option[Map[String, PartitionDirectory]])
+
+  /** Evaluates `build` at most once, on the first `value`. */
+  private final class Once[A](build: => A) {
+    lazy val value: A = build
+  }
 }

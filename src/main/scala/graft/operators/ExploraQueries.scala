@@ -1,8 +1,15 @@
 package graft.operators
 
 import java.time.{Instant, ZoneOffset, ZonedDateTime}
+
+import scala.collection.immutable.HashSet
+
+import graft.functions.TimestampParam
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shim
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The reference's two query classes over the materialized views, plus
   * the interval→resolution planning table.
@@ -19,6 +26,15 @@ import org.apache.spark.sql.functions._
   * partial/final HashAggregate IS the merge. Time range convention is
   * standardized to half-open [from, to) (the reference's RocksDB range
   * scan is end-inclusive despite its docs — SURVEY §3.2).
+  *
+  * Probe values reach the generated code by reference, never as text.
+  * Spark's codegen cache keys on the generated Java source, and Spark
+  * writes long and timestamp literals into that source (`<micros>L`),
+  * while strings and `InSet` sets go through `ctx.addReferenceObj`.
+  * So the `ts` bounds are [[graft.functions.TimestampParam]]s and the
+  * geo predicates are one `InSet` whatever the list length: two GETs
+  * of one shape that differ only in their time, cells or box plan the
+  * same source, and the second one compiles nothing.
   */
 object ExploraQueries {
 
@@ -103,8 +119,8 @@ object ExploraQueries {
       to: Instant): DataFrame =
     view
       .filter(col("metric") === metric && geoPred)
-      .filter(col("ts") >= timestamp_seconds(lit(from.getEpochSecond)) &&
-        col("ts") < timestamp_seconds(lit(to.getEpochSecond)))
+      .filter(col("ts") >= TimestampParam.seconds(from.getEpochSecond) &&
+        col("ts") < TimestampParam.seconds(to.getEpochSecond))
       .groupBy(col("ts"))
       .agg(sum(col("cnt")).as("cnt"), sum(col("sum_val")).as("sum_val"))
       .withColumn("avg_val", col("sum_val") / col("cnt"))
@@ -141,7 +157,7 @@ object ExploraQueries {
     val t = truncateTs(ts, resolution)
     view
       .filter(col("metric") === metric && geoPred)
-      .filter(col("ts") === timestamp_seconds(lit(t.getEpochSecond)))
+      .filter(col("ts") === TimestampParam.seconds(t.getEpochSecond))
       .groupBy(col("geo"))
       .agg(sum(col("cnt")).as("cnt"), sum(col("sum_val")).as("sum_val"))
       .withColumn("avg_val", col("sum_val") / col("cnt"))
@@ -150,15 +166,43 @@ object ExploraQueries {
   }
 
   /** Spatial predicate from an exact cell list (quadkey cover at view
-    * zoom, or geohash list at view precision).
+    * zoom, or geohash list at view precision): `geo IN cells` as one
+    * `InSet`, which the file source still receives as a pushed `In`.
     */
-  def cellsPredicate(cells: Seq[String]): Column =
-    col("geo").isin(cells: _*)
+  def cellsPredicate(cells: Seq[String]): Column = inSet(col("geo"), cells)
 
   /** Spatial predicate from coarser prefixes (geohashing mode): the
     * pushdown-friendly replacement for the reference's exponential
     * extension enumeration (QueryingController.java:269-271).
+    *
+    * `substring(geo, 1, len) IN prefixes`, ANDed with the string range
+    * `[min prefix, successor of the max prefix)` on `geo` — the part
+    * the file source can push, so row groups of the geo-sorted views
+    * outside the cover are skipped. Every cover producer
+    * (`GeoHash`/`QuadKey.coverPrefixes`, `coverBoundingBox`) emits
+    * prefixes of one length, which is what lets a single `substring`
+    * test them all; a mixed-length list is rejected.
     */
-  def prefixPredicate(prefixes: Seq[String]): Column =
-    prefixes.map(p => col("geo").startsWith(p)).reduce(_ || _)
+  def prefixPredicate(prefixes: Seq[String]): Column = {
+    require(prefixes.nonEmpty, "prefixPredicate needs at least one prefix")
+    val len = prefixes.head.length
+    require(prefixes.forall(_.length == len),
+      s"prefixes must share one length, got lengths ${prefixes.map(_.length).distinct.sorted.mkString(",")}")
+    // ASCII keys sort the same as Java strings and as Spark's UTF-8 bytes
+    require(prefixes.forall(_.forall(_ < 0x7f)), "prefixes must be ASCII geo keys")
+    val geo = col("geo")
+    val lower = geo >= prefixes.min
+    val max = prefixes.max
+    // every key under the largest prefix sorts below it with its last
+    // character bumped; "" (the world cover) has no upper bound
+    val range = if (len == 0) lower else lower && geo < max.init + (max.last + 1).toChar
+    range && inSet(substring(geo, 1, len), prefixes)
+  }
+
+  /** `e IN values` as one `InSet`. Always a `HashSet`: the generated
+    * code casts the set to its runtime class, and Scala's own sets of
+    * up to four elements are classes of their own (`Set1`…`Set4`).
+    */
+  private def inSet(e: Column, values: Seq[String]): Column =
+    Shim.column(InSet(Shim.expression(e), HashSet.from[Any](values.map(UTF8String.fromString))))
 }

@@ -4,13 +4,16 @@ import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 
 import graft.api.{ExploraService, HistoryParams, SnapshotParams}
 import graft.functions.GeoFunctions
+import graft.geo.{GeoHash, QuadKey}
+import graft.operators.{ExploraQueries, ViewBuilder}
 import graft.sources.SensorGrid
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.{col, lit, round, substring, sum, timestamp_seconds}
 import org.apache.spark.sql.types.StringType
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -257,6 +260,90 @@ class ExploraServiceSpec extends AnyFunSuite {
 
   test("one-split probes return data (the equalities above are not vacuous)") {
     for ((name, probe) <- oneSplitProbes) assert(probe(svc).collect().nonEmpty, name)
+  }
+
+  /** A probe planned in the forms the service used before its values
+    * went to the generated code by reference: `ts` bounds as timestamp
+    * literals, cells as `isin`, a cover as a `startsWith` OR-chain —
+    * over the same view, rebuilt from the store's readings.
+    */
+  private def literalView(geoIndex: String, precision: Int, resolution: String): DataFrame =
+    ViewBuilder.build(
+      storeReadings,
+      substring(col(if (geoIndex == "quadtiling") "qk14" else "gh12"), 1, precision),
+      resolution)
+
+  private def literalSnapshot(p: SnapshotParams): Array[Row] = {
+    val cover =
+      if (p.geoIndex == "quadtiling") QuadKey.coverPrefixes(p.north, p.west, p.south, p.east, p.precision)
+      else GeoHash.coverPrefixes(p.north, p.west, p.south, p.east, p.precision)
+    val t = ExploraQueries.truncateTs(java.time.Instant.ofEpochMilli(p.tsMs), p.resolution)
+    literalView(p.geoIndex, p.precision, p.resolution)
+      .filter(col("metric") === p.metricId && cover.map(col("geo").startsWith(_)).reduce(_ || _))
+      .filter(col("ts") === timestamp_seconds(lit(t.getEpochSecond)))
+      .groupBy(col("geo"))
+      .agg(sum(col("cnt")).as("cnt"), sum(col("sum_val")).as("sum_val"))
+      .withColumn("avg_val", col("sum_val") / col("cnt"))
+      .select(col("geo"), round(col(ExploraQueries.aggColumn(p.aggregate)), 6))
+      .orderBy(col("geo"))
+      .collect()
+  }
+
+  private def literalHistory(p: HistoryParams): Array[Row] =
+    literalView("geohashing", p.precision, p.resolution.get)
+      .filter(col("metric") === p.metricId && col("geo").isin(p.geohashes: _*))
+      .filter(col("ts") >= timestamp_seconds(lit(Math.floorDiv(p.fromMs.get, 1000L))) &&
+        col("ts") < timestamp_seconds(lit(Math.floorDiv(p.toMs, 1000L))))
+      .groupBy(col("ts"))
+      .agg(sum(col("cnt")).as("cnt"), sum(col("sum_val")).as("sum_val"))
+      .withColumn("avg_val", col("sum_val") / col("cnt"))
+      .select(col("ts").cast("long"), round(col(ExploraQueries.aggColumn(p.aggregate)), 6))
+      .orderBy(col("ts"))
+      .collect()
+
+  test("a repeated GET shape compiles nothing: a new ts, window, cell list or box reuses the generated code") {
+    val day = 86400000L
+    val ghCover = antwerpBox.copy(aggregate = "avg")
+    val quadCover = antwerpBox.copy(aggregate = "sum", precision = 14, geoIndex = "quadtiling")
+    val ghRerun = ghCover.copy(tsMs = snapTs + 2 * day, west = 4.36, east = 4.55)
+    val quadRerun = quadCover.copy(tsMs = snapTs - day, west = 4.33, east = 4.48)
+    val histRerun = januaryHistory.copy(
+      geohashes = gh6.drop(2).take(20), fromMs = Some(from + 3 * day), toMs = to - 2 * day)
+    // a rerun keeps its cover's shape (one prefix length) but not its list
+    for ((a, b) <- Seq(ghCover -> ghRerun, quadCover -> quadRerun)) {
+      val Seq(ca, cb) = Seq(a, b).map(p =>
+        if (p.geoIndex == "quadtiling") QuadKey.coverPrefixes(p.north, p.west, p.south, p.east, p.precision)
+        else GeoHash.coverPrefixes(p.north, p.west, p.south, p.east, p.precision))
+      assert(ca !== cb)
+      assert((ca ++ cb).map(_.length).distinct.size === 1)
+    }
+    assert(GeoHash.coverPrefixes(51.31, 4.31, 51.17, 4.50, 6).head.length < 6,
+      "the geohash box should take the coarsened prefix cover")
+
+    disk2.snapshot(ghCover).collect()
+    disk2.snapshot(quadCover).collect()
+    disk2.history(januaryHistory).collect()
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val got = Seq(
+      "geohash prefix-cover snapshot" -> disk2.snapshot(ghRerun).collect(),
+      "quadtiling exact-cover snapshot" -> disk2.snapshot(quadRerun).collect(),
+      "history" -> disk2.history(histRerun).collect())
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(compiled === 0, s"a repeated GET shape compiled $compiled classes")
+
+    val want = Seq(literalSnapshot(ghRerun), literalSnapshot(quadRerun), literalHistory(histRerun))
+    got.zip(want).foreach { case ((name, rows), w) =>
+      assert(w.nonEmpty, s"$name: the rerun selects no rows, so the equality shows nothing")
+      assertSameRows(rows, w, name)
+    }
+  }
+
+  test("a prefix-cover snapshot pushes its geo range to the file source") {
+    assert(GeoHash.coverPrefixes(51.31, 4.31, 51.17, 4.50, 6).head.length < 6)
+    val df = disk2.snapshot(antwerpBox)
+    assert(df.collect().nonEmpty)
+    val pushed = scansOf(df).head.metadata.getOrElse("PushedFilters", "")
+    assert(pushed.contains("GreaterThanOrEqual(geo,") && pushed.contains("LessThan(geo,"), pushed)
   }
 
   test("disk-backed view store: a probe spanning several input splits keeps its exchanges") {

@@ -4,6 +4,7 @@ import java.time.Instant
 
 import graft.operators.{ExploraQueries, ViewBuilder}
 import graft.sources.SensorGrid
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -50,6 +51,46 @@ class ExploraSpec extends AnyFunSuite {
         col("ts") < timestamp_seconds(lit(to.getEpochSecond)))
       .count()
     assert(total === direct)
+  }
+
+  /** Geo keys shorter than, equal to and longer than the prefixes
+    * below, a null and the empty key; geohash and quadkey alphabets,
+    * quadkeys with leading zeros. One partition that is not a local
+    * relation, so the predicates run in generated code, as in a probe.
+    */
+  private lazy val geos = {
+    import spark.implicits._
+    Seq("u", "u1", "u15", "u155", "u1555j", "u156", "u15z", "u16", "u2", "v", "", "0", "00",
+      "02", "03", "0320", "03201", "0321", "033", "1", "12", "3", null)
+      .toDF("geo").repartition(1)
+  }
+
+  private def assertAgree(got: Column, want: Column, clue: String): Unit =
+    geos.select(col("geo"), got.as("got"), want.as("want")).collect().foreach { r =>
+      assert(r.get(1) == r.get(2), s"$clue: geo=${r.get(0)} got ${r.get(1)}, want ${r.get(2)}")
+    }
+
+  test("prefixPredicate equals the startsWith OR-chain, world cover and leading zeros included") {
+    val covers = Seq(Seq("u15"), Seq("u16", "u15"), Seq("u155", "u15z"), Seq("u"), Seq(""),
+      Seq("03", "00", "02"), Seq("0320"), Seq("0", "1", "3"))
+    for (ps <- covers)
+      assertAgree(
+        ExploraQueries.prefixPredicate(ps),
+        ps.map(p => col("geo").startsWith(p)).reduce(_ || _),
+        ps.mkString("[", ",", "]"))
+  }
+
+  test("cellsPredicate equals isin, the empty list included") {
+    for (cells <- Seq(Nil, Seq("u155"), Seq("u1555j", "0320", "03", "x")))
+      assertAgree(
+        ExploraQueries.cellsPredicate(cells), col("geo").isin(cells: _*), cells.mkString("[", ",", "]"))
+  }
+
+  test("prefixPredicate rejects a mixed-length, empty or non-ASCII prefix list") {
+    intercept[IllegalArgumentException](ExploraQueries.prefixPredicate(Seq("u1", "u15")))
+    intercept[IllegalArgumentException](ExploraQueries.prefixPredicate(Seq("", "0")))
+    intercept[IllegalArgumentException](ExploraQueries.prefixPredicate(Nil))
+    intercept[IllegalArgumentException](ExploraQueries.prefixPredicate(Seq("u\u00e9")))
   }
 
   test("truncateTS matches reference semantics incl. calendar month") {

@@ -228,6 +228,56 @@ class HttpFacadeSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally server.stop()
   }
 
+  test("concurrent first GETs of an unbuilt disk view build and write it once") {
+    val store = java.nio.file.Files.createTempDirectory("graft-cold-store").toString
+    val cold = new ExploraService(SensorGrid.readings(spark, Sf0001), viewStore = Some(store))
+    val server = new ExploraHttpServer(cold)
+    val coldBase = s"http://127.0.0.1:${server.start()}"
+    val sc = spark.sparkContext
+    // view writes into this store; events arrive in order, so once the
+    // marker job's start is seen every write before it has been counted
+    val writes = new java.util.concurrent.atomic.AtomicInteger()
+    val marker = s"cold-store-marker-${java.util.UUID.randomUUID()}"
+    val markerDone = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+            if s.physicalPlanDescription.contains("InsertIntoHadoopFsRelationCommand") &&
+              s.physicalPlanDescription.contains(store) =>
+          writes.incrementAndGet()
+        case _ =>
+      }
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker))
+          markerDone.countDown()
+    }
+    sc.addSparkListener(listener)
+    val path = s"/api/airquality/signup/aggregate/avg/snapshot?ts=$snapTsMs" +
+      "&res=day&gh_precision=6&bbox=51.31,4.31,51.17,4.50"
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      val go = new java.util.concurrent.CountDownLatch(1)
+      val futures = (1 to 8).map { _ =>
+        pool.submit(new java.util.concurrent.Callable[(Int, String)] {
+          def call(): (Int, String) = { go.await(); getRaw(coldBase, path) }
+        })
+      }
+      go.countDown()
+      val results = futures.map(_.get(180, java.util.concurrent.TimeUnit.SECONDS))
+      assert(results.map(_._1).distinct === Seq(200), results.map(_._1))
+      assert(results.map(_._2).distinct.size === 1, "concurrent cold GETs returned different bodies")
+      sc.setJobGroup(marker, "listener flush")
+      sc.parallelize(Seq(1), 1).count()
+      assert(markerDone.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(writes.get === 1, s"the view was written ${writes.get} times")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+      pool.shutdown()
+      server.stop()
+    }
+  }
+
   test("concurrent serving: 200 GETs at concurrency 10 return one consistent envelope (sim_api_load.sh shape)") {
     // the reference's load protocol (sim_api_load.sh:1-5): 200 identical
     // snapshot GETs fanned out 10-wide against ONE server. Every
