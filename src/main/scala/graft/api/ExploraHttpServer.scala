@@ -6,7 +6,7 @@ import java.util.concurrent.Executors
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 
 /** The reference's REST entry point, re-expressed over the library
   * facade: a JDK `com.sun.net.httpserver` listener (no extra
@@ -171,9 +171,9 @@ class ExploraHttpServer(service: ExploraService, requestedPort: Int = 0) {
     try {
       if (local) {
         // Map<ts, Aggregate{count,sum,avg}> (QueryingService.java:258-261)
-        respond(ex, 200, localJson(service.historyFull(params).collect()))
+        respond(ex, 200, localJson(labelled("history", service.historyFull(params))))
       } else {
-        val rows = service.history(params).collect()
+        val rows = labelled("history", service.history(params))
         respond(ex, 200, messageJson(
           columns = Seq("timestamp", agg),
           data = rows.map(r => Seq[Any](r.get(0), r.get(1))),
@@ -238,9 +238,9 @@ class ExploraHttpServer(service: ExploraService, requestedPort: Int = 0) {
 
     try {
       if (local) {
-        respond(ex, 200, localJson(service.snapshotFull(params).collect()))
+        respond(ex, 200, localJson(labelled("snapshot", service.snapshotFull(params))))
       } else {
-        val rows = service.snapshot(params).collect()
+        val rows = labelled("snapshot", service.snapshot(params))
         respond(ex, 200, messageJson(
           columns = Seq("geohash", agg),
           data = rows.map(r => Seq[Any](r.get(0), r.get(1))),
@@ -250,6 +250,18 @@ class ExploraHttpServer(service: ExploraService, requestedPort: Int = 0) {
       case e: IllegalArgumentException =>
         respond(ex, 400, errorJson(s"[getAirQualitySnapshot] ${e.getMessage}", 400))
     }
+  }
+
+  /** `df.collect()` under the job description `explora:<route>`, so a
+    * listener or the UI can tell a GET's job from others. The handler
+    * threads are pooled and a local property stays with its thread, so
+    * the description is cleared again whatever happens.
+    */
+  private def labelled(route: String, df: DataFrame): Array[Row] = {
+    val sc = df.sparkSession.sparkContext
+    sc.setJobDescription(s"explora:$route")
+    try df.collect()
+    finally sc.setJobDescription(null)
   }
 
   // ---- envelopes -----------------------------------------------------

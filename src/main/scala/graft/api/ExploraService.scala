@@ -2,13 +2,19 @@ package graft.api
 
 import java.time.Instant
 
+import graft.functions.{Slot, TimestampParam}
 import graft.geo.{GeoHash, QuadKey}
 import graft.operators.{ExploraQueries, QueryValidation, ViewBuilder}
+import graft.operators.ExploraQueries.{History, Route, Snapshot}
 import graft.sources.Tables
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.datasources.{
   HadoopFsRelation, LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shim
+import org.apache.spark.sql.types.{DataType, StringType, TimestampType}
 
 /** The reference's query-service surface as a library API: the same
   * parameters and routing as the REST facade
@@ -45,12 +51,13 @@ final case class SnapshotParams(
     geoIndex: String = "quadtiling")
 
 /** @param viewStore when set, views are MATERIALIZED to parquet under
-  *   this path, partitioned by the first `geoPartLen` characters of the
-  *   geo key (`geo_part`) — the 100 TB layout: a snapshot/history probe
-  *   carries a `geo_part` predicate, so the scan prunes to the probed
-  *   partitions at the FILE level (PartitionFilters, asserted in
-  *   ExploraServiceSpec) instead of reading the whole view. `geo_part`
-  *   is read as the string it was written as: inference would type
+  *   this path, partitioned by `metric` and then by the first
+  *   `geoPartLen` characters of the geo key (`geo_part`) — the 100 TB
+  *   layout: a probe names one metric and carries a `geo_part`
+  *   predicate, so the scan prunes to that metric's probed partitions
+  *   at the FILE level (PartitionFilters, asserted in
+  *   ExploraServiceSpec) instead of reading the whole view. Both are
+  *   read as the strings they were written as: inference would type
   *   quadtiling's all-digit directories (`00`…`33`) as integers, and a
   *   prefix such as `"03"` would then compare against `3`.
   *
@@ -70,18 +77,36 @@ final case class SnapshotParams(
   *
   *   When None, views are kept as in-process persisted DataFrames
   *   (harness mode), also unchanged by the one-split rule.
+  *
+  * Each request binds its values into a plan analyzed once for its
+  * shape. The shape is what fixes the plan: the view (geo index,
+  * precision, resolution, `src`), the route, the aggregate column (or
+  * the full Aggregate), the cover kind — an exact cell list, or
+  * prefixes of one length, the world cover `""` being length 0 — and
+  * whether the slice is one split; disk or in-process is fixed per
+  * service. Everything else is a bound value: the metric, the `ts`
+  * bounds, the cells or prefixes, the prefix range bounds and the
+  * selected `geo_part`s. The first request of a shape runs
+  * [[ExploraQueries.query]] over `graft.functions.Slot`s and keeps its
+  * analyzed plan; each request then replaces the slots with its own
+  * values and plans the result without analyzing it again. A view
+  * store is read once (its file listing is kept in `View.parts`), so
+  * a prepared plan never needs to outlive it; anything that rewrites
+  * a served view must drop both.
   */
 class ExploraService(
     readings: DataFrame,
     viewStore: Option[String] = None,
     geoPartLen: Int = 2) {
-  import ExploraService.{Once, View}
+  import ExploraService.{Cells, Cover, Once, Prefixes, Shape, View, ViewKey}
 
   // TrieMap.getOrElseUpdate may evaluate its default in every thread
   // that races on a key; caching a once-only holder means only the
   // holder that won the insert builds — and writes — the view
-  private val viewCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, String), Once[View]]
+  private val viewCache = scala.collection.concurrent.TrieMap.empty[ViewKey, Once[View]]
+
+  // one analyzed plan per shape, held the same way; shapes are finite
+  private val plans = scala.collection.concurrent.TrieMap.empty[Shape, Once[LogicalPlan]]
 
   private def geoExpr(geoIndex: String, precision: Int) = geoIndex match {
     // prefix property: substring of a finer key IS the coarser key,
@@ -90,11 +115,12 @@ class ExploraService(
     case _            => substring(col("gh12"), 1, precision)
   }
 
-  private def view(geoIndex: String, precision: Int, resolution: String): View =
+  private def view(key: ViewKey): View =
     viewCache.getOrElseUpdate(
-      (geoIndex, precision, resolution),
-      new Once(viewStore match {
+      key,
+      new Once(if (key.raw) View(rawAsView(key.precision, key.resolution), None) else viewStore match {
         case Some(base) =>
+          val ViewKey(geoIndex, precision, resolution, _) = key
           val spark = readings.sparkSession
           val path = s"$base/${geoIndex}_p${precision}_$resolution"
           val p = new org.apache.hadoop.fs.Path(path)
@@ -108,72 +134,115 @@ class ExploraService(
               // probe's geo predicate (a cell IN-list, or a prefix
               // cover's string range): a probe then skips whole row
               // groups, not just whole partitions — the layout that
-              // matters once a geo_part partition holds many row groups
+              // matters once a partition holds many row groups
               // at 100 TB. `ts` follows in the sort but skips nothing:
               // it is written as INT96 (Spark's default
               // outputTimestampType), which has no min/max statistics.
-              // geo_part LEADS the sort: the
+              // The partition columns LEAD the sort: the
               // partitioned writer requires ordering by the partition
-              // column, and a sort that doesn't satisfy it as a prefix
-              // gets a SECOND planner-inserted sort on geo_part alone —
+              // columns, and a sort that doesn't satisfy it as a prefix
+              // gets a SECOND planner-inserted sort on them alone —
               // wasted work, and a spill-merge there interleaves equal
               // keys and silently destroys the (geo, ts) clustering
-              .sortWithinPartitions(col("geo_part"), col("geo"), col("ts"))
+              .sortWithinPartitions(col("metric"), col("geo_part"), col("geo"), col("ts"))
               .write
               .mode("overwrite")
-              .partitionBy("geo_part")
+              .partitionBy("metric", "geo_part")
               .parquet(path)
-          // the written schema, geo_part a string (class scaladoc)
+          // the written schema, metric and geo_part strings (class scaladoc)
           val df = spark.read.schema(built.schema).parquet(path)
           val index = df.queryExecution.analyzed.collectFirst {
             case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r.location
           }.get
-          // a null geo_part (no geo key) lies under no probe prefix
-          val parts = index.listFiles(Nil, Nil).collect {
-            case d if !d.values.isNullAt(0) => d.values.getString(0) -> d
-          }
-          View(df, Some(parts.toMap))
+          val Seq(m, g) = Seq("metric", "geo_part").map(index.partitionSchema.fieldIndex)
+          // a null geo_part (no geo key) lies under no probe prefix,
+          // and no probe names a null metric
+          val parts = index.listFiles(Nil, Nil).filterNot(d => d.values.isNullAt(m) || d.values.isNullAt(g))
+          View(df, Some(parts.groupBy(_.values.getString(m)).map { case (metric, ds) =>
+            metric -> ds.map(d => d.values.getString(g) -> d).toMap
+          }))
         case None =>
           View(
-            ViewBuilder.build(readings, geoExpr(geoIndex, precision), resolution)
+            ViewBuilder.build(readings, geoExpr(key.geoIndex, key.precision), key.resolution)
               .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
             None)
       })).value
 
-  /** Partition-level pre-filter: the `geo_part` partitions under the
-    * geo probe prefixes (a SUPERSET of the row-level geo predicate,
-    * which still applies afterwards), coalesced to one partition when
-    * their files are one input split (class scaladoc). No-op for
-    * in-process views.
+  /** Plan one request: bind its values into the analyzed plan of its
+    * shape (class scaladoc). `times` are the `ts` bounds: (from, to)
+    * for a history, the truncated instant for a snapshot. On a disk
+    * view the slice read is `metric`'s `geo_part` partitions under the
+    * cover (a SUPERSET of the row-level geo predicate, which still
+    * applies), coalesced to one partition when their files are one
+    * input split.
     */
-  private def partPruned(v: View, prefixes: Seq[String]): DataFrame =
-    v.parts match {
-      case Some(parts) if prefixes.nonEmpty =>
-        // a prefix coarser than the partition key selects every partition under it
-        val qs = prefixes.map(_.take(geoPartLen)).distinct
-        val selected = parts.filter { case (part, _) => qs.exists(part.startsWith) }
-        val pruned = v.df.filter(col("geo_part").isin(selected.keys.toSeq: _*))
-        if (Tables.splitCount(readings.sparkSession, selected.values.toSeq) <= 1) pruned.coalesce(1)
-        else pruned
-      case _ => v.df
+  private def probe(
+      key: ViewKey,
+      route: Route,
+      agg: Option[String],
+      metric: String,
+      times: Seq[Instant],
+      cover: Cover): DataFrame = {
+    val v = view(key)
+    val (keys, prefixLen, bounds) = cover match {
+      case Cells(cells) => (cells, None, Map.empty[String, Expression])
+      case Prefixes(prefixes) =>
+        val (lower, upper) = ExploraQueries.prefixRange(prefixes)
+        (prefixes, Some(prefixes.head.length),
+          Map("lower" -> Literal(lower)) ++ upper.map(u => "upper" -> Literal(u)))
     }
+    val (parts, oneSplit) = v.parts match {
+      case Some(byMetric) =>
+        // a prefix coarser than the partition key selects every partition under it
+        val qs = keys.map(_.take(geoPartLen)).distinct
+        val selected = byMetric.getOrElse(metric, Map.empty).filter { case (part, _) => qs.exists(part.startsWith) }
+        (selected.keys.toSeq, Tables.splitCount(readings.sparkSession, selected.values.toSeq) <= 1)
+      case None => (Nil, false)
+    }
+    val shape = Shape(key, route, agg, prefixLen, oneSplit)
+    val plan = plans.getOrElseUpdate(shape, new Once(prepare(shape, v))).value
+    val values = Map[String, Expression]("metric" -> Literal(metric)) ++ bounds ++
+      tsSlots(route).zip(times.map(t => TimestampParam.ofSecond(t.getEpochSecond)))
+    Shim.analyzedFrame(readings.sparkSession, Slot.bind(plan, values, Map("geo" -> keys, "geo_part" -> parts)))
+  }
+
+  private def tsSlots(route: Route): Seq[String] = route match {
+    case History  => Seq("from", "to")
+    case Snapshot => Seq("at")
+  }
+
+  /** The analyzed plan of [[ExploraQueries.query]] for `shape`, over slots. */
+  private def prepare(shape: Shape, v: View): LogicalPlan = {
+    def slot(name: String, t: DataType): Column = Slot.column(name, t)
+    val source = v.parts match {
+      case Some(_) =>
+        val pruned = v.df.filter(Slot.in(col("geo_part"), "geo_part"))
+        if (shape.oneSplit) pruned.coalesce(1) else pruned
+      case None => v.df
+    }
+    val geoPred = shape.prefixLen match {
+      case None => Slot.in(col("geo"), "geo")
+      case Some(len) =>
+        ExploraQueries.prefixPredicate(
+          len, slot("lower", StringType), Option.when(len > 0)(slot("upper", StringType)), Slot.in(_, "geo"))
+    }
+    val tsPred = tsSlots(shape.route).map(slot(_, TimestampType)) match {
+      case Seq(from, to) => ExploraQueries.during(from, to)
+      case Seq(at)       => ExploraQueries.at(at)
+    }
+    ExploraQueries.query(source, shape.route, slot("metric", StringType), geoPred, tsPred, shape.agg)
+      .queryExecution.analyzed
+  }
 
   /** GET …/history equivalent (QueryingService.java:38-135). */
-  def history(p: HistoryParams): DataFrame = {
-    val (source, geoPred, from, to) = resolveHistory(p)
-    ExploraQueries.history(source, p.metricId, geoPred, from, to, p.aggregate)
-  }
+  def history(p: HistoryParams): DataFrame = historyProbe(p, Some(p.aggregate))
 
   /** [[history]] with the full Aggregate per timestamp — the
     * `local=true` payload shape (QueryingService.java:258-261).
     */
-  def historyFull(p: HistoryParams): DataFrame = {
-    val (source, geoPred, from, to) = resolveHistory(p)
-    ExploraQueries.historyAll(source, p.metricId, geoPred, from, to)
-  }
+  def historyFull(p: HistoryParams): DataFrame = historyProbe(p, None)
 
-  private def resolveHistory(
-      p: HistoryParams): (DataFrame, org.apache.spark.sql.Column, Instant, Instant) = {
+  private def historyProbe(p: HistoryParams, agg: Option[String]): DataFrame = {
     QueryValidation.validateHistory(
       p.geohashes,
       p.precision,
@@ -188,37 +257,31 @@ class ExploraService(
       // from-in-future text where the reference reports from≥to
       // (ADVICE r12)
       nowMs = System.currentTimeMillis())
-    val res = p.resolution.getOrElse(ExploraQueries.IntervalResolution(p.interval.get))
+    // the branch validation dispatched on: an invalid `res` beside a
+    // valid `interval` answers from the interval's view, never from a
+    // view named by the invalid value
+    val res = QueryValidation.historyBranch(p.resolution, p.interval).get
+      .fold(identity, ExploraQueries.IntervalResolution)
     val to = Instant.ofEpochMilli(p.toMs)
     val from = p.fromMs
       .map(Instant.ofEpochMilli)
       .getOrElse(ExploraQueries.fromInstant(to, p.interval.getOrElse("5min")))
-    val geoPred = ExploraQueries.cellsPredicate(p.geohashes)
-    val source =
-      if (p.src == "raw") rawAsView(p.precision, res) // reference's src=raw branch (dead there, real here)
-      else partPruned(view("geohashing", p.precision, res), p.geohashes)
-    (source, geoPred, from, to)
+    // src=raw: the reference's branch, dead there, real here
+    probe(ViewKey("geohashing", p.precision, res, raw = p.src == "raw"), History, agg,
+      p.metricId, Seq(from, to), Cells(p.geohashes))
   }
 
   /** GET …/snapshot equivalent (QueryingService.java:137-230). */
-  def snapshot(p: SnapshotParams): DataFrame = {
-    val (source, geoPred, ts) = resolveSnapshot(p)
-    ExploraQueries.snapshot(source, p.metricId, geoPred, ts, p.resolution, p.aggregate)
-  }
+  def snapshot(p: SnapshotParams): DataFrame = snapshotProbe(p, Some(p.aggregate))
 
   /** [[snapshot]] with the full Aggregate per cell — the `local=true`
     * payload shape (QueryingService.java:258-261).
     */
-  def snapshotFull(p: SnapshotParams): DataFrame = {
-    val (source, geoPred, ts) = resolveSnapshot(p)
-    ExploraQueries.snapshotAll(source, p.metricId, geoPred, ts, p.resolution)
-  }
+  def snapshotFull(p: SnapshotParams): DataFrame = snapshotProbe(p, None)
 
-  private def resolveSnapshot(
-      p: SnapshotParams): (DataFrame, org.apache.spark.sql.Column, Instant) = {
+  private def snapshotProbe(p: SnapshotParams, agg: Option[String]): DataFrame = {
     QueryValidation.validateSnapshot(
       p.tsMs, p.north, p.west, p.south, p.east, p.precision, p.aggregate, p.resolution)
-    val ts = Instant.ofEpochMilli(p.tsMs)
     // bounded prefix covers work for ANY bbox size: full-length prefixes
     // are exact cell matches, auto-coarsened prefixes are the pushable
     // superset predicate (replaces the reference's 32^k enumeration)
@@ -228,11 +291,19 @@ class ExploraService(
       case _ =>
         GeoHash.coverPrefixes(p.north, p.west, p.south, p.east, p.precision)
     }
-    (
-      partPruned(view(p.geoIndex, p.precision, p.resolution), prefixes),
-      ExploraQueries.prefixPredicate(prefixes),
-      ts)
+    snapshotAt(p.geoIndex, p.precision, p.resolution, agg, p.metricId, p.tsMs, Prefixes(prefixes))
   }
+
+  private def snapshotAt(
+      geoIndex: String,
+      precision: Int,
+      resolution: String,
+      agg: Option[String],
+      metric: String,
+      tsMs: Long,
+      cover: Cover): DataFrame =
+    probe(ViewKey(geoIndex, precision, resolution), Snapshot, agg, metric,
+      Seq(ExploraQueries.truncateTs(Instant.ofEpochMilli(tsMs), resolution)), cover)
 
   /** Polygon-region snapshot: the [[snapshot]] routing with an
     * arbitrary boundary instead of a bbox — exact-precision cell
@@ -261,28 +332,19 @@ class ExploraService(
     // bbox prefix cover (the same over-selection the bbox snapshot and
     // the reference's geohash mode accept) instead of throwing. ONLY
     // the cap condition degrades — any other argument error propagates
-    val (pred, prefixes) =
-      try {
-        val cells = geoIndex match {
-          case "quadtiling" => QuadKey.coverPolygon(polygon, precision)
-          case _            => GeoHash.coverPolygon(polygon, precision)
-        }
-        (ExploraQueries.cellsPredicate(cells), cells)
-      } catch {
+    val cover =
+      try Cells(geoIndex match {
+        case "quadtiling" => QuadKey.coverPolygon(polygon, precision)
+        case _            => GeoHash.coverPolygon(polygon, precision)
+      })
+      catch {
         case _: graft.geo.CoverTooLargeException =>
-          val p = geoIndex match {
+          Prefixes(geoIndex match {
             case "quadtiling" => QuadKey.coverPrefixes(latMax, lonMin, latMin, lonMax, precision)
             case _            => GeoHash.coverPrefixes(latMax, lonMin, latMin, lonMax, precision)
-          }
-          (ExploraQueries.prefixPredicate(p), p)
+          })
       }
-    ExploraQueries.snapshot(
-      partPruned(view(geoIndex, precision, resolution), prefixes),
-      metricId,
-      pred,
-      Instant.ofEpochMilli(tsMs),
-      resolution,
-      aggregate)
+    snapshotAt(geoIndex, precision, resolution, Some(aggregate), metricId, tsMs, cover)
   }
 
   /** `src=raw`: aggregate straight from unaggregated readings at query
@@ -295,10 +357,31 @@ class ExploraService(
 
 object ExploraService {
 
-  /** A cached view. `parts` lists a disk view's files by `geo_part`
-    * value, taken once from the view's own file index (None in-process).
+  /** A view: (geo index, precision, resolution), read from the raw
+    * readings at query time when `raw`.
     */
-  private final case class View(df: DataFrame, parts: Option[Map[String, PartitionDirectory]])
+  private final case class ViewKey(geoIndex: String, precision: Int, resolution: String, raw: Boolean = false)
+
+  /** A cached view. `parts` lists a disk view's files by `metric`, then
+    * by `geo_part` value, taken once from the view's own file index
+    * (None in-process and raw).
+    */
+  private final case class View(df: DataFrame, parts: Option[Map[String, Map[String, PartitionDirectory]]])
+
+  /** A request's spatial cover: exact cells, or prefixes of one length. */
+  private sealed trait Cover
+  private final case class Cells(cells: Seq[String]) extends Cover
+  private final case class Prefixes(prefixes: Seq[String]) extends Cover
+
+  /** What fixes a prepared plan (class scaladoc); `prefixLen` is None
+    * for an exact cell cover.
+    */
+  private final case class Shape(
+      view: ViewKey,
+      route: Route,
+      agg: Option[String],
+      prefixLen: Option[Int],
+      oneSplit: Boolean)
 
   /** Evaluates `build` at most once, on the first `value`. */
   private final class Once[A](build: => A) {

@@ -1,0 +1,53 @@
+package graft.functions
+
+import scala.collection.immutable.HashSet
+
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{Expression, In, InSet, LeafExpression, Unevaluable}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.graftshim.Shim
+import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
+
+/** A named hole in a plan that is analyzed once and run many times with
+  * different values: a typed leaf that analysis accepts as resolved and
+  * that nothing can evaluate, so a plan still holding one cannot run.
+  * [[Slot.bind]] replaces every slot of an analyzed plan with a value.
+  */
+case class Slot(name: String, dataType: DataType) extends LeafExpression with Unevaluable {
+  override def nullable: Boolean = false
+  override def toString: String = s"slot($name)"
+}
+
+object Slot {
+
+  /** A scalar slot as a Column. */
+  def column(name: String, dataType: DataType): Column = Shim.column(Slot(name, dataType))
+
+  /** `e IN <the string set bound to name>`. */
+  def in(e: Column, name: String): Column =
+    Shim.column(In(Shim.expression(e), Seq(Slot(name, StringType))))
+
+  /** `plan` with each scalar slot replaced by its expression in
+    * `values`, and each set slot `e IN slot` by one [[stringSet]] over
+    * its strings in `sets`. Only the nodes on the way to a slot are
+    * copied; every other subtree, the view's relation included, is
+    * shared with `plan`.
+    */
+  def bind(
+      plan: LogicalPlan,
+      values: Map[String, Expression],
+      sets: Map[String, Seq[String]]): LogicalPlan =
+    plan.transformAllExpressions {
+      case In(e, Seq(Slot(n, _))) => stringSet(e, sets(n))
+      case Slot(n, _)             => values(n)
+    }
+
+  /** `e IN values` as one `InSet`, which the file source still receives
+    * as a pushed `In`. Always a `HashSet`: the generated code casts the
+    * set to its runtime class, and Scala's own sets of up to four
+    * elements are classes of their own (`Set1`…`Set4`).
+    */
+  def stringSet(e: Expression, values: Seq[String]): Expression =
+    InSet(e, HashSet.from[Any](values.map(UTF8String.fromString)))
+}

@@ -36,7 +36,10 @@ case class TimestampParam(micros: Long) extends LeafExpression {
 
 object TimestampParam {
 
-  /** The whole second `epochSecond` as a timestamp parameter Column. */
-  def seconds(epochSecond: Long): Column =
-    Shim.column(TimestampParam(Math.multiplyExact(epochSecond, 1000000L)))
+  /** The whole second `epochSecond` as a timestamp parameter. */
+  def ofSecond(epochSecond: Long): TimestampParam =
+    TimestampParam(Math.multiplyExact(epochSecond, 1000000L))
+
+  /** [[ofSecond]] as a Column. */
+  def seconds(epochSecond: Long): Column = Shim.column(ofSecond(epochSecond))
 }

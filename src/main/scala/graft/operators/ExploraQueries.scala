@@ -2,14 +2,10 @@ package graft.operators
 
 import java.time.{Instant, ZoneOffset, ZonedDateTime}
 
-import scala.collection.immutable.HashSet
-
-import graft.functions.TimestampParam
+import graft.functions.{Slot, TimestampParam}
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Shim
-import org.apache.spark.unsafe.types.UTF8String
 
 /** The reference's two query classes over the materialized views, plus
   * the interval→resolution planning table.
@@ -35,6 +31,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * geo predicates are one `InSet` whatever the list length: two GETs
   * of one shape that differ only in their time, cells or box plan the
   * same source, and the second one compiles nothing.
+  *
+  * Shape and bound values: [[query]] is the one body, and what varies
+  * between two requests of one shape enters it as a Column — the
+  * metric, the `ts` bounds, the cells or prefixes of the geo `InSet`
+  * and a prefix cover's range bounds. What stays fixed is the shape:
+  * the route, the aggregate column (or the full Aggregate) and the
+  * cover kind, an exact cell list or prefixes of one length (the world
+  * cover `""` is length 0). [[history]], [[snapshot]] and their `All`
+  * forms pass values; `ExploraService` passes `graft.functions.Slot`s,
+  * so that one analysis of the body serves every request of a shape.
   */
 object ExploraQueries {
 
@@ -89,6 +95,57 @@ object ExploraQueries {
     }).toInstant
   }
 
+  /** What a query groups the probed cells by: one row per view
+    * timestamp (history, keyed `ts_s` in epoch seconds) or one row per
+    * cell (snapshot, keyed `geo`).
+    */
+  sealed abstract class Route(val group: String, val key: String, val keyColumn: Column)
+  case object History extends Route("ts", "ts_s", col("ts").cast("long").as("ts_s"))
+  case object Snapshot extends Route("geo", "geo", col("geo"))
+
+  /** The one query body behind both routes: the view rows of `metric`
+    * that pass `geoPred` and `tsPred`, merged per [[Route]] key in key
+    * order as (key, cnt, sum_val, avg_val), or as (key, <agg column>)
+    * rounded to 6 places when `agg` is set. The reference's
+    * scatter-gather and TreeMap merges (QueryingController.java:123-230)
+    * are this filter + groupBy.
+    *
+    * Every input that varies between two requests of one shape is a
+    * Column: `metric`, the `ts` bounds inside `tsPred` ([[during]],
+    * [[at]]) and the set and range bounds inside `geoPred`
+    * ([[cellsPredicate]], [[prefixPredicate]]). Direct callers pass
+    * values; `ExploraService` passes `graft.functions.Slot`s, analyzes
+    * the body once per shape and binds each request's values into it.
+    */
+  def query(
+      view: DataFrame,
+      route: Route,
+      metric: Column,
+      geoPred: Column,
+      tsPred: Column,
+      agg: Option[String]): DataFrame = {
+    val full = view
+      .filter(col("metric") === metric && geoPred)
+      .filter(tsPred)
+      .groupBy(col(route.group))
+      .agg(sum(col("cnt")).as("cnt"), sum(col("sum_val")).as("sum_val"))
+      .withColumn("avg_val", col("sum_val") / col("cnt"))
+      .select(route.keyColumn, col("cnt"), col("sum_val"), col("avg_val"))
+      .orderBy(col(route.key))
+    agg.fold(full) { a =>
+      val out = aggColumn(a)
+      full.select(col(route.key), round(col(out), 6).as(out))
+    }
+  }
+
+  /** `from <= ts < to`: the half-open window of a history. */
+  def during(from: Column, to: Column): Column = col("ts") >= from && col("ts") < to
+
+  /** `ts = t`: the one view timestamp of a snapshot. */
+  def at(t: Column): Column = col("ts") === t
+
+  private def second(t: Instant): Column = TimestampParam.seconds(t.getEpochSecond)
+
   /** Merge view cells along the spatial axis: one Aggregate per view
     * timestamp (history — QueryingController.java:212-230). `geoPred`
     * is the spatial predicate (IN-list of cells or prefix ranges).
@@ -100,11 +157,8 @@ object ExploraQueries {
       geoPred: Column,
       from: Instant,
       to: Instant,
-      agg: String): DataFrame = {
-    val out = aggColumn(agg)
-    historyAll(view, metric, geoPred, from, to)
-      .select(col("ts_s"), round(col(out), 6).as(out))
-  }
+      agg: String): DataFrame =
+    query(view, History, lit(metric), geoPred, during(second(from), second(to)), Some(agg))
 
   /** [[history]] with the FULL Aggregate per timestamp — (ts_s, cnt,
     * sum_val, avg_val) — the shape the reference serializes in
@@ -117,15 +171,7 @@ object ExploraQueries {
       geoPred: Column,
       from: Instant,
       to: Instant): DataFrame =
-    view
-      .filter(col("metric") === metric && geoPred)
-      .filter(col("ts") >= TimestampParam.seconds(from.getEpochSecond) &&
-        col("ts") < TimestampParam.seconds(to.getEpochSecond))
-      .groupBy(col("ts"))
-      .agg(sum(col("cnt")).as("cnt"), sum(col("sum_val")).as("sum_val"))
-      .withColumn("avg_val", col("sum_val") / col("cnt"))
-      .select(col("ts").cast("long").as("ts_s"), col("cnt"), col("sum_val"), col("avg_val"))
-      .orderBy(col("ts_s"))
+    query(view, History, lit(metric), geoPred, during(second(from), second(to)), None)
 
   /** One Aggregate per spatial cell at a single truncated instant
     * (snapshot — QueryingController.java:232-282). The reference's
@@ -138,11 +184,8 @@ object ExploraQueries {
       geoPred: Column,
       ts: Instant,
       resolution: String,
-      agg: String): DataFrame = {
-    val out = aggColumn(agg)
-    snapshotAll(view, metric, geoPred, ts, resolution)
-      .select(col("geo"), round(col(out), 6).as(out))
-  }
+      agg: String): DataFrame =
+    query(view, Snapshot, lit(metric), geoPred, at(second(truncateTs(ts, resolution))), Some(agg))
 
   /** [[snapshot]] with the FULL Aggregate per cell — (geo, cnt,
     * sum_val, avg_val) — the reference's `local`-mode
@@ -153,17 +196,8 @@ object ExploraQueries {
       metric: String,
       geoPred: Column,
       ts: Instant,
-      resolution: String): DataFrame = {
-    val t = truncateTs(ts, resolution)
-    view
-      .filter(col("metric") === metric && geoPred)
-      .filter(col("ts") === TimestampParam.seconds(t.getEpochSecond))
-      .groupBy(col("geo"))
-      .agg(sum(col("cnt")).as("cnt"), sum(col("sum_val")).as("sum_val"))
-      .withColumn("avg_val", col("sum_val") / col("cnt"))
-      .select(col("geo"), col("cnt"), col("sum_val"), col("avg_val"))
-      .orderBy(col("geo"))
-  }
+      resolution: String): DataFrame =
+    query(view, Snapshot, lit(metric), geoPred, at(second(truncateTs(ts, resolution))), None)
 
   /** Spatial predicate from an exact cell list (quadkey cover at view
     * zoom, or geohash list at view precision): `geo IN cells` as one
@@ -184,25 +218,35 @@ object ExploraQueries {
     * test them all; a mixed-length list is rejected.
     */
   def prefixPredicate(prefixes: Seq[String]): Column = {
+    val (lower, upper) = prefixRange(prefixes)
+    prefixPredicate(prefixes.head.length, lit(lower), upper.map(lit), inSet(_, prefixes))
+  }
+
+  /** [[prefixPredicate]] over Columns: `geo >= lower`, `geo < upper`
+    * unless the cover is the world (`len` 0), and `in` applied to the
+    * keys' `len`-character prefix.
+    */
+  def prefixPredicate(len: Int, lower: Column, upper: Option[Column], in: Column => Column): Column = {
+    val geo = col("geo")
+    val range = upper.fold(geo >= lower)(u => geo >= lower && geo < u)
+    range && in(substring(geo, 1, len))
+  }
+
+  /** The `geo` range of a prefix cover: its least prefix, and its
+    * greatest with the last character bumped — every key under it sorts
+    * below that — or None for the world cover `""`.
+    */
+  def prefixRange(prefixes: Seq[String]): (String, Option[String]) = {
     require(prefixes.nonEmpty, "prefixPredicate needs at least one prefix")
     val len = prefixes.head.length
     require(prefixes.forall(_.length == len),
       s"prefixes must share one length, got lengths ${prefixes.map(_.length).distinct.sorted.mkString(",")}")
     // ASCII keys sort the same as Java strings and as Spark's UTF-8 bytes
     require(prefixes.forall(_.forall(_ < 0x7f)), "prefixes must be ASCII geo keys")
-    val geo = col("geo")
-    val lower = geo >= prefixes.min
     val max = prefixes.max
-    // every key under the largest prefix sorts below it with its last
-    // character bumped; "" (the world cover) has no upper bound
-    val range = if (len == 0) lower else lower && geo < max.init + (max.last + 1).toChar
-    range && inSet(substring(geo, 1, len), prefixes)
+    (prefixes.min, if (len == 0) None else Some(max.init + (max.last + 1).toChar))
   }
 
-  /** `e IN values` as one `InSet`. Always a `HashSet`: the generated
-    * code casts the set to its runtime class, and Scala's own sets of
-    * up to four elements are classes of their own (`Set1`…`Set4`).
-    */
   private def inSet(e: Column, values: Seq[String]): Column =
-    Shim.column(InSet(Shim.expression(e), HashSet.from[Any](values.map(UTF8String.fromString))))
+    Shim.column(Slot.stringSet(Shim.expression(e), values))
 }

@@ -231,9 +231,6 @@ object Pca {
       (dotConstCol(col("embedding"), v) - lit(cj)).as(f"z$j%02d")
     }
 
-  def pcaProject(emb: DataFrame, model: Model, d: Int): DataFrame =
-    emb.select(col("vec_id") +: zCols(model, d): _*)
-
   private def dotDD(a: Array[Double], b: Array[Double]): Double =
     a.indices.foldLeft(0.0)((acc, i) => acc + a(i) * b(i))
 

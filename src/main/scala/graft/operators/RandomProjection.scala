@@ -175,9 +175,6 @@ object RandomProjection {
       .select(col("vec_id"), round(col("sim_raw"), 6).as("sim"))
   }
 
-  def projTopKRerank(embeddings: DataFrame, k: Int): DataFrame =
-    projTopKRerankFor(embeddings, k, Similarity.QueryVec)
-
   // ---- recall certification -------------------------------------------
 
   /** Floors for the dual certificate, measured on the standard panel

@@ -264,16 +264,6 @@ object TextClassifier {
     stop.select(col("doc_id"), round(z, 6).as("z"), (z >= 0.0).as("keep"))
   }
 
-  /** Train on `docs` (the "sample" at test scale), round the weights,
-    * score the same corpus — the composed gate surface for
-    * `classifier_score`.
-    */
-  def trainAndScore(docs: DataFrame, iters: Int, lr: Double): DataFrame = {
-    val feats = labeledFeatures(docs).cache()
-    val w = try trainLogReg(feats, iters, lr) finally feats.unpersist()
-    scoreTable(docs, w)
-  }
-
   /** Gate surface: (term, value·6dp) — the trained weights plus the
     * final mean log-loss, long format like kmeans_centroids.
     */

@@ -1,9 +1,10 @@
 package org.apache.spark.sql.graftshim
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Minimal bridge into `private[sql]` surface, the same technique public
@@ -19,6 +20,14 @@ object Shim {
 
   /** Unwrap a Column back into its Catalyst expression. */
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** The DataFrame of `plan`, an already analyzed plan: it is marked
+    * analyzed, so building the frame runs no analyzer rule over it.
+    */
+  def analyzedFrame(spark: SparkSession, plan: LogicalPlan): DataFrame = {
+    plan.setAnalyzed()
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+  }
 
   /** Register an expression builder under `name` for SQL usage. */
   def registerFunction(

@@ -3,18 +3,21 @@ package graft
 import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 
 import graft.api.{ExploraService, HistoryParams, SnapshotParams}
-import graft.functions.GeoFunctions
+import graft.functions.{GeoFunctions, Slot, TimestampParam}
 import graft.geo.{GeoHash, QuadKey}
 import graft.operators.{ExploraQueries, ViewBuilder}
 import graft.sources.SensorGrid
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.rules.RuleExecutor
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions.{col, lit, round, substring, sum, timestamp_seconds}
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.graftshim.Shim
+import org.apache.spark.sql.types.{StringType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The service facade: same routing as the reference's REST endpoints. */
@@ -202,11 +205,12 @@ class ExploraServiceSpec extends AnyFunSuite {
     assert(scans.nonEmpty, "expected a parquet file scan under the disk-backed service")
     val pf = scans.head.metadata.getOrElse("PartitionFilters", "")
     assert(pf.contains("geo_part"), s"no geo_part partition filter in scan: $pf")
-    // pruning is effective: fewer partition dirs touched than exist
-    val allParts = new java.io.File(s"$tmp/geohashing_p6_day")
+    // pruning is effective: fewer (metric, geo_part) dirs touched than
+    // the probed metric alone has, so geo_part prunes within the metric
+    val allParts = new java.io.File(s"$tmp/geohashing_p6_day/metric=signup")
       .listFiles().count(_.getName.startsWith("geo_part="))
     assert(scans.head.selectedPartitions.partitionCount < allParts,
-      s"probe read all $allParts partitions — no pruning")
+      s"probe read all $allParts signup partitions — no geo_part pruning")
   }
 
   // one disk store per geo_part length, shared by the plan-shape tests:
@@ -346,6 +350,181 @@ class ExploraServiceSpec extends AnyFunSuite {
     assert(pushed.contains("GreaterThanOrEqual(geo,") && pushed.contains("LessThan(geo,"), pushed)
   }
 
+  // ---- prepared plans: one analysis per shape, values bound per request
+
+  private def coverOf(p: SnapshotParams): Seq[String] =
+    if (p.geoIndex == "quadtiling") QuadKey.coverPrefixes(p.north, p.west, p.south, p.east, p.precision)
+    else GeoHash.coverPrefixes(p.north, p.west, p.south, p.east, p.precision)
+
+  private def viewOf(readings: DataFrame, geoIndex: String, precision: Int, resolution: String): DataFrame =
+    ViewBuilder.build(
+      readings, substring(col(if (geoIndex == "quadtiling") "qk14" else "gh12"), 1, precision), resolution)
+
+  /** The direct `ExploraQueries` answers to a request, over its view
+    * rebuilt in process from `readings`.
+    */
+  private def directSnapshot(readings: DataFrame, p: SnapshotParams, full: Boolean): Array[Row] = {
+    val v = viewOf(readings, p.geoIndex, p.precision, p.resolution)
+    val (pred, ts) = (ExploraQueries.prefixPredicate(coverOf(p)), java.time.Instant.ofEpochMilli(p.tsMs))
+    (if (full) ExploraQueries.snapshotAll(v, p.metricId, pred, ts, p.resolution)
+     else ExploraQueries.snapshot(v, p.metricId, pred, ts, p.resolution, p.aggregate)).collect()
+  }
+
+  private def directHistory(p: HistoryParams, full: Boolean): Array[Row] = {
+    val v = viewOf(storeReadings, "geohashing", p.precision, p.resolution.get)
+    val (pred, from, to) = (ExploraQueries.cellsPredicate(p.geohashes),
+      java.time.Instant.ofEpochMilli(p.fromMs.get), java.time.Instant.ofEpochMilli(p.toMs))
+    (if (full) ExploraQueries.historyAll(v, p.metricId, pred, from, to)
+     else ExploraQueries.history(v, p.metricId, pred, from, to, p.aggregate)).collect()
+  }
+
+  private def directPolygon(poly: Seq[(Double, Double)], p: SnapshotParams): Array[Row] =
+    ExploraQueries.snapshot(
+      viewOf(storeReadings, p.geoIndex, p.precision, p.resolution), p.metricId,
+      ExploraQueries.cellsPredicate(GeoHash.coverPolygon(poly, p.precision)),
+      java.time.Instant.ofEpochMilli(p.tsMs), p.resolution, p.aggregate).collect()
+
+  private def triangle(lat: Double, lon: Double, r: Double): Seq[(Double, Double)] =
+    Seq((lat + r, lon - r), (lat + r, lon + r), (lat - r, lon))
+
+  // quadkeys of the north-west quadrant start with 0; their all-digit
+  // geo_part directories would be inferred as integers ("03201" → 3201)
+  private val worldPoints = Seq(
+    (40.71, -74.00), (41.88, -87.63), (47.61, -122.33), (19.43, -99.13), // 0…
+    (51.22, 4.40), (-33.87, 151.21)) // 1…, 3…
+  private lazy val worldReadings: DataFrame = {
+    import spark.implicits._
+    val ts = new java.sql.Timestamp(snapTs)
+    worldPoints.zipWithIndex.map { case ((lat, lon), i) => (lat, lon, ts, i + 1.0) }
+      .toDF("lat", "lon", "ts", "value")
+      .select(
+        lit("signup").as("metric"), col("ts"), col("value"),
+        GeoFunctions.geohash_encode(col("lat"), col("lon"), 12).as("gh12"),
+        GeoFunctions.quadkey(col("lat"), col("lon"), 14).as("qk14"))
+      .cache()
+  }
+  private val worldBox = SnapshotParams(
+    "signup", "count", snapTs, 80.0, -180.0, -60.0, 180.0, 14, "day", geoIndex = "quadtiling")
+  private lazy val worldDisk =
+    new ExploraService(worldReadings, viewStore = Some(tempDir("graft-vs-qk")), geoPartLen = 5)
+
+  test("prepared plans: a warmed shape rebound with new values answers like the direct query") {
+    val day = 86400000L
+    val (cLat, cLon) = (u1555jLat, u1555jLon)
+    val poly = triangle(cLat, cLon, 0.02)
+    val polyParams = smallBox.copy(aggregate = "count")
+    // a sliver inside one p6 cell that holds no cell centre: no cells
+    val (eLat, eLon) = GeoHash.decode("u1555k")
+    val empty = Seq((eLat + 0.001, eLon + 0.001), (eLat + 0.001, eLon + 0.0011), (eLat + 0.0009, eLon + 0.001))
+    assert(GeoHash.coverPolygon(empty, 6).isEmpty && GeoHash.coverPolygon(poly, 6).nonEmpty)
+    val histRerun = januaryHistory.copy(
+      aggregate = "sum", geohashes = gh6.drop(3).take(7), fromMs = Some(from + 5 * day), toMs = to - day)
+    val quad = antwerpBox.copy(aggregate = "sum", precision = 14, geoIndex = "quadtiling")
+    val west = worldBox.copy(east = 0.0)
+    // (name, warm-up, rerun of the same shape with other values, direct answer)
+    val cases: Seq[(String, () => DataFrame, () => DataFrame, () => Array[Row])] = Seq(
+      ("history", () => disk2.history(januaryHistory), () => disk2.history(histRerun),
+        () => directHistory(histRerun, full = false)),
+      ("historyFull", () => disk2.historyFull(januaryHistory), () => disk2.historyFull(histRerun),
+        () => directHistory(histRerun, full = true)),
+      ("geohash prefix cover", () => disk2.snapshot(antwerpBox),
+        () => disk2.snapshot(antwerpBox.copy(tsMs = snapTs + day, west = 4.35, east = 4.55)),
+        () => directSnapshot(storeReadings, antwerpBox.copy(tsMs = snapTs + day, west = 4.35, east = 4.55), full = false)),
+      ("snapshotFull", () => disk2.snapshotFull(antwerpBox),
+        () => disk2.snapshotFull(antwerpBox.copy(metricId = "click")),
+        () => directSnapshot(storeReadings, antwerpBox.copy(metricId = "click"), full = true)),
+      ("quadtiling exact cover", () => disk2.snapshot(quad),
+        () => disk2.snapshot(quad.copy(tsMs = snapTs - day, west = 4.33, east = 4.48)),
+        () => directSnapshot(storeReadings, quad.copy(tsMs = snapTs - day, west = 4.33, east = 4.48), full = false)),
+      ("polygon cells, rebound with none",
+        () => disk2.snapshotPolygon(poly, "signup", "count", snapTs, 6, "day", "geohashing"),
+        () => disk2.snapshotPolygon(empty, "signup", "count", snapTs, 6, "day", "geohashing"),
+        () => directPolygon(empty, polyParams)),
+      ("polygon cells", () => disk2.snapshotPolygon(empty, "signup", "count", snapTs, 6, "day", "geohashing"),
+        () => disk2.snapshotPolygon(poly, "signup", "count", snapTs, 6, "day", "geohashing"),
+        () => directPolygon(poly, polyParams)),
+      ("several geo_parts, several splits", () => disk5.snapshot(antwerpBox),
+        () => disk5.snapshot(antwerpBox.copy(metricId = "click", north = 51.28, south = 51.2)),
+        () => directSnapshot(storeReadings, antwerpBox.copy(metricId = "click", north = 51.28, south = 51.2), full = false)),
+      ("one geo_part, one split", () => disk5.snapshot(smallBox),
+        () => disk5.snapshot(smallBox.copy(tsMs = snapTs + 3 * day)),
+        () => directSnapshot(storeReadings, smallBox.copy(tsMs = snapTs + 3 * day), full = false)),
+      ("leading-zero quadkeys", () => worldDisk.snapshot(worldBox), () => worldDisk.snapshot(west),
+        () => directSnapshot(worldReadings, west, full = false)))
+    // each rerun keeps its warm-up's shape: the same cover length
+    for ((a, b) <- Seq(
+        antwerpBox -> antwerpBox.copy(west = 4.35, east = 4.55),
+        antwerpBox -> antwerpBox.copy(north = 51.28, south = 51.2),
+        quad -> quad.copy(west = 4.33, east = 4.48),
+        worldBox -> west))
+      assert(coverOf(a).map(_.length).distinct === coverOf(b).map(_.length).distinct, b)
+    assert(coverOf(west).exists(_.startsWith("0")))
+    val answered = cases.map { case (name, warm, rerun, direct) =>
+      warm().collect()
+      val rows = rerun().collect()
+      assertSameRows(rows, direct(), name)
+      name -> rows.length
+    }
+    // every case but the empty cover selects rows, so the equalities show something
+    answered.foreach { case (name, n) =>
+      assert((n == 0) === name.endsWith("with none"), s"$name returned $n rows")
+    }
+  }
+
+  test("prepared plans: a world cover \"\" bound into the slot body equals the direct query") {
+    val v = viewOf(storeReadings, "geohashing", 6, "day")
+    val t = ExploraQueries.truncateTs(java.time.Instant.ofEpochMilli(snapTs), "day")
+    val slots = ExploraQueries.query(
+      v, ExploraQueries.Snapshot, Slot.column("metric", StringType),
+      ExploraQueries.prefixPredicate(0, Slot.column("lower", StringType), None, Slot.in(_, "geo")),
+      ExploraQueries.at(Slot.column("at", TimestampType)), Some("count"))
+    val bound = Slot.bind(
+      slots.queryExecution.analyzed,
+      Map("metric" -> Literal("signup"), "lower" -> Literal(""), "at" -> TimestampParam.ofSecond(t.getEpochSecond)),
+      Map("geo" -> Seq("")))
+    val want = ExploraQueries.snapshot(v, "signup", ExploraQueries.prefixPredicate(Seq("")), t, "day", "count").collect()
+    assert(want.nonEmpty)
+    assertSameRows(Shim.analyzedFrame(spark, bound).collect(), want, "world cover")
+  }
+
+  test("prepared plans: 8 threads binding distinct values into one shape each get their own answer") {
+    val day = 86400000L
+    val params = (0 until 8).map(i => januaryHistory.copy(
+      geohashes = gh6.drop(i).take(3 + i), fromMs = Some(from + i * day), toMs = to - (7 - i) * day))
+    disk2.history(januaryHistory).collect()
+    val go = new CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      val futures = params.map(p => pool.submit(new java.util.concurrent.Callable[Array[Row]] {
+        def call(): Array[Row] = { go.await(); disk2.history(p).collect() }
+      }))
+      go.countDown()
+      val got = futures.map(_.get(120, TimeUnit.SECONDS))
+      got.zip(params).zipWithIndex.foreach { case ((rows, p), i) =>
+        assertSameRows(rows, directHistory(p, full = false), s"thread $i")
+      }
+      assert(got.map(_.toSeq).distinct.size === params.size, "two threads' values gave one answer")
+    } finally pool.shutdown()
+  }
+
+  test("prepared plans: a warmed GET shape runs no analyzer rule") {
+    val day = 86400000L
+    val rerun = Seq[ExploraService => DataFrame](
+      _.history(januaryHistory.copy(geohashes = gh6.take(4), fromMs = Some(from + day))),
+      _.snapshot(antwerpBox.copy(tsMs = snapTs + day, west = 4.35)),
+      _.snapshotFull(antwerpBox.copy(precision = 14, geoIndex = "quadtiling", tsMs = snapTs - day)))
+    disk2.history(januaryHistory).collect()
+    disk2.snapshot(antwerpBox).collect()
+    disk2.snapshotFull(antwerpBox.copy(precision = 14, geoIndex = "quadtiling")).collect()
+    for ((probe, i) <- rerun.zipWithIndex) {
+      val before = RuleExecutor.getCurrentMetrics().numRuns
+      val df = probe(disk2)
+      val runs = RuleExecutor.getCurrentMetrics().numRuns - before
+      assert(runs === 0, s"probe $i ran $runs analyzer rules building its frame")
+      assert(df.collect().nonEmpty, s"probe $i")
+    }
+  }
+
   test("disk-backed view store: a probe spanning several input splits keeps its exchanges") {
     val df = disk5.snapshot(antwerpBox)
     val rows = df.collect()
@@ -359,31 +538,14 @@ class ExploraServiceSpec extends AnyFunSuite {
   }
 
   test("disk-backed quadtiling store: geo_part is a string, so leading-zero coarse covers keep their partitions") {
-    // quadkeys of the north-west quadrant start with 0; their all-digit
-    // geo_part directories would be inferred as integers ("03201" → 3201)
-    val points = Seq(
-      (40.71, -74.00), (41.88, -87.63), (47.61, -122.33), (19.43, -99.13), // 0…
-      (51.22, 4.40), (-33.87, 151.21)) // 1…, 3…
-    val ts = new java.sql.Timestamp(snapTs)
-    import spark.implicits._
-    val readings = points.zipWithIndex.map { case ((lat, lon), i) => (lat, lon, ts, i + 1.0) }
-      .toDF("lat", "lon", "ts", "value")
-      .select(
-        lit("signup").as("metric"), col("ts"), col("value"),
-        GeoFunctions.geohash_encode(col("lat"), col("lon"), 12).as("gh12"),
-        GeoFunctions.quadkey(col("lat"), col("lon"), 14).as("qk14"))
-      .cache()
-    val world = SnapshotParams(
-      "signup", "count", snapTs, 80.0, -180.0, -60.0, 180.0, 14, "day", geoIndex = "quadtiling")
-    val cover = graft.geo.QuadKey.coverPrefixes(world.north, world.west, world.south, world.east, 14)
+    val cover = coverOf(worldBox)
     assert(cover.forall(_.length < 5) && cover.exists(_.startsWith("0")),
       s"the box must coarsen below zoom 5 with leading-zero prefixes: ${cover.take(8)}")
 
-    val disk = new ExploraService(readings, viewStore = Some(tempDir("graft-vs-qk")), geoPartLen = 5)
-    val probe = disk.snapshot(world)
+    val probe = worldDisk.snapshot(worldBox)
     val rows = probe.collect()
-    val want = new ExploraService(readings).snapshot(world).collect()
-    assert(want.length === points.size)
+    val want = new ExploraService(worldReadings).snapshot(worldBox).collect()
+    assert(want.length === worldPoints.size)
     assertSameRows(rows, want, "leading-zero quadtiling cover")
     val partType = scansOf(probe).head.relation.partitionSchema("geo_part").dataType
     assert(partType === StringType)

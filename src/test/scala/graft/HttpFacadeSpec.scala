@@ -124,6 +124,53 @@ class HttpFacadeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(json.get("data").size > 0)
   }
 
+  test("an invalid res beside a valid interval answers from the interval's view and writes no other") {
+    val store = java.nio.file.Files.createTempDirectory("graft-res-store").toString
+    val server = new ExploraHttpServer(new ExploraService(SensorGrid.readings(spark, Sf0001), viewStore = Some(store)))
+    val storeBase = s"http://127.0.0.1:${server.start()}"
+    try {
+      val path = s"/api/airquality/click/aggregate/count/history?geohashes=${gh6.mkString(",")}" +
+        s"&interval=1month&to=$toMs"
+      val (code, body) = getRaw(storeBase, path)
+      assert(code === 200)
+      assert(mapper.readTree(body).get("data").size > 0, "the interval-only GET selects no rows")
+      for (res <- Seq("week", "foo")) {
+        assert(getRaw(storeBase, s"$path&res=$res") === (200, body), s"res=$res")
+        assert(!new java.io.File(s"$store/geohashing_p6_$res").exists, s"res=$res wrote a view")
+      }
+    } finally server.stop()
+  }
+
+  test("each GET's Spark job carries the description explora:<route>") {
+    val sc = spark.sparkContext
+    val descriptions = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val marker = s"label-marker-${java.util.UUID.randomUUID()}"
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { p =>
+          Option(p.getProperty("spark.job.description")).foreach(descriptions.add)
+          if (p.getProperty("spark.jobGroup.id") == marker) markerSeen.countDown()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      val (h, _) = get(s"/api/airquality/click/aggregate/avg/history?geohashes=${gh6.mkString(",")}" +
+        s"&res=day&from=$fromMs&to=$toMs")
+      val (s, _) = get(s"/api/airquality/signup/aggregate/avg/snapshot?ts=$snapTsMs" +
+        "&res=day&gh_precision=6&bbox=51.31,4.31,51.17,4.50")
+      assert(h === 200 && s === 200)
+      sc.setJobGroup(marker, "listener flush")
+      sc.parallelize(Seq(1), 1).count()
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(descriptions.contains("explora:history") && descriptions.contains("explora:snapshot"),
+        descriptions.toString)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("400: missing geohashes, with the reference's error text") {
     val (code, json) = get("/api/airquality/click/aggregate/avg/history?res=day")
     assert(code === 400)
