@@ -128,7 +128,7 @@ object Layout {
     // event→cell manifest build is LAZY (round 14): a layout that is
     // only ever range-read never probes one; the first zorderUpsert's
     // heal path builds it from the layout's own content
-    StoreManifest.routeToBuckets(bucketized(events), "z_cell", 1 << (2 * Bits))
+    StoreManifest.routeToBuckets(bucketized(events), 1 << (2 * Bits), "z_cell")
       .write.mode("overwrite").partitionBy("z_cell").parquet(path)
 
   /** INCREMENTAL layout maintenance: merge an event batch (inserts +
@@ -143,9 +143,9 @@ object Layout {
     * batch `event_id` currently lives (a corrected event whose
     * user/day moved must leave its OLD cell — the re-embedded-vector
     * case). Survivors of touched cells are anti-joined on `event_id`,
-    * unioned with the batch, and swapped in via the shared staged
-    * dynamic-overwrite body ([[Similarity.swapTouchedPartitions]]) —
-    * untouched cell directories stay byte-identical (LayoutSpec
+    * unioned with the batch, and swapped in by the one store write
+    * transaction ([[StoreManifest.swapPartitions]]: staged write, then
+    * a rename per cell) — untouched cell directories stay byte-identical (LayoutSpec
     * asserts this on file bytes). Cost ∝ touched-cell bytes, never
     * corpus bytes. Returns the touched cell ids.
     */
@@ -195,7 +195,7 @@ object Layout {
       // coalesce a count-less repartition to a single task that writes
       // every cell file sequentially; routeToBuckets note)
       StoreManifest.routeToBuckets(
-        assigned.select(outCols: _*), "z_cell", touched.size)
+        assigned.select(outCols: _*), touched.size, "z_cell")
         .write.mode("append").partitionBy("z_cell").parquet(path)
       StoreManifest.update(
         spark, path, "event_id",
@@ -210,7 +210,7 @@ object Layout {
       .select(outCols: _*)
     val merged = survivors.unionByName(assigned.select(outCols: _*))
     val heal = StoreManifest.beginMaintenance(spark, path)
-    Similarity.swapTouchedPartitions(spark, merged, path, touched, partCol = "z_cell")
+    StoreManifest.swapPartitions(spark, merged, path, Seq("z_cell"), touched.map(c => s"z_cell=$c"))
     StoreManifest.update(
       spark, path, "event_id",
       adds = Some(assigned.select(col("event_id"), col("z_cell"))),
@@ -225,7 +225,7 @@ object Layout {
     * corrections, stale `(event_id, z_cell)` manifest pairs and
     * per-batch small files both accumulated unboundedly). Same
     * maintenance pass as the IVF float / PQ code / BM25 stores
-    * ([[Similarity.compactStore]] — staged swap, archive-aware on
+    * ([[StoreManifest.compactStore]] — staged swap, archive-aware on
     * versioned layouts), with the event→cell manifest's garbage sweep
     * riding the same cadence. Result-invisible and idempotent;
     * returns the rewritten cell directories.
@@ -234,7 +234,7 @@ object Layout {
       spark: SparkSession,
       path: String,
       maxFilesPerCell: Int = 1): Seq[String] = {
-    val out = Similarity.compactStore(spark, path, "z_cell", maxFilesPerCell)
+    val out = StoreManifest.compactStore(spark, path, Seq("z_cell"), maxFilesPerCell)
     StoreManifest.rebuild(
       spark, path, "event_id", storeBucketCol = "z_cell", idUnique = true)
     out

@@ -257,7 +257,7 @@ object Retrieval {
     // count-less repartition to one task; StoreManifest.routeToBuckets
     // note), and exactly one file per shard directory per build instead
     // of input-tasks × shards
-    StoreManifest.routeToBuckets(sharded, "bucket", PostingsBuckets)
+    StoreManifest.routeToBuckets(sharded, PostingsBuckets, "bucket")
       .write.mode("overwrite").partitionBy("bucket").parquet(path)
     // doc→shard manifest build is LAZY (round 14): a stored index that
     // is only ever queried never probes one; the first upsert/delete's
@@ -428,7 +428,7 @@ object Retrieval {
       .withColumn("df", count(lit(1)).over(Window.partitionBy(col("token"))))
       .select(col("token"), col("doc_id"), col("len"), col("tf"), col("df"),
         bucketOfCol(col("token")).as("bucket"))
-    Similarity.swapTouchedPartitions(spark, merged, path, touched)
+    StoreManifest.swapPartitions(spark, merged, path, Seq("bucket"), touched.map(b => s"bucket=$b"))
     // time-travel: the corpus stats must snapshot WITH the buckets —
     // the swap committed generation K, so the PRE-write stats file is
     // exactly the stats at K; copy it into the archive before the
@@ -547,7 +547,7 @@ object Retrieval {
       .withColumn("df", count(lit(1)).over(Window.partitionBy(col("token"))))
       .select(col("token"), col("doc_id"), col("len"), col("tf"), col("df"),
         bucketOfCol(col("token")).as("bucket"))
-    Similarity.swapTouchedPartitions(spark, merged, path, touched)
+    StoreManifest.swapPartitions(spark, merged, path, Seq("bucket"), touched.map(b => s"bucket=$b"))
     // heal ⇒ live stats are the crashed run's untrusted leftovers —
     // skip the sidecar; sidecarAsOf refuses the generation (ADVICE r14)
     if (!heal) StoreGenerations.archiveSidecar(spark, path, statsPath, "stats")
@@ -573,7 +573,7 @@ object Retrieval {
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       maxFilesPerBucket: Int = 1): Seq[String] = {
-    val out = Similarity.compactStore(spark, path, "bucket", maxFilesPerBucket)
+    val out = StoreManifest.compactStore(spark, path, Seq("bucket"), maxFilesPerBucket)
     // sweep the append-only manifest's garbage pairs on the same
     // cadence that bounds small files (StoreManifest class note)
     StoreManifest.rebuild(spark, path, "doc_id")

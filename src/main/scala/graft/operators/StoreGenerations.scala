@@ -55,7 +55,7 @@ import org.apache.spark.sql.functions._
   *
   * Compaction: a versioned store's compaction pass MUST archive (it
   * rewrites bucket files that `_prefiles` lists may reference), so
-  * [[Similarity.compactStore]] routes through the same staged swap —
+  * [[StoreManifest.compactStore]] routes through the same staged swap —
   * the compacted buckets' pre-state moves into a new generation by
   * rename, list references resolve into it, and `currentGen` advances
   * (the generation's content equals its predecessor's — compaction is

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -144,25 +145,6 @@ object StoreManifest {
   def manifestPath(storePath: String): String =
     s"${storePath.stripSuffix("/")}.manifest"
 
-  /** Run `body` with `partitionOverwriteMode=dynamic`, restoring the
-    * session's previous value (or unsetting) afterwards — the shared
-    * session must not silently change the semantics of LATER
-    * overwrite+partitionBy writes. THE one implementation (VERDICT r13
-    * #5), used by the streaming view sinks' MERGE emulation (the store
-    * maintenance swaps moved to directory renames in round 14 and no
-    * longer need it).
-    */
-  private[graft] def withDynamicOverwrite[A](spark: SparkSession)(body: => A): A = {
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
-
   /** Eagerly persist a BATCH-sized maintenance frame for the duration
     * of one upsert/delete call. Every maintenance body evaluates its
     * batch frame 4-6 times (old-home probe, new-home collect, survivor
@@ -206,10 +188,11 @@ object StoreManifest {
   private def mpartCol(id: Column): Column =
     pmod(xxhash64(id), lit(Parts.toLong)).cast("int")
 
-  /** Route rows so each store bucket lands in exactly ONE shuffle
-    * partition, with an EXPLICIT partition count (optimization round
-    * 15). `repartition(col)` alone is subject to AQE advisory-size
-    * coalescing, which for a small batch collapses the exchange to a
+  /** Route rows so each store partition (one `partCols` tuple) lands
+    * in exactly ONE shuffle partition, with an EXPLICIT partition count
+    * (optimization round 15). `repartition(col)` alone is subject to
+    * AQE advisory-size coalescing, which for a small batch collapses
+    * the exchange to a
     * SINGLE post-shuffle task — that one task then writes every
     * partition directory sequentially, paying the per-file parquet
     * writer open/commit fixed cost N times on one core (measured at
@@ -239,19 +222,135 @@ object StoreManifest {
     * touches very many buckets (M×R blocks — guide §2.2), and it is
     * cores-derived, never a constant tuned to one box.
     */
-  /** The write-task-count cap used by [[routeToBuckets]] — exposed so
-    * other explicit-count writers (streaming view compaction) share the
-    * ONE formula instead of re-deriving it inline (ADVICE r15).
-    */
-  private[graft] def capFor(spark: SparkSession): Int =
-    math.min(math.max(2 * spark.sparkContext.defaultParallelism, 16), 4096)
-
   private[graft] def routeToBuckets(
       df: DataFrame,
-      partCol: String,
-      buckets: Int): DataFrame =
-    df.repartition(
-      math.min(math.max(buckets, 1), capFor(df.sparkSession)), col(partCol))
+      buckets: Int,
+      partCols: String*): DataFrame = {
+    val cap = math.min(math.max(2 * df.sparkSession.sparkContext.defaultParallelism, 16), 4096)
+    df.repartition(math.min(math.max(buckets, 1), cap), partCols.map(col): _*)
+  }
+
+  /** THE store write transaction, shared by every partitioned store
+    * (float index, PQ codes, BM25 postings, Z-order layout, the
+    * streaming view and dedup sinks): write `merged` — the full new
+    * content of every partition it carries — to a staging sibling, then
+    * swap each partition directory in by rename.
+    *
+    * Partitions are named by their directories relative to the store
+    * root, as Spark writes them (`bucket=3`,
+    * `metric=click/ts_part=2024-01-09`; `""` is the root of an
+    * unpartitioned store, swapped whole). The swap replaces every
+    * partition the staged write produced plus every `touched` one: a
+    * touched partition absent from the staged output is archived or
+    * deleted and nothing renamed in — the emptied-partition sweep (a
+    * delete that empties a bucket must not leave it serving ghost
+    * rows). Untouched partitions are neither read nor written.
+    *
+    * The staged write finishes reading the old files before any of them
+    * is replaced, so `merged` may read the store itself (every MERGE
+    * does). The staging directory is a SIBLING on the store's own
+    * filesystem, not a driver-local temp dir: executors write it on a
+    * multi-node deployment, and a sibling never appears in the store's
+    * partition discovery (a dot-prefixed child would be filtered out of
+    * reads, a plain child would be read as data). Each partition then
+    * swaps with two metadata operations. When the store is VERSIONED,
+    * the replaced directory renames into the next generation's archive
+    * instead of being deleted ([[StoreGenerations]] — defined over one
+    * integer bucket column), so time-travel costs zero byte copies.
+    * Atomicity is per partition, not across partitions; the maintenance
+    * pending marker ([[beginMaintenance]]) and the streaming checkpoint
+    * cover the crash window. On a rename-as-copy object store each
+    * rename degrades to a copy.
+    *
+    * The staged write runs one task per touched partition up to the
+    * [[routeToBuckets]] cap, so each partition directory gets exactly
+    * one file; an unpartitioned frame is written as it is partitioned.
+    */
+  private[graft] def swapPartitions(
+      spark: SparkSession,
+      merged: DataFrame,
+      path: String,
+      partCols: Seq[String],
+      touched: Seq[String]): Unit = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // Hadoop FileSystem signals many failures by RETURNING FALSE, not
+    // throwing: an unchecked delete/rename would fall through to the
+    // finally's staging-dir delete and silently lose the partition's
+    // merged content — throw instead, leaving the pending marker in
+    // place for the probe fallback and heal path
+    def renameOrThrow(src: Path, dst: Path): Unit =
+      if (!fs.rename(src, dst)) throw new java.io.IOException(s"rename $src -> $dst reported failure")
+    def deleteOrThrow(p: Path): Unit =
+      if (!fs.delete(p, true)) throw new java.io.IOException(s"delete $p reported failure")
+    val stageDir = new Path(s"${path.stripSuffix("/")}.staging-${java.util.UUID.randomUUID()}")
+    try {
+      (if (partCols.isEmpty) merged else routeToBuckets(merged, touched.size, partCols: _*))
+        .write.mode("overwrite").partitionBy(partCols: _*).parquet(stageDir.toString)
+      val staged = partitionDirs(fs, stageDir, partCols.size).toSet
+      val pg = StoreGenerations.archiveBegin(spark, path)
+      (touched ++ staged).distinct.foreach { rel =>
+        val dst = under(root, rel)
+        if (fs.exists(dst)) pg match {
+          case Some(g) => renameOrThrow(dst, under(g.dir, rel))
+          case None    => deleteOrThrow(dst)
+        }
+        if (staged(rel)) {
+          fs.mkdirs(dst.getParent)
+          renameOrThrow(under(stageDir, rel), dst)
+        }
+      }
+      pg.foreach(g =>
+        StoreGenerations.archiveCommit(spark, path, g, touched.map(_.split("=", 2)(1).toInt)))
+    } finally fs.delete(stageDir, true)
+  }
+
+  /** THE small-file compactor for every partitioned store: rewrite, via
+    * [[swapPartitions]], only the partition directories (at the store's
+    * partition depth, `partCols.size`) holding more than
+    * `maxFilesPerPartition` parquet files — one file each afterwards —
+    * and leave the rest byte-untouched. Result-invisible by
+    * construction and idempotent; cost ∝ the bloated partitions, never
+    * the store. A VERSIONED store's compaction archives the rewritten
+    * buckets' pre-state as a new generation (it must: `_prefiles` lists
+    * may name the very files it rewrites). Returns the rewritten
+    * partition directories.
+    */
+  private[graft] def compactStore(
+      spark: SparkSession,
+      path: String,
+      partCols: Seq[String],
+      maxFilesPerPartition: Int = 1): Seq[String] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(root)) return Seq.empty
+    val bloated = partitionDirs(fs, root, partCols.size).filter { rel =>
+      fs.listStatus(under(root, rel))
+        .count(s => s.isFile && s.getPath.getName.endsWith(".parquet")) > maxFilesPerPartition
+    }.sorted
+    if (bloated.isEmpty) return Seq.empty
+    val dirs = bloated.map(under(root, _).toString)
+    // read only the bloated directories; basePath restores the
+    // partition columns from their names
+    val content = spark.read.schema(graft.sources.Tables.readStable(spark, path).schema)
+      .option("basePath", path).parquet(dirs: _*)
+    swapPartitions(spark, content, path, partCols, bloated)
+    dirs
+  }
+
+  /** Partition directories `depth` levels below `dir`, relative to it. */
+  private def partitionDirs(fs: FileSystem, dir: Path, depth: Int): Seq[String] =
+    if (depth == 0) Seq("")
+    else
+      fs.listStatus(dir).toSeq
+        .filter(s => s.isDirectory && s.getPath.getName.contains("="))
+        .flatMap { s =>
+          val name = s.getPath.getName
+          partitionDirs(fs, s.getPath, depth - 1).map(r => if (r.isEmpty) name else s"$name/$r")
+        }
+
+  private def under(base: Path, rel: String): Path =
+    if (rel.isEmpty) base else new Path(base, rel)
 
   private def pathExists(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -381,7 +480,7 @@ object StoreManifest {
       // files per build), and the probe pays the listing/open cost on
       // every later batch; explicit count so AQE can't serialize the
       // Parts files into one task (routeToBuckets note)
-      "mpart", Parts)
+      Parts, "mpart")
     routed.write.mode("overwrite").partitionBy("mpart")
       .parquet(manifestPath(storePath))
   }
@@ -499,7 +598,7 @@ object StoreManifest {
         // one task → one new file per mpart dir per batch (the
         // compaction pass bounds accumulation, same as the store side);
         // explicit count so AQE can't serialize the write into one task
-        "mpart", Parts)
+        Parts, "mpart")
         .write.mode("append").partitionBy("mpart").parquet(mp)
     }
     // the append landed (or there was nothing to write): every live

@@ -10,7 +10,8 @@ import graft.operators.{
   Pq, Profiling, QuantileSketch, Retrieval, Similarity, StoreManifest, TextAnalysis,
   TextClassifier, ViewBuilder}
 import graft.sources.{SensorGrid, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -52,7 +53,7 @@ object StreamingViews {
     * production at 100 TB sets cluster width instead. Since
     * optimization round 16 the store-writing sinks (MERGE upserts)
     * narrow too: their output FILE layout no longer derives from the
-    * session width — upsert/upsertKeyed repartition every write with an
+    * session width — the staged swap routes every write with an
     * explicit count (routeToBuckets note) — so the state dial cannot
     * leak into the spec-pinned layout, and the A/B'd per-batch
     * state-store cost (one store opened per partition per batch) wins.
@@ -1071,7 +1072,8 @@ object StreamingViews {
     *     ADDITIVELY merged into the view store: existing cell + batch
     *     partial summed under the mergeable algebra (count/sum; avg
     *     derives last), touched `event_type=` partitions only read and
-    *     only rewritten (dynamic overwrite) — per-batch cost O(changed
+    *     only rewritten (the staged partition swap,
+    *     [[StoreManifest.swapPartitions]]) — per-batch cost O(changed
     *     cells + touched partitions), NOT O(view age).
     *
     * Determinism contract (same staged replay as the watermarked join,
@@ -1234,10 +1236,6 @@ object StreamingViews {
       checkpoint: String,
       rocksDbState: Boolean = true,
       watermark: Option[String] = None): Unit = {
-    // no session-level partitionOverwriteMode set here: the sink's
-    // upsert/upsertKeyed scope the dynamic mode themselves
-    // ([[withDynamicOverwrite]]), so the shared session's conf is
-    // never left changed for later writes (r12 verdict #3)
     def run(): Unit =
       runBatches(viewStream(spark, sfDir, resolution, geoPrefixLen, watermark), "update", checkpoint) {
         (batch, _) =>
@@ -1252,8 +1250,8 @@ object StreamingViews {
     // narrow state here too (optimization round 16): the watermarked
     // aggregation's state width is a per-query deployment dial (the
     // StatefulHarnessPartitions note); the MERGE sink's FILE layout is
-    // unaffected because upsert/upsertKeyed repartition their writes
-    // with explicit counts. Interleaved A/B at sf0.1: 5.01 → 3.94 s.
+    // unaffected because the staged swap routes its write one task per
+    // touched partition. Interleaved A/B at sf0.1: 5.01 → 3.94 s.
     if (rocksDbState) withNarrowState(spark)(withRocksDbState(spark)(run()))
     else withNarrowState(spark)(run())
   }
@@ -1265,8 +1263,7 @@ object StreamingViews {
     * parity mode. Two fixes over the r14 shape (optimization round 16):
     *
     *  - the provider conf is RESTORED after the run. Through r15 it was
-    *    set session-wide and never unset (the same leak class as the
-    *    partitionOverwriteMode leak r12 verdict #3 closed), so every
+    *    set session-wide and never unset (a session-conf leak), so every
     *    stateful stream that happened to run AFTER a view entry —
     *    including the whole second bench pass — silently paid RocksDB's
     *    native open/flush/snapshot per state partition per batch for
@@ -1303,7 +1300,8 @@ object StreamingViews {
     * [[materializeViews]] in its watermark/retention mode (event-time
     * watermark on the source, update-mode MERGE into the
     * `(metric, ts_part)`-partitioned parquet table with bounded
-    * per-batch rewrite), compact the result ([[compactViews]]), and
+    * per-batch rewrite), compact the result
+    * ([[StoreManifest.compactStore]]), and
     * read the table back. Over the finite AvailableNow source every
     * row arrives before the watermark first advances, so the stored
     * table must equal the batch view — the SAME oracle as `view_min`;
@@ -1321,73 +1319,8 @@ object StreamingViews {
     materializeViews(
       spark, sfDir, out, resolution, geoPrefixLen, s"$tmp/ckpt",
       watermark = Some("1 hour"))
-    compactViews(spark, out)
+    StoreManifest.compactStore(spark, out, Seq("metric", "ts_part"))
     Tables.readStable(spark, out)
-  }
-
-  /** Small-file compaction for the MERGE-upserted view table: every
-    * upsert rewrites its touched partitions with one file per task, so
-    * a hot partition accumulates files batch over batch. This pass
-    * lists partition directories, reads ONLY those above
-    * `maxFilesPerPartition` (partition-pruned scan), shuffles each
-    * partition's rows into a single task (`repartition` on the
-    * partition columns — each (metric, ts_part) group lands in exactly
-    * one task → exactly one output file), and rewrites them via the
-    * same dynamic partition overwrite. Bounded by construction: cost is
-    * proportional to the BLOATED partitions, never the table.
-    */
-  def compactViews(
-      spark: SparkSession,
-      outPath: String,
-      partitionCols: Seq[String] = Seq("metric", "ts_part"),
-      maxFilesPerPartition: Int = 1): Seq[String] = {
-    val root = new org.apache.hadoop.fs.Path(outPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Seq.empty
-    // walk partition dirs (depth = partitionCols.size), counting files
-    def walk(p: org.apache.hadoop.fs.Path, depth: Int): Seq[org.apache.hadoop.fs.Path] =
-      if (depth == 0) Seq(p)
-      else
-        fs.listStatus(p).toSeq
-          .filter(s => s.isDirectory && s.getPath.getName.contains("="))
-          .flatMap(s => walk(s.getPath, depth - 1))
-    val bloated = walk(root, partitionCols.size).filter { dir =>
-      fs.listStatus(dir).count(s => s.isFile && s.getPath.getName.endsWith(".parquet")) >
-        maxFilesPerPartition
-    }
-    if (bloated.isEmpty) return Seq.empty
-    // partition-dir name → column predicate (hive-style key=value)
-    val preds = bloated.map { dir =>
-      val kvs = dir.toString.stripPrefix(root.toString).split("/").filter(_.contains("="))
-      kvs.map { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        col(k) === java.net.URLDecoder.decode(v, "UTF-8")
-      }.reduce(_ && _)
-    }.reduce(_ || _)
-    val compacted = Tables.readStable(spark, outPath)
-      .filter(preds)
-      // explicit count, capped at 2×cores via the ONE shared formula
-      // (StoreManifest.capFor — ADVICE r15: the inline twin could
-      // drift): the count-less form is AQE-coalesced to one serial
-      // task, while one task PER dir pays the per-write-task
-      // conf-deser fixed cost bloated-count times (routeToBuckets
-      // note); under the cap each rewritten dir still lands wholly in
-      // one task → one file per dir
-      .repartition(
-        math.min(math.max(bloated.size, 1), StoreManifest.capFor(spark)),
-        partitionCols.map(col): _*)
-    // dynamic overwrite scoped to this one write (and restored after):
-    // static mode would wipe every partition the compacted frame
-    // doesn't carry, and a session-level set would leak into later
-    // overwrite+partitionBy writes (r12 verdict #3)
-    withDynamicOverwrite(spark) {
-      compacted.localCheckpoint(eager = true)
-        .write
-        .mode("overwrite")
-        .partitionBy(partitionCols: _*)
-        .parquet(outPath)
-    }
-    bloated.map(_.toString)
   }
 
   /** MERGE-shaped upsert of `batch` (update-mode view rows) into the
@@ -1395,14 +1328,6 @@ object StreamingViews {
     */
   private[streaming] def upsert(batch: DataFrame, outPath: String): Unit =
     upsertKeyed(batch, outPath, Seq("metric", "geo", "ts"), Seq("metric"))
-
-  /** Run `body` with `partitionOverwriteMode=dynamic` — delegates to
-    * THE one save/restore implementation
-    * ([[graft.operators.StoreManifest.withDynamicOverwrite]]; VERDICT
-    * r13 #5 asked for exactly one).
-    */
-  private def withDynamicOverwrite[A](spark: SparkSession)(body: => A): A =
-    StoreManifest.withDynamicOverwrite(spark)(body)
 
   /** KEYED upsert: a batch row REPLACES the stored row with the same
     * `keys` — `MERGE INTO … ON keys WHEN MATCHED THEN UPDATE SET *`:
@@ -1422,7 +1347,9 @@ object StreamingViews {
     * SUMMED with its partial rather than replaced —
     * `MERGE ... WHEN MATCHED THEN UPDATE SET v = v + batch.v` on plain
     * parquet; the aggregate runs over (touched existing ∪ batch),
-    * O(touched cells), never the whole table.
+    * O(touched cells), never the whole table. NOT replay-safe: a batch
+    * replayed after a crash between this write and the checkpoint
+    * commit adds its partial a second time.
     */
   private[graft] def upsertAdditive(
       batch: DataFrame,
@@ -1439,66 +1366,53 @@ object StreamingViews {
   /** The one MERGE-emulation body on plain parquet: `merge(existing,
     * batch)` combines the stored rows of the partitions the batch
     * touches (all rows, when unpartitioned) with the batch, and the
-    * result overwrites exactly those partitions (dynamic partition
-    * overwrite) — untouched partitions are neither read nor rewritten.
-    * The first batch bootstraps the table. With a lakehouse format
-    * this collapses to a real `MERGE INTO … ON keys`.
+    * result replaces exactly those partitions through the one store
+    * write transaction ([[StoreManifest.swapPartitions]]: staged write,
+    * then a rename per partition) — untouched partitions are neither
+    * read nor rewritten, and each touched one ends as one file. The
+    * first batch bootstraps the table. With a lakehouse format this
+    * collapses to a real `MERGE INTO … ON keys`.
     */
   private def mergeUpsert(batch: DataFrame, outPath: String, partitionCols: Seq[String])(
       merge: (DataFrame, DataFrame) => DataFrame): Unit = {
     val spark = batch.sparkSession
     // a foreachBatch frame is a STATE-STORE READOUT recomputed on every
     // action, and the upsert runs three (the empty-batch probe below,
-    // the touched-partition probe, the merge itself) — persist for the
-    // upsert's scope so the stateful readout executes once per batch
+    // the touched-partition collect, the staged write) — persist for
+    // the upsert's scope so the stateful readout executes once per batch
     val b = batch.persist()
-    def write(): Unit = {
-      val merged =
-        if (!pathExists(spark, outPath)) b
-        else {
-          // only the touched partitions are even read: partition pruning
-          // on the touched-tuple filter keeps untouched partitions out of
-          // both the scan and (via dynamic overwrite) the write
-          val existing0 = Tables.readStable(spark, outPath)
-          val pruned =
-            if (partitionCols.isEmpty) existing0
-            else {
-              val touched = b.select(partitionCols.map(col): _*).distinct().collect()
-              existing0.filter(touched.map { r =>
-                partitionCols.zipWithIndex
-                  .map { case (c, i) => col(c) === lit(r.get(i)) }
-                  .reduce(_ && _)
-              }.reduce(_ || _))
-            }
-          // partition col order back in line with the batch
-          merge(pruned.select(b.columns.map(col): _*), b)
-        }
-      // cluster by the partition columns before writing: every partition
-      // dir then gets exactly ONE task's output — one file per partition
-      // per upsert — so the table never grows the many-small-files shape
-      // compactViews exists to repair (unclustered, the sf0.1 retained
-      // view left ~32 files in EVERY (metric, day) dir and the follow-up
-      // compaction rewrote the entire table). Explicit partition count:
-      // count-less repartition(col) is AQE-coalesced to ONE task at
-      // micro-batch sizes, serializing every directory's file write
-      // (StoreManifest.routeToBuckets note)
-      val clustered =
-        if (partitionCols.isEmpty) merged
-        else merged.repartition(spark.sparkContext.defaultParallelism, partitionCols.map(col): _*)
-      // localCheckpoint cuts the plan's lineage on the files being
-      // replaced — without it the overwrite would read its own output
-      val writer = clustered.localCheckpoint(eager = true).write.mode("overwrite")
-      (if (partitionCols.isEmpty) writer else writer.partitionBy(partitionCols: _*))
-        .parquet(outPath)
-    }
     try {
       // a watermarked update-mode stream fires a final batch that only
-      // advances the watermark — nothing to merge, and the touched-tuple
-      // predicate would reduce over an empty list. Dynamic overwrite is
-      // load-bearing for partitioned sinks: static mode would wipe every
-      // partition the merged frame doesn't carry
+      // advances the watermark: nothing to merge
       if (!b.isEmpty) {
-        if (partitionCols.nonEmpty) withDynamicOverwrite(spark)(write()) else write()
+        // the touched partition tuples; an unpartitioned table is one
+        // partition, its root (the empty tuple)
+        val touched =
+          if (partitionCols.isEmpty) Seq(Row.empty)
+          else b.select(partitionCols.map(col): _*).distinct().collect().toSeq
+        val merged =
+          if (!pathExists(spark, outPath)) b
+          else {
+            // partition pruning on the touched-tuple filter keeps
+            // untouched partitions out of the scan
+            val existing = Tables.readStable(spark, outPath)
+            val pruned =
+              if (partitionCols.isEmpty) existing
+              else
+                existing.filter(touched.map { r =>
+                  partitionCols.zipWithIndex
+                    .map { case (c, i) => col(c) === lit(r.get(i)) }
+                    .reduce(_ && _)
+                }.reduce(_ || _))
+            // partition col order back in line with the batch
+            merge(pruned.select(b.columns.map(col): _*), b)
+          }
+        StoreManifest.swapPartitions(
+          spark, merged, outPath, partitionCols,
+          touched.map(r =>
+            partitionCols.zipWithIndex.map { case (c, i) =>
+              ExternalCatalogUtils.getPartitionPathString(c, String.valueOf(r.get(i)))
+            }.mkString("/")))
       }
     } finally { b.unpersist(); () }
   }

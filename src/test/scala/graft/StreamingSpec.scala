@@ -227,6 +227,44 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  test("a (metric, ts_part) upsert that fails in its staged write leaves every partition file as it was") {
+    // The staged swap's failure atomicity: the merged frame is only
+    // evaluated by the staged write, so a failure there (here an ANSI
+    // long overflow in the additive merge's sum) must leave every
+    // partition file byte-identical and no staging sibling behind.
+    val tmp = Files.createTempDirectory("graft-atomic").toFile.getAbsolutePath
+    val out = s"$tmp/out"
+    import SparkTestBase.spark.implicits._
+    def batch(metric: String, days: Seq[Int], cnt: Long) =
+      days.map(d => (metric, "u1555j", java.sql.Timestamp.valueOf(f"2024-01-$d%02d 00:00:00"), cnt, 1.0))
+        .toDF("metric", "geo", "ts", "cnt", "sum_val")
+        .withColumn("ts_part", to_date(col("ts")))
+    def upsert(b: org.apache.spark.sql.DataFrame): Unit = StreamingViews.upsertAdditive(
+      b, out,
+      keys = Seq("metric", "geo", "ts", "ts_part"),
+      partitionCols = Seq("metric", "ts_part"),
+      sumCols = Seq("cnt", "sum_val"))
+    upsert(batch("click", 1 to 3, Long.MaxValue).unionAll(batch("view", 1 to 3, 1L)))
+    def listing(): Seq[(String, Long, Long)] = {
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+      walk(new java.io.File(out)).filter(_.getName.endsWith(".parquet"))
+        .map(f => (f.getPath.stripPrefix(out), f.length, f.lastModified)).sortBy(_._1)
+    }
+    val before = listing()
+    assert(before.size === 6)
+    val rowsBefore = spark.read.parquet(out).collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    val err = intercept[Exception](upsert(batch("click", Seq(2, 3), 1L)))
+    assert(
+      Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .exists(e => String.valueOf(e.getMessage).contains("overflow")),
+      s"expected the merge's sum to overflow, got $err")
+    assert(listing() === before, "a failed upsert changed partition files")
+    assert(spark.read.parquet(out).collect().map(_.toSeq.mkString("|")).sorted.toSeq === rowsBefore)
+    val leftovers = new java.io.File(tmp).listFiles().map(_.getName).filter(_.contains(".staging-"))
+    assert(leftovers.isEmpty, s"staging dirs leaked: ${leftovers.mkString(", ")}")
+  }
+
   test("compactViews: bloated partitions collapse to one file each, data and layout intact") {
     val tmp = Files.createTempDirectory("graft-compact").toFile.getAbsolutePath
     val out = s"$tmp/out"
@@ -236,7 +274,6 @@ class StreamingSpec extends AnyFunSuite {
       ("click", f"u$i%04d", java.sql.Timestamp.valueOf("2024-01-05 00:00:00"), 1L, 1.0, 1.0))
       .toDF("metric", "geo", "ts", "cnt", "sum_val", "avg_val")
       .withColumn("ts_part", to_date(col("ts")))
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     rows.repartition(8).write.mode("overwrite")
       .partitionBy("metric", "ts_part").parquet(out)
     val dir = new java.io.File(s"$out/metric=click/ts_part=2024-01-05")
@@ -244,14 +281,15 @@ class StreamingSpec extends AnyFunSuite {
     assert(nBefore > 1, s"fixture should be bloated, got $nBefore files")
     val dataBefore = spark.read.parquet(out).collect().map(_.toSeq).sortBy(_.mkString(",")).toSeq
 
-    val compacted = StreamingViews.compactViews(spark, out)
+    val viewParts = Seq("metric", "ts_part")
+    val compacted = graft.operators.StoreManifest.compactStore(spark, out, viewParts)
     assert(compacted.nonEmpty)
     val nAfter = dir.listFiles().count(_.getName.endsWith(".parquet"))
     assert(nAfter === 1, s"expected 1 file after compaction, got $nAfter")
     val dataAfter = spark.read.parquet(out).collect().map(_.toSeq).sortBy(_.mkString(",")).toSeq
     assert(dataAfter === dataBefore)
     // idempotent: nothing left to compact
-    assert(StreamingViews.compactViews(spark, out).isEmpty)
+    assert(graft.operators.StoreManifest.compactStore(spark, out, viewParts).isEmpty)
   }
 
   test("hot-key skew: one user with ~50% of events through the streaming sessionizer — stream==batch, batches bounded") {
@@ -448,6 +486,42 @@ class StreamingSpec extends AnyFunSuite {
         merged(StreamingViews.readLog(spark, log)) ===
           merged(partials(graft.sources.Tables.load(spark, src, table))),
         s"$what: replayed batch counted twice")
+    }
+  }
+
+  test("the keyed MERGE view sink is replay-safe: a batch re-run after a crash before its commit") {
+    // The MERGE sink's crash window: batch n's swap landed in the view
+    // store, its commit did not. The restart on the same checkpoint
+    // replays batch n (same offsets, same state version), and the
+    // keyed upsert must leave exactly the store a clean run leaves.
+    val tmp = Files.createTempDirectory("graft-merge-replay").toFile.getAbsolutePath
+    val (out, ckpt) = (s"$tmp/out", s"$tmp/ckpt")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val raw = spark.read.parquet(s"$Sf0001/events.parquet")
+    val evDir = s"$tmp/events.parquet"
+    // file A, then file B: B updates cells A created in every metric
+    raw.filter(col("event_id") % 2 === 0).coalesce(1).write.mode("append").parquet(evDir)
+    StreamingViews.materializeViews(spark, tmp, out, "day", 6, ckpt)
+    raw.filter(col("event_id") % 2 === 1).coalesce(1).write.mode("append").parquet(evDir)
+    StreamingViews.materializeViews(spark, tmp, out, "day", 6, ckpt)
+    val commits = new java.io.File(s"$ckpt/commits")
+    val last = commits.listFiles().filter(_.getName.forall(_.isDigit)).maxBy(_.getName.toLong)
+    assert(last.getName.toLong >= 1, "expected one micro-batch per file")
+    // the crash: batch n's output is in the store, its commit is not
+    assert(last.delete())
+    new java.io.File(commits, s".${last.getName}.crc").delete()
+    StreamingViews.materializeViews(spark, tmp, out, "day", 6, ckpt)
+    assert(last.exists(), s"the restart did not replay batch ${last.getName}")
+    val batch = ViewBuilder.build(
+      SensorGrid.readings(spark, Sf0001),
+      substring(col("gh12"), 1, 6),
+      "day")
+    assert(normalize(spark.read.parquet(out)).sameElements(normalize(batch)))
+    val metricDirs = new java.io.File(out).listFiles().filter(_.getName.startsWith("metric="))
+    assert(metricDirs.nonEmpty)
+    metricDirs.foreach { d =>
+      val files = d.listFiles().count(_.getName.endsWith(".parquet"))
+      assert(files === 1, s"${d.getName} holds $files files")
     }
   }
 

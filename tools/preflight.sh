@@ -4,7 +4,8 @@
 # (round 4 shipped exactly that: a scaladoc `*/` broke the build and no
 # validation ran all round).
 #
-#   tools/preflight.sh          # compile main + tests + entry-count pin
+#   tools/preflight.sh          # compile main + tests + no partitionOverwriteMode
+#                               #   under src/ + entry-count pin
 #   tools/preflight.sh --full   # + graft.Verify at sf0.01 replayed in DuckDB,
 #                               #   + short serve and maintain benchmark runs,
 #                               #   which must answer every operation correctly
@@ -15,6 +16,16 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 
 sbt -batch compile Test/compile
+
+# One store write transaction: every partitioned store replaces its
+# partitions through the staged swap (StoreManifest.swapPartitions).
+# Spark's dynamic partition overwrite is a session conf, so neither the
+# write path nor a spec may set it: a set that is not restored changes
+# every later overwrite+partitionBy write in the same session.
+if grep -rn partitionOverwriteMode src/; then
+  echo "preflight FAIL: partitionOverwriteMode under src/ (use StoreManifest.swapPartitions)"
+  exit 1
+fi
 
 # Entry-count pin (VERDICT r10 #6: the SURVEY prose entry count drifted
 # from the generated surface two rounds running). The ONE source of
