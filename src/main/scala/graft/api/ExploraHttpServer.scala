@@ -6,7 +6,6 @@ import java.util.concurrent.Executors
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.{DataFrame, Row}
 
 /** The reference's REST entry point, re-expressed over the library
   * facade: a JDK `com.sun.net.httpserver` listener (no extra
@@ -31,6 +30,9 @@ import org.apache.spark.sql.{DataFrame, Row}
   *     replaced scatter-gather, SURVEY §0);
   *   - validation failure → HTTP 400 with
   *     `ErrorMessage{errorMessage, errorCode}` (model/ErrorMessage.java);
+  *   - a method other than GET on either route → HTTP 405 with an
+  *     `Allow: GET` header and the `ErrorMessage` envelope, as the
+  *     reference's JAX-RS `@GET` resources answer; nothing runs;
   *   - any other failure → HTTP 500 with a fixed `ErrorMessage` text;
   *     the exception itself goes to stderr, never into the body (it can
   *     carry store paths and planner internals).
@@ -39,10 +41,15 @@ import org.apache.spark.sql.{DataFrame, Row}
   * presentation convention), where the reference emits the view's epoch
   * millis; values are identical.
   *
-  * The `.collect()` here is the API boundary, not a plan step: history
+  * Collecting the result is the API boundary, not a plan step: history
   * and snapshot results are per-timestamp / per-cell aggregates already
   * reduced by the distributed plan, the same cardinality the reference
-  * serializes from its TreeMap.
+  * serializes from its TreeMap. A one-split GET (its probed slice is one
+  * input split, [[ExploraService]]) collects with `executeCollect` on
+  * its shape's prepared physical plan, bound to its values, and the
+  * envelope is written from the `InternalRow`s; any other GET collects
+  * its DataFrame. Both are one call under the `explora:<route>` job
+  * description, and both write the same bytes.
   *
   * Replicas (the reference runs 3 — kubernetes/explora-kafka-
   * deployment.yaml): the reference NEEDS its replicas to co-own query
@@ -109,6 +116,9 @@ class ExploraHttpServer(service: ExploraService, requestedPort: Int = 0) {
     try {
       val segs = ex.getRequestURI.getPath.split("/").filter(_.nonEmpty).toSeq
       segs match {
+        case Seq("api", "airquality", _, "aggregate", _, "history" | "snapshot") if ex.getRequestMethod != "GET" =>
+          ex.getResponseHeaders.set("Allow", "GET")
+          respond(ex, 405, errorJson(s"method ${ex.getRequestMethod} is not allowed, only GET", 405))
         case Seq("api", "airquality", metric, "aggregate", agg, "history") =>
           history(ex, dec(metric), dec(agg).toLowerCase)
         case Seq("api", "airquality", metric, "aggregate", agg, "snapshot") =>
@@ -169,16 +179,10 @@ class ExploraHttpServer(service: ExploraService, requestedPort: Int = 0) {
       src = src)
 
     try {
-      if (local) {
-        // Map<ts, Aggregate{count,sum,avg}> (QueryingService.java:258-261)
-        respond(ex, 200, localJson(labelled("history", service.historyFull(params))))
-      } else {
-        val rows = labelled("history", service.history(params))
-        respond(ex, 200, messageJson(
-          columns = Seq("timestamp", agg),
-          data = rows.map(r => Seq[Any](r.get(0), r.get(1))),
-          metricId = metricId))
-      }
+      // local: Map<ts, Aggregate{count,sum,avg}> (QueryingService.java:258-261)
+      val rows = run("history", service.historyRequest(params, Option.when(!local)(agg)))
+      respond(ex, 200,
+        if (local) localJson(rows) else messageJson(columns = Seq("timestamp", agg), data = rows, metricId = metricId))
     } catch {
       case e: IllegalArgumentException =>
         respond(ex, 400, errorJson(s"[getAirQualityHistory] ${e.getMessage}", 400))
@@ -237,30 +241,24 @@ class ExploraHttpServer(service: ExploraService, requestedPort: Int = 0) {
       precision = precision, resolution = resolution, geoIndex = geoIndex)
 
     try {
-      if (local) {
-        respond(ex, 200, localJson(labelled("snapshot", service.snapshotFull(params))))
-      } else {
-        val rows = labelled("snapshot", service.snapshot(params))
-        respond(ex, 200, messageJson(
-          columns = Seq("geohash", agg),
-          data = rows.map(r => Seq[Any](r.get(0), r.get(1))),
-          metricId = metricId))
-      }
+      val rows = run("snapshot", service.snapshotRequest(params, Option.when(!local)(agg)))
+      respond(ex, 200,
+        if (local) localJson(rows) else messageJson(columns = Seq("geohash", agg), data = rows, metricId = metricId))
     } catch {
       case e: IllegalArgumentException =>
         respond(ex, 400, errorJson(s"[getAirQualitySnapshot] ${e.getMessage}", 400))
     }
   }
 
-  /** `df.collect()` under the job description `explora:<route>`, so a
-    * listener or the UI can tell a GET's job from others. The handler
-    * threads are pooled and a local property stays with its thread, so
-    * the description is cleared again whatever happens.
+  /** `request`'s rows under the job description `explora:<route>`, so
+    * that a listener or the UI can tell a GET's job from others. The
+    * handler threads are pooled and a local property stays with its
+    * thread, so the description is cleared again whatever happens.
     */
-  private def labelled(route: String, df: DataFrame): Array[Row] = {
-    val sc = df.sparkSession.sparkContext
+  private def run(route: String, request: ExploraService.Request): Seq[Seq[Any]] = {
+    val sc = request.spark.sparkContext
     sc.setJobDescription(s"explora:$route")
-    try df.collect()
+    try request.collect()
     finally sc.setJobDescription(null)
   }
 
@@ -284,13 +282,13 @@ class ExploraHttpServer(service: ExploraService, requestedPort: Int = 0) {
     * (QueryingService.java:258-261, Aggregate.java:3-14). Input rows are
     * (key, cnt, sum_val, avg_val).
     */
-  private def localJson(rows: Array[Row]): String = {
+  private def localJson(rows: Seq[Seq[Any]]): String = {
     val root = mapper.createObjectNode()
     rows.foreach { r =>
-      val o = root.putObject(String.valueOf(r.get(0)))
-      o.put("count", r.getLong(1))
-      o.put("sum", r.getDouble(2))
-      o.put("avg", r.getDouble(3))
+      val o = root.putObject(String.valueOf(r(0)))
+      o.put("count", r(1).asInstanceOf[Long])
+      o.put("sum", r(2).asInstanceOf[Double])
+      o.put("avg", r(3).asInstanceOf[Double])
     }
     mapper.writeValueAsString(root)
   }

@@ -7,14 +7,16 @@ import graft.geo.{GeoHash, QuadKey}
 import graft.operators.{ExploraQueries, QueryValidation, ViewBuilder}
 import graft.operators.ExploraQueries.{History, Route, Snapshot}
 import graft.sources.Tables
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.datasources.{
   HadoopFsRelation, LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Shim
 import org.apache.spark.sql.types.{DataType, StringType, TimestampType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The reference's query-service surface as a library API: the same
   * parameters and routing as the REST facade
@@ -78,7 +80,7 @@ final case class SnapshotParams(
   *   When None, views are kept as in-process persisted DataFrames
   *   (harness mode), also unchanged by the one-split rule.
   *
-  * Each request binds its values into a plan analyzed once for its
+  * Each request binds its values into plans prepared once for its
   * shape. The shape is what fixes the plan: the view (geo index,
   * precision, resolution, `src`), the route, the aggregate column (or
   * the full Aggregate), the cover kind — an exact cell list, or
@@ -88,25 +90,45 @@ final case class SnapshotParams(
   * bounds, the cells or prefixes, the prefix range bounds and the
   * selected `geo_part`s. The first request of a shape runs
   * [[ExploraQueries.query]] over `graft.functions.Slot`s and keeps its
-  * analyzed plan; each request then replaces the slots with its own
-  * values and plans the result without analyzing it again. A view
-  * store is read once (its file listing is kept in `View.parts`), so
-  * a prepared plan never needs to outlive it; anything that rewrites
-  * a served view must drop both.
+  * plans; a request replaces the slots with its own values at one of
+  * two levels:
+  *
+  *   - Logical, for every shape: the ANALYZED plan is prepared. Each
+  *     DataFrame this class returns binds it, so a request is not
+  *     analyzed again, but it is still optimized and planned (with
+  *     AQE) when it runs. A multi-split GET runs this frame too, so
+  *     that the exchanges of the 100 TB case stay adaptive.
+  *   - Physical, for a one-split shape on a disk view, when the HTTP
+  *     facade runs it: the shape's analyzed plan is also optimized and
+  *     planned once into a NON-adaptive physical plan (Spark's own
+  *     preparation of a subquery's plan; the session and its AQE
+  *     setting are unchanged). A GET binds its values into a copy of
+  *     that plan — the scan's partition filters, and so its selected
+  *     partitions and its pushed filters, are derived again from them
+  *     — and runs the copy with `executeCollect`. No optimizer,
+  *     planner, AQE wrapper, SQL execution event or row encoder runs
+  *     per request.
+  *
+  * A view store is read once (its file listing is kept in
+  * `View.parts`), so a prepared plan never needs to outlive it;
+  * anything that rewrites a served view must drop the listing and the
+  * shapes' analyzed and physical plans in one step.
   */
 class ExploraService(
     readings: DataFrame,
     viewStore: Option[String] = None,
     geoPartLen: Int = 2) {
-  import ExploraService.{Cells, Cover, Once, Prefixes, Shape, View, ViewKey}
+  import ExploraService.{Cells, Cover, Once, Prefixes, Prepared, Request, Shape, View, ViewKey}
+
+  private def spark: SparkSession = readings.sparkSession
 
   // TrieMap.getOrElseUpdate may evaluate its default in every thread
   // that races on a key; caching a once-only holder means only the
   // holder that won the insert builds — and writes — the view
   private val viewCache = scala.collection.concurrent.TrieMap.empty[ViewKey, Once[View]]
 
-  // one analyzed plan per shape, held the same way; shapes are finite
-  private val plans = scala.collection.concurrent.TrieMap.empty[Shape, Once[LogicalPlan]]
+  // one set of prepared plans per shape, held the same way; shapes are finite
+  private val plans = scala.collection.concurrent.TrieMap.empty[Shape, Once[Prepared]]
 
   private def geoExpr(geoIndex: String, precision: Int) = geoIndex match {
     // prefix property: substring of a finer key IS the coarser key,
@@ -121,7 +143,6 @@ class ExploraService(
       new Once(if (key.raw) View(rawAsView(key.precision, key.resolution), None) else viewStore match {
         case Some(base) =>
           val ViewKey(geoIndex, precision, resolution, _) = key
-          val spark = readings.sparkSession
           val path = s"$base/${geoIndex}_p${precision}_$resolution"
           val p = new org.apache.hadoop.fs.Path(path)
           val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -168,13 +189,12 @@ class ExploraService(
             None)
       })).value
 
-  /** Plan one request: bind its values into the analyzed plan of its
-    * shape (class scaladoc). `times` are the `ts` bounds: (from, to)
-    * for a history, the truncated instant for a snapshot. On a disk
-    * view the slice read is `metric`'s `geo_part` partitions under the
-    * cover (a SUPERSET of the row-level geo predicate, which still
-    * applies), coalesced to one partition when their files are one
-    * input split.
+  /** Bind one request's values into the prepared plans of its shape
+    * (class scaladoc). `times` are the `ts` bounds: (from, to) for a
+    * history, the truncated instant for a snapshot. On a disk view the
+    * slice read is `metric`'s `geo_part` partitions under the cover (a
+    * SUPERSET of the row-level geo predicate, which still applies),
+    * coalesced to one partition when their files are one input split.
     */
   private def probe(
       key: ViewKey,
@@ -182,7 +202,7 @@ class ExploraService(
       agg: Option[String],
       metric: String,
       times: Seq[Instant],
-      cover: Cover): DataFrame = {
+      cover: Cover): Request = {
     val v = view(key)
     val (keys, prefixLen, bounds) = cover match {
       case Cells(cells) => (cells, None, Map.empty[String, Expression])
@@ -196,14 +216,14 @@ class ExploraService(
         // a prefix coarser than the partition key selects every partition under it
         val qs = keys.map(_.take(geoPartLen)).distinct
         val selected = byMetric.getOrElse(metric, Map.empty).filter { case (part, _) => qs.exists(part.startsWith) }
-        (selected.keys.toSeq, Tables.splitCount(readings.sparkSession, selected.values.toSeq) <= 1)
+        (selected.keys.toSeq, Tables.splitCount(spark, selected.values.toSeq) <= 1)
       case None => (Nil, false)
     }
     val shape = Shape(key, route, agg, prefixLen, oneSplit)
-    val plan = plans.getOrElseUpdate(shape, new Once(prepare(shape, v))).value
     val values = Map[String, Expression]("metric" -> Literal(metric)) ++ bounds ++
       tsSlots(route).zip(times.map(t => TimestampParam.ofSecond(t.getEpochSecond)))
-    Shim.analyzedFrame(readings.sparkSession, Slot.bind(plan, values, Map("geo" -> keys, "geo_part" -> parts)))
+    new Request(spark, plans.getOrElseUpdate(shape, new Once(prepare(shape, v))).value,
+      values, Map("geo" -> keys, "geo_part" -> parts))
   }
 
   private def tsSlots(route: Route): Seq[String] = route match {
@@ -211,8 +231,8 @@ class ExploraService(
     case Snapshot => Seq("at")
   }
 
-  /** The analyzed plan of [[ExploraQueries.query]] for `shape`, over slots. */
-  private def prepare(shape: Shape, v: View): LogicalPlan = {
+  /** The prepared plans of [[ExploraQueries.query]] for `shape`, over slots. */
+  private def prepare(shape: Shape, v: View): Prepared = {
     def slot(name: String, t: DataType): Column = Slot.column(name, t)
     val source = v.parts match {
       case Some(_) =>
@@ -230,19 +250,24 @@ class ExploraService(
       case Seq(from, to) => ExploraQueries.during(from, to)
       case Seq(at)       => ExploraQueries.at(at)
     }
-    ExploraQueries.query(source, shape.route, slot("metric", StringType), geoPred, tsPred, shape.agg)
-      .queryExecution.analyzed
+    new Prepared(spark,
+      ExploraQueries.query(source, shape.route, slot("metric", StringType), geoPred, tsPred, shape.agg)
+        .queryExecution.analyzed,
+      shape.oneSplit)
   }
 
   /** GET …/history equivalent (QueryingService.java:38-135). */
-  def history(p: HistoryParams): DataFrame = historyProbe(p, Some(p.aggregate))
+  def history(p: HistoryParams): DataFrame = historyRequest(p, Some(p.aggregate)).frame
 
   /** [[history]] with the full Aggregate per timestamp — the
     * `local=true` payload shape (QueryingService.java:258-261).
     */
-  def historyFull(p: HistoryParams): DataFrame = historyProbe(p, None)
+  def historyFull(p: HistoryParams): DataFrame = historyRequest(p, None).frame
 
-  private def historyProbe(p: HistoryParams, agg: Option[String]): DataFrame = {
+  /** A history GET bound to its values: [[history]] with `agg`, or
+    * [[historyFull]] when `agg` is None.
+    */
+  private[graft] def historyRequest(p: HistoryParams, agg: Option[String]): Request = {
     QueryValidation.validateHistory(
       p.geohashes,
       p.precision,
@@ -272,14 +297,17 @@ class ExploraService(
   }
 
   /** GET …/snapshot equivalent (QueryingService.java:137-230). */
-  def snapshot(p: SnapshotParams): DataFrame = snapshotProbe(p, Some(p.aggregate))
+  def snapshot(p: SnapshotParams): DataFrame = snapshotRequest(p, Some(p.aggregate)).frame
 
   /** [[snapshot]] with the full Aggregate per cell — the `local=true`
     * payload shape (QueryingService.java:258-261).
     */
-  def snapshotFull(p: SnapshotParams): DataFrame = snapshotProbe(p, None)
+  def snapshotFull(p: SnapshotParams): DataFrame = snapshotRequest(p, None).frame
 
-  private def snapshotProbe(p: SnapshotParams, agg: Option[String]): DataFrame = {
+  /** A snapshot GET bound to its values: [[snapshot]] with `agg`, or
+    * [[snapshotFull]] when `agg` is None.
+    */
+  private[graft] def snapshotRequest(p: SnapshotParams, agg: Option[String]): Request = {
     QueryValidation.validateSnapshot(
       p.tsMs, p.north, p.west, p.south, p.east, p.precision, p.aggregate, p.resolution)
     // bounded prefix covers work for ANY bbox size: full-length prefixes
@@ -301,7 +329,7 @@ class ExploraService(
       agg: Option[String],
       metric: String,
       tsMs: Long,
-      cover: Cover): DataFrame =
+      cover: Cover): Request =
     probe(ViewKey(geoIndex, precision, resolution), Snapshot, agg, metric,
       Seq(ExploraQueries.truncateTs(Instant.ofEpochMilli(tsMs), resolution)), cover)
 
@@ -321,7 +349,18 @@ class ExploraService(
       tsMs: Long,
       precision: Int,
       resolution: String,
-      geoIndex: String = "quadtiling"): DataFrame = {
+      geoIndex: String = "quadtiling"): DataFrame =
+    snapshotPolygonRequest(polygon, metricId, aggregate, tsMs, precision, resolution, geoIndex).frame
+
+  /** [[snapshotPolygon]] bound to its values. */
+  private[graft] def snapshotPolygonRequest(
+      polygon: Seq[(Double, Double)],
+      metricId: String,
+      aggregate: String,
+      tsMs: Long,
+      precision: Int,
+      resolution: String,
+      geoIndex: String): Request = {
     // geoIndex default matches SnapshotParams — the two snapshot entry
     // points must not silently query different index families
     val (latMin, latMax, lonMin, lonMax) = graft.geo.Geometry.bboxOf(polygon)
@@ -382,6 +421,54 @@ object ExploraService {
       agg: Option[String],
       prefixLen: Option[Int],
       oneSplit: Boolean)
+
+  /** The prepared plans of a shape: the analyzed plan of
+    * [[ExploraQueries.query]] over slots and, for a one-split shape, its
+    * non-adaptive physical plan, prepared from it on first use (class
+    * scaladoc).
+    */
+  private final class Prepared(spark: SparkSession, val analyzed: LogicalPlan, oneSplit: Boolean) {
+    lazy val physical: Option[SparkPlan] = Option.when(oneSplit)(Shim.preparedPlan(spark, analyzed))
+  }
+
+  /** One request: its values, bound on demand into its shape's plans. */
+  private[graft] final class Request private[ExploraService] (
+      val spark: SparkSession,
+      prepared: Prepared,
+      values: Map[String, Expression],
+      sets: Map[String, Seq[String]]) {
+
+    /** The DataFrame of the bound analyzed plan: it is optimized and
+      * planned when it runs, like any frame.
+      */
+    def frame: DataFrame = Shim.analyzedFrame(spark, Slot.bind(prepared.analyzed, values, sets))
+
+    /** For a one-split shape, a copy of its physical plan with the values
+      * bound, ready to run; None for any other shape.
+      */
+    def physicalPlan: Option[SparkPlan] =
+      prepared.physical.map(p => Shim.withActive(spark)(Slot.bind(p, values, sets)))
+
+    /** The result rows as Scala values, strings as `String`. A one-split
+      * request runs its bound physical plan with `executeCollect` and
+      * reads the values straight from the `InternalRow`s; any other
+      * request collects its frame.
+      */
+    def collect(): Seq[Seq[Any]] = physicalPlan match {
+      case Some(plan) =>
+        val types = plan.output.map(_.dataType)
+        Shim.withActive(spark)(plan.executeCollect()).toSeq.map { r =>
+          types.indices.map { i =>
+            if (r.isNullAt(i)) null
+            else r.get(i, types(i)) match {
+              case s: UTF8String => s.toString
+              case v             => v
+            }
+          }
+        }
+      case None => frame.collect().toSeq.map(_.toSeq)
+    }
+  }
 
   /** Evaluates `build` at most once, on the first `value`. */
   private final class Once[A](build: => A) {

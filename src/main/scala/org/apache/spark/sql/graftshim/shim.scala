@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 
 /** Minimal bridge into `private[sql]` surface, the same technique public
   * Spark extensions (Sedona, frameless, spark-daria) use: a shim compiled
@@ -28,6 +29,24 @@ object Shim {
     plan.setAnalyzed()
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
   }
+
+  /** The physical plan of `plan`, an analyzed plan, prepared for
+    * execution WITHOUT adaptive execution: the optimizer and the planner
+    * run once here, and the result is Spark's own non-adaptive
+    * preparation of the planned tree (`EnsureRequirements`, codegen
+    * stages), the form a subquery's plan takes. The session and its
+    * conf are the caller's; nothing is changed for other queries.
+    */
+  def preparedPlan(spark: SparkSession, plan: LogicalPlan): SparkPlan = {
+    val session = spark.asInstanceOf[classic.SparkSession]
+    session.withActive(QueryExecution.prepareExecutedPlan(session, analyzedFrame(session, plan).queryExecution.sparkPlan))
+  }
+
+  /** `body` with `spark` as the thread's active session. A `SparkPlan`
+    * node takes its session from there when it is built or copied, and
+    * runs in it.
+    */
+  def withActive[T](spark: SparkSession)(body: => T): T = spark.withActive(body)
 
   /** Register an expression builder under `name` for SQL usage. */
   def registerFunction(

@@ -3,7 +3,7 @@ package graft
 import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 
 import graft.api.{ExploraService, HistoryParams, SnapshotParams}
-import graft.functions.{GeoFunctions, Slot, TimestampParam}
+import graft.functions.{Slot, TimestampParam}
 import graft.geo.{GeoHash, QuadKey}
 import graft.operators.{ExploraQueries, ViewBuilder}
 import graft.sources.SensorGrid
@@ -23,6 +23,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The service facade: same routing as the reference's REST endpoints. */
 class ExploraServiceSpec extends AnyFunSuite {
   import SparkTestBase._
+  import ExploraFixtures.{worldPoints, worldReadings}
 
   private lazy val svc = new ExploraService(SensorGrid.readings(spark, Sf0001).cache())
 
@@ -222,8 +223,8 @@ class ExploraServiceSpec extends AnyFunSuite {
   // files to every partition
   private lazy val storeReadings = SensorGrid.readings(spark, Sf0001).repartition(1).cache()
   private lazy val disk2 = new ExploraService(storeReadings, viewStore = Some(tempDir("graft-vs2")))
-  private lazy val disk5 =
-    new ExploraService(storeReadings, viewStore = Some(tempDir("graft-vs5")), geoPartLen = 5)
+  private lazy val disk5Store = tempDir("graft-vs5")
+  private lazy val disk5 = new ExploraService(storeReadings, viewStore = Some(disk5Store), geoPartLen = 5)
 
   private val snapTs = java.time.Instant.parse("2024-01-15T07:00:00Z").toEpochMilli
   private val (u1555jLat, u1555jLon) = graft.geo.GeoHash.decode("u1555j")
@@ -387,22 +388,6 @@ class ExploraServiceSpec extends AnyFunSuite {
   private def triangle(lat: Double, lon: Double, r: Double): Seq[(Double, Double)] =
     Seq((lat + r, lon - r), (lat + r, lon + r), (lat - r, lon))
 
-  // quadkeys of the north-west quadrant start with 0; their all-digit
-  // geo_part directories would be inferred as integers ("03201" → 3201)
-  private val worldPoints = Seq(
-    (40.71, -74.00), (41.88, -87.63), (47.61, -122.33), (19.43, -99.13), // 0…
-    (51.22, 4.40), (-33.87, 151.21)) // 1…, 3…
-  private lazy val worldReadings: DataFrame = {
-    import spark.implicits._
-    val ts = new java.sql.Timestamp(snapTs)
-    worldPoints.zipWithIndex.map { case ((lat, lon), i) => (lat, lon, ts, i + 1.0) }
-      .toDF("lat", "lon", "ts", "value")
-      .select(
-        lit("signup").as("metric"), col("ts"), col("value"),
-        GeoFunctions.geohash_encode(col("lat"), col("lon"), 12).as("gh12"),
-        GeoFunctions.quadkey(col("lat"), col("lon"), 14).as("qk14"))
-      .cache()
-  }
   private val worldBox = SnapshotParams(
     "signup", "count", snapTs, 80.0, -180.0, -60.0, 180.0, 14, "day", geoIndex = "quadtiling")
   private lazy val worldDisk =
@@ -523,6 +508,42 @@ class ExploraServiceSpec extends AnyFunSuite {
       assert(runs === 0, s"probe $i ran $runs analyzer rules building its frame")
       assert(df.collect().nonEmpty, s"probe $i")
     }
+  }
+
+  // ---- prepared physical plans: a one-split request runs a bound copy
+
+  private def scanOf(r: ExploraService.Request): FileSourceScanExec =
+    r.physicalPlan.get.collect { case f: FileSourceScanExec => f }.head
+
+  // the HTTP facade's specs compare the GET bodies of both paths; a
+  // polygon snapshot (cells, not prefixes) has no route
+  test("prepared physical plans: a one-split polygon snapshot's bound plan answers exactly like its frame") {
+    val (eLat, eLon) = GeoHash.decode("u1555k")
+    val none = Seq((eLat + 0.001, eLon + 0.001), (eLat + 0.001, eLon + 0.0011), (eLat + 0.0009, eLon + 0.001))
+    for ((polygon, rows) <- Seq(triangle(u1555jLat, u1555jLon, 0.02) -> "some", none -> "none")) {
+      val r = disk2.snapshotPolygonRequest(polygon, "signup", "count", snapTs, 6, "day", "geohashing")
+      assert(r.physicalPlan.isDefined, s"$rows: not a one-split request")
+      val want = r.frame.collect().toSeq.map(_.toSeq)
+      assert(want.isEmpty === (rows == "none"), s"$rows: ${want.size} rows")
+      assert(r.collect() === want, rows)
+    }
+  }
+
+  test("prepared physical plans: the bound scan prunes geo_part partitions and pushes the geo predicates") {
+    // a box inside the cell u1555j: one geo_part of several at geoPartLen 5
+    val cellBox = smallBox.copy(
+      north = u1555jLat + 0.002, west = u1555jLon - 0.002, south = u1555jLat - 0.002, east = u1555jLon + 0.002)
+    assert(coverOf(cellBox) === Seq("u1555j"))
+    val snap = scanOf(disk5.snapshotRequest(cellBox, Some("count")))
+    assert(snap.metadata.getOrElse("PartitionFilters", "").contains("geo_part"), snap.metadata)
+    val allParts = new java.io.File(s"$disk5Store/geohashing_p6_day/metric=signup")
+      .listFiles().count(_.getName.startsWith("geo_part="))
+    assert(snap.selectedPartitions.partitionCount < allParts, "the bound scan reads every signup partition")
+    val pushedRange = snap.metadata.getOrElse("PushedFilters", "")
+    assert(pushedRange.contains("GreaterThanOrEqual(geo,") && pushedRange.contains("LessThan(geo,"), pushedRange)
+    val hist = scanOf(disk2.historyRequest(januaryHistory, Some("avg")))
+    assert(hist.metadata.getOrElse("PartitionFilters", "").contains("geo_part"), hist.metadata)
+    assert(hist.metadata.getOrElse("PushedFilters", "").contains("In(geo,"), hist.metadata)
   }
 
   test("disk-backed view store: a probe spanning several input splits keeps its exchanges") {

@@ -5,7 +5,11 @@ import java.nio.charset.StandardCharsets
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.api.{ExploraHttpServer, ExploraService, HistoryParams, SnapshotParams}
+import graft.geo.{GeoHash, QuadKey}
 import graft.sources.SensorGrid
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.rules.RuleExecutor
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -22,7 +26,19 @@ class HttpFacadeSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val httpServer = new ExploraHttpServer(svc)
   private lazy val base = s"http://127.0.0.1:${httpServer.start()}"
 
-  override def afterAll(): Unit = httpServer.stop()
+  // servers started by the prepared-path specs below
+  private val servers = new java.util.concurrent.ConcurrentLinkedQueue[ExploraHttpServer]()
+
+  override def afterAll(): Unit = {
+    httpServer.stop()
+    servers.forEach(_.stop())
+  }
+
+  private def serve(service: ExploraService): String = {
+    val server = new ExploraHttpServer(service)
+    servers.add(server)
+    s"http://127.0.0.1:${server.start()}"
+  }
 
   private def getRaw(baseUrl: String, pathAndQuery: String): (Int, String) = {
     val conn = URI.create(baseUrl + pathAndQuery).toURL
@@ -424,5 +440,219 @@ class HttpFacadeSpec extends AnyFunSuite with BeforeAndAfterAll {
       info(f"disk-backed sf0.1: 200 requests, concurrency 10: $sec%.2f s -> $rps%.1f req/s")
       assert(rps > 1.0, f"throughput collapsed: $rps%.2f req/s")
     } finally serverDisk.stop()
+  }
+
+  test("405: a non-GET request to a route runs nothing and answers with Allow: GET") {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val marker = s"method-marker-${java.util.UUID.randomUUID()}"
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker)) markerSeen.countDown()
+        else jobs.incrementAndGet()
+    }
+    val history = s"/api/airquality/click/aggregate/avg/history?geohashes=${gh6.mkString(",")}" +
+      s"&res=day&from=$fromMs&to=$toMs"
+    val snapshot = s"/api/airquality/signup/aggregate/avg/snapshot?ts=$snapTsMs&res=day&bbox=51.31,4.31,51.17,4.50"
+    assert(get(history)._1 === 200 && get(snapshot)._1 === 200) // warm: views built before counting
+    sc.addSparkListener(listener)
+    try {
+      for (path <- Seq(history, snapshot); method <- Seq("POST", "DELETE", "PUT")) {
+        val conn = URI.create(base + path).toURL.openConnection().asInstanceOf[HttpURLConnection]
+        conn.setRequestMethod(method)
+        assert(conn.getResponseCode === 405, s"$method $path")
+        val body = new String(conn.getErrorStream.readAllBytes(), StandardCharsets.UTF_8)
+        assert(conn.getHeaderField("Allow") === "GET", s"$method $path")
+        val json = mapper.readTree(body)
+        assert(json.get("errorCode").asInt === 405 && json.get("errorMessage").asText.contains(method), body)
+        conn.disconnect()
+      }
+      sc.setJobGroup(marker, "listener flush")
+      sc.parallelize(Seq(1), 1).count()
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(jobs.get === 0, s"non-GET requests ran ${jobs.get} Spark jobs")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  // ---- the prepared path: a one-split GET runs a bound physical plan
+
+  // a disk store at geoPartLen 2: the whole sf0.001 grid (u1…) is one
+  // partition of one file, so every GET is one split. The readings need
+  // a plan of their own: over `svc`'s, Spark's cache manager would
+  // write `svc`'s persisted four-partition views, four files to a
+  // partition
+  private lazy val disk = new ExploraService(
+    SensorGrid.readings(spark, Sf0001).repartition(1),
+    viewStore = Some(java.nio.file.Files.createTempDirectory("graft-http-prepared").toString))
+  private lazy val diskBase = serve(disk)
+  // quadtiles of the world at geoPartLen 1: the north-west quadrant (0…) is one partition
+  private lazy val world = new ExploraService(
+    ExploraFixtures.worldReadings.repartition(1),
+    viewStore = Some(java.nio.file.Files.createTempDirectory("graft-http-world").toString), geoPartLen = 1)
+  private lazy val worldBase = serve(world)
+
+  private def historyPath(p: HistoryParams): String =
+    s"/api/airquality/${p.metricId}/aggregate/${p.aggregate}/history?geohashes=${p.geohashes.mkString(",")}" +
+      s"&gh_precision=${p.precision}&res=${p.resolution.get}&from=${p.fromMs.get}&to=${p.toMs}"
+
+  private def snapshotPath(p: SnapshotParams): String =
+    s"/api/airquality/${p.metricId}/aggregate/${p.aggregate}/snapshot?ts=${p.tsMs}" +
+      s"&bbox=${p.north},${p.west},${p.south},${p.east}&gh_precision=${p.precision}&res=${p.resolution}" +
+      s"&geo_index=${p.geoIndex}"
+
+  /** The body the facade writes for `df`'s rows: the `Message` envelope,
+    * or the `local=true` map when `columns` is empty.
+    */
+  private def frameBody(df: DataFrame, columns: Seq[String], metricId: String): String = {
+    val rows = df.collect()
+    val root = mapper.createObjectNode()
+    if (columns.isEmpty) rows.foreach { r =>
+      val o = root.putObject(String.valueOf(r.get(0)))
+      o.put("count", r.getLong(1))
+      o.put("sum", r.getDouble(2))
+      o.put("avg", r.getDouble(3))
+    }
+    else {
+      val cols = root.putArray("columns")
+      columns.foreach(cols.add)
+      val data = root.putArray("data")
+      rows.foreach { r =>
+        val a = data.addArray()
+        r.toSeq.foreach {
+          case l: Long   => a.add(l)
+          case d: Double => a.add(d)
+          case s: String => a.add(s)
+          case other     => fail(s"unexpected value $other")
+        }
+      }
+      root.putObject("metadata").put("metric_id", metricId)
+    }
+    mapper.writeValueAsString(root)
+  }
+
+  private val january = HistoryParams(
+    "click", "avg", gh6, 6, resolution = Some("day"), fromMs = Some(fromMs), toMs = toMs)
+  private val antwerp = SnapshotParams(
+    "signup", "avg", snapTsMs, 51.31, 4.31, 51.17, 4.50, 6, "day", geoIndex = "geohashing")
+
+  test("a one-split GET's body is byte-identical to its DataFrame path") {
+    val (nyLat, nyLon) = ExploraFixtures.worldPoints.head
+    val ny = SnapshotParams("signup", "sum", ExploraFixtures.snapTs,
+      nyLat + 0.02, nyLon - 0.03, nyLat - 0.02, nyLon + 0.03, 14, "day", geoIndex = "quadtiling")
+    assert(QuadKey.coverPrefixes(ny.north, ny.west, ny.south, ny.east, 14).forall(c => c.length == 14 && c.startsWith("0")))
+    assert(GeoHash.coverPrefixes(51.31, 4.31, 51.17, 4.50, 6).head.length < 6)
+    val oneCell = january.copy(metricId = "signup", aggregate = "count", geohashes = Seq("u1555j"))
+    val unknown = january.copy(metricId = "nope")
+    // (name, server, path, the GET's request on its service, the envelope's columns; none for local=true)
+    val cases: Seq[(String, String, String, ExploraService.Request, Seq[String])] = Seq(
+      ("history", diskBase, historyPath(january), disk.historyRequest(january, Some("avg")), Seq("timestamp", "avg")),
+      ("historyFull", diskBase, historyPath(january) + "&local=true", disk.historyRequest(january, None), Nil),
+      ("one-cell history", diskBase, historyPath(oneCell), disk.historyRequest(oneCell, Some("count")),
+        Seq("timestamp", "count")),
+      ("geohash prefix cover", diskBase, snapshotPath(antwerp), disk.snapshotRequest(antwerp, Some("avg")),
+        Seq("geohash", "avg")),
+      ("quadtiling exact cover, leading-zero quadkeys", worldBase, snapshotPath(ny),
+        world.snapshotRequest(ny, Some("sum")), Seq("geohash", "sum")),
+      ("unknown metric", diskBase, historyPath(unknown), disk.historyRequest(unknown, Some("avg")),
+        Seq("timestamp", "avg")))
+    for ((name, server, path, request, columns) <- cases) {
+      assert(request.physicalPlan.isDefined, s"$name is not a one-split GET")
+      val (code, body) = getRaw(server, path)
+      assert(code === 200, s"$name: $body")
+      val metricId = path.split("/")(3)
+      assert(body === frameBody(request.frame, columns, metricId), name)
+      val json = mapper.readTree(body)
+      val rows = if (columns.isEmpty) json.size else json.get("data").size
+      assert((rows == 0) === (name == "unknown metric"), s"$name: $rows rows")
+    }
+    assert(getRaw(diskBase, historyPath(unknown))._2.contains("\"data\":[]"))
+  }
+
+  /** Runs per Catalyst rule so far, from Spark's rule metering. */
+  private def ruleRuns(): Map[String, Long] =
+    RuleExecutor.dumpTimeSpent().linesIterator.map(_.trim.split("\\s+")).collect {
+      case Array(rule, _, "/", _, _, "/", runs) => rule -> runs.toLong
+    }.toMap
+
+  test("a warmed one-split GET shape runs no optimizer or planner rule and compiles nothing") {
+    val day = 86400000L
+    val quad = antwerp.copy(aggregate = "sum", precision = 14, geoIndex = "quadtiling")
+    val warm = Seq(historyPath(january), snapshotPath(antwerp), snapshotPath(quad))
+    val reruns = Seq(
+      historyPath(january.copy(geohashes = gh6.drop(2).take(20), fromMs = Some(fromMs + 3 * day), toMs = toMs - 2 * day)),
+      snapshotPath(antwerp.copy(tsMs = snapTsMs + 2 * day, west = 4.36, east = 4.55)),
+      snapshotPath(quad.copy(tsMs = snapTsMs - day, west = 4.33, east = 4.48)))
+    // a rerun keeps its cover's shape (one prefix length) but not its list
+    assert(GeoHash.coverPrefixes(51.31, 4.36, 51.17, 4.55, 6).map(_.length).distinct ===
+      GeoHash.coverPrefixes(51.31, 4.31, 51.17, 4.50, 6).map(_.length).distinct)
+    assert(QuadKey.coverPrefixes(51.31, 4.33, 51.17, 4.48, 14).map(_.length).distinct ===
+      QuadKey.coverPrefixes(51.31, 4.31, 51.17, 4.50, 14).map(_.length).distinct)
+    warm.foreach(p => assert(getRaw(diskBase, p)._1 === 200, p))
+    val runs0 = ruleRuns()
+    assert(runs0.size > 10, "Spark's rule metering did not parse")
+    val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val got = reruns.map(getRaw(diskBase, _))
+    val ran = ruleRuns().filter { case (rule, n) => n != runs0.getOrElse(rule, 0L) }.keySet
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0
+    got.zip(reruns).foreach { case ((code, body), p) =>
+      assert(code === 200 && mapper.readTree(body).get("data").size > 0, s"$p: $body")
+    }
+    // executing any plan canonicalizes the expressions it generates code
+    // for; every other Catalyst rule belongs to analysis, optimization or
+    // (adaptive) planning
+    val others = ran.filterNot(_.contains("ExpressionCanonicalizer")).toSeq.sorted
+    assert(others.isEmpty, s"the reruns ran ${others.size} other Catalyst rules: ${others.take(8).mkString(", ")}, …")
+    assert(compiled === 0, s"the reruns compiled $compiled classes")
+  }
+
+  test("8 concurrent one-split GETs binding distinct values each get their own answer") {
+    val day = 86400000L
+    val params = (0 until 8).map(i => january.copy(
+      geohashes = gh6.drop(i).take(3 + i), fromMs = Some(fromMs + i * day), toMs = toMs - (7 - i) * day))
+    assert(params.forall(p => disk.historyRequest(p, Some("avg")).physicalPlan.isDefined))
+    val want = params.map(p => frameBody(disk.history(p), Seq("timestamp", "avg"), "click"))
+    assert(want.distinct.size === params.size)
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      val futures = params.map(p => pool.submit(new java.util.concurrent.Callable[(Int, String)] {
+        def call(): (Int, String) = { go.await(); getRaw(diskBase, historyPath(p)) }
+      }))
+      go.countDown()
+      futures.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS)).zip(want).zipWithIndex.foreach {
+        case (((code, body), w), i) => assert(code === 200 && body === w, s"thread $i")
+      }
+    } finally pool.shutdown()
+  }
+
+  test("a one-split GET is one Spark job labelled explora:<route>") {
+    val sc = spark.sparkContext
+    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val marker = s"prepared-marker-${java.util.UUID.randomUUID()}"
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker)) markerSeen.countDown()
+        else descriptions.add(Option(e.properties).map(_.getProperty("spark.job.description")).orNull)
+    }
+    val paths = Seq(historyPath(january), snapshotPath(antwerp))
+    assert(disk.historyRequest(january, Some("avg")).physicalPlan.isDefined &&
+      disk.snapshotRequest(antwerp, Some("avg")).physicalPlan.isDefined)
+    paths.foreach(p => assert(getRaw(diskBase, p)._1 === 200)) // warm: views built before counting
+    sc.addSparkListener(listener)
+    try {
+      paths.foreach(p => assert(getRaw(diskBase, p)._1 === 200))
+      sc.setJobGroup(marker, "listener flush")
+      sc.parallelize(Seq(1), 1).count()
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(descriptions.toArray.toSeq === Seq("explora:history", "explora:snapshot"))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 }
