@@ -142,82 +142,20 @@ object Layout {
     * Touched = cells the bucketized batch lands in ∪ cells where a
     * batch `event_id` currently lives (a corrected event whose
     * user/day moved must leave its OLD cell — the re-embedded-vector
-    * case). Survivors of touched cells are anti-joined on `event_id`,
-    * unioned with the batch, and swapped in by the one store write
-    * transaction ([[StoreManifest.swapPartitions]]: staged write, then
-    * a rename per cell) — untouched cell directories stay byte-identical (LayoutSpec
-    * asserts this on file bytes). Cost ∝ touched-cell bytes, never
-    * corpus bytes. Returns the touched cell ids.
+    * case). The keyed-store maintenance transaction
+    * ([[StoreManifest.maintain]]) appends a pure-insert batch, or
+    * swaps the touched cells' survivors ∪ batch in — untouched cell
+    * directories stay byte-identical (LayoutSpec asserts this on file
+    * bytes). Cost ∝ touched-cell bytes, never corpus bytes. Returns
+    * the touched cell ids.
     */
-  def zorderUpsert(spark: SparkSession, batch: DataFrame, path: String): Seq[Int] = {
-    // pin the bucketized batch for the call: it feeds the old-home
-    // probe, the new-home collect, the survivor anti-join, the merge
-    // union and the manifest adds — 5 evaluations of the batch's
-    // upstream scan without it. Memory ∝ batch; released in the finally.
-    val assigned = StoreManifest.pinBatch(bucketized(batch))
-    try zorderUpsertPinned(spark, assigned, path)
-    finally assigned.unpersist(blocking = false)
-  }
-
-  private def zorderUpsertPinned(
-      spark: SparkSession,
-      assigned: DataFrame,
-      path: String): Seq[Int] = {
-    val store = graft.sources.Tables.readStable(spark, path)
-    val batchIds = assigned.select(col("event_id"))
-    // no broadcast hint on the id probe: a daily batch's id frame grows
-    // with the batch, and a forced broadcast would hit the driver
-    // ceiling at real increment sizes (the JL-rerank lesson, ADVICE
-    // r11) — AQE broadcasts it when it measures small. The probe reads
-    // the event→cell manifest, never the layout's own bytes; old-home,
-    // new-home and mpart collects are fused into two actions
-    // (VERDICT r13 #1).
-    val pr = StoreManifest.probeFused(
-      spark, path, batchIds, "event_id",
-      newHomes = Some(assigned.select(col("z_cell"))),
-      storeBucketCol = "z_cell",
-      store = Some(store))
-    val touched = pr.touched
-    if (touched.isEmpty) return touched
-    val outCols = store.columns.filterNot(_ == "z_cell").map(col) :+
-      col("z_cell").cast("int").as("z_cell")
-    // insert-only fast path (pure-insert daily batch — no corrected
-    // event lives in the layout): append the batch into its cell
-    // directories and append the manifest pairs, inside the same
-    // pending-marker transaction; no survivor anti-join, no staged
-    // swap. Small files are the compaction pass's business.
-    if (pr.insertOnly) {
-      // time-travel: pre-append FILE LISTS, metadata only (zero byte
-      // copies — VERDICT r14 #1); one FS check when versioning is off
-      StoreGenerations.archivePreAppend(spark, path, touched, "z_cell")
-      val heal = StoreManifest.beginMaintenance(spark, path)
-      // one writer task per touched cell (explicit count — AQE would
-      // coalesce a count-less repartition to a single task that writes
-      // every cell file sequentially; routeToBuckets note)
-      StoreManifest.routeToBuckets(
-        assigned.select(outCols: _*), touched.size, "z_cell")
-        .write.mode("append").partitionBy("z_cell").parquet(path)
-      StoreManifest.update(
-        spark, path, "event_id",
-        adds = Some(assigned.select(col("event_id"), col("z_cell"))),
-        bucketCol = "z_cell", storeBucketCol = "z_cell",
-        heal = heal, idUnique = true)
-      return touched
+  def zorderUpsert(spark: SparkSession, batch: DataFrame, path: String): Seq[Int] =
+    StoreManifest.maintain(spark, path, CellStore, bucketized(batch)) { (store, assigned) =>
+      StoreManifest.Change(
+        assigned.select(col("event_id")), Some(assigned), store.columns.toSeq.filterNot(_ == "z_cell"))
     }
-    val survivors = store
-      .filter(col("z_cell").isin(touched.map(Int.box): _*))
-      .join(batchIds, Seq("event_id"), "left_anti")
-      .select(outCols: _*)
-    val merged = survivors.unionByName(assigned.select(outCols: _*))
-    val heal = StoreManifest.beginMaintenance(spark, path)
-    StoreManifest.swapPartitions(spark, merged, path, Seq("z_cell"), touched.map(c => s"z_cell=$c"))
-    StoreManifest.update(
-      spark, path, "event_id",
-      adds = Some(assigned.select(col("event_id"), col("z_cell"))),
-      bucketCol = "z_cell", storeBucketCol = "z_cell",
-      heal = heal, idUnique = true)
-    touched
-  }
+
+  private val CellStore = StoreManifest.KeyedStore("event_id", "z_cell", idUnique = true)
 
   /** Bound the small files that streaming/daily [[zorderUpsert]]
     * batches leave in the cell directories — the layout's missing
@@ -235,8 +173,7 @@ object Layout {
       path: String,
       maxFilesPerCell: Int = 1): Seq[String] = {
     val out = StoreManifest.compactStore(spark, path, Seq("z_cell"), maxFilesPerCell)
-    StoreManifest.rebuild(
-      spark, path, "event_id", storeBucketCol = "z_cell", idUnique = true)
+    StoreManifest.rebuild(spark, path, "event_id", bucketCol = "z_cell", idUnique = true)
     out
   }
 

@@ -133,20 +133,23 @@ object Retrieval {
     * the same skew the join's token-keyed exchange had.
     */
   private def postingsAndStats(docs: DataFrame): (DataFrame, DataFrame) = {
-    val postings = rawPostings(docs)
+    val postings = rawPostings(tokens(docs))
       .withColumn("df", count(lit(1)).over(Window.partitionBy(col("token"))))
       .select(col("token"), col("doc_id"), col("len"), col("tf"), col("df"))
-    (postings, corpusStats(docs))
+    (postings, corpusStats(tokens(docs)))
   }
 
   /** `(token, df)` — the document-frequency frame. */
   private def dfFrame(docs: DataFrame): DataFrame =
-    rawPostings(docs).groupBy(col("token")).agg(count(lit(1)).as("df"))
+    rawPostings(tokens(docs)).groupBy(col("token")).agg(count(lit(1)).as("df"))
+
+  /** `(doc_id, tk)` — each document's token array. */
+  private def tokens(docs: DataFrame): DataFrame =
+    graft.sources.Tables.fanOut(docs).select(col("doc_id"), expr(toks).as("tk"))
 
   /** `(doc_id, len, token, tf)` — postings without the df column. */
-  private def rawPostings(docs: DataFrame): DataFrame =
-    graft.sources.Tables.fanOut(docs)
-      .select(col("doc_id"), expr(toks).as("tk"))
+  private def rawPostings(tokenized: DataFrame): DataFrame =
+    tokenized
       .select(col("doc_id"), size(col("tk")).as("len"), explode(col("tk")).as("token"))
       .groupBy(col("doc_id"), col("len"), col("token"))
       .agg(count(lit(1)).as("tf"))
@@ -156,9 +159,8 @@ object Retrieval {
     * order — and `sum_len` persists so the incremental path can update
     * the average exactly (old − replaced + batch on longs).
     */
-  private def corpusStats(docs: DataFrame): DataFrame =
-    graft.sources.Tables.fanOut(docs)
-      .select(col("doc_id"), expr(toks).as("tk"))
+  private def corpusStats(tokenized: DataFrame): DataFrame =
+    tokenized
       .agg(
         count(lit(1)).as("n_docs"),
         sum(size(col("tk")).cast("long")).as("sum_len"))
@@ -219,8 +221,8 @@ object Retrieval {
     * one-row corpus stats at `statsPath`. At 100 TB this is the
     * inverted-index build — two hash aggregations and one
     * token-keyed join, written once, queried forever; incremental
-    * maintenance composes via [[Similarity.storeUpsert]] on the same
-    * bucket layout.
+    * maintenance is [[bm25IndexUpsert]] / [[bm25IndexDelete]] on the
+    * same bucket layout.
     */
   def bm25IndexWrite(docs: DataFrame, path: String, statsPath: String): Unit = {
     // Pin the tokenization ONCE across the two writes (the
@@ -229,254 +231,146 @@ object Retrieval {
     // at 100 TB that is two corpus scans where one suffices, and at
     // bench SF the tokenize dominates the build. Frame ∝ corpus rows
     // (doc_id + token array), released in the finally.
-    val tokenized = StoreManifest.pinBatch(
-      graft.sources.Tables.fanOut(docs)
-        .select(col("doc_id"), expr(toks).as("tk")))
-    try bm25IndexWritePinned(tokenized, path, statsPath)
-    finally { tokenized.unpersist(blocking = false); () }
+    val tokenized = StoreManifest.pinBatch(tokens(docs))
+    try {
+      val sharded = withDf(rawPostings(tokenized).withColumn("bucket", bucketOfCol(col("token"))))
+      // one writer task per shard (explicit count — AQE would coalesce a
+      // count-less repartition to one task; StoreManifest.routeToBuckets
+      // note), and exactly one file per shard directory per build
+      // instead of input-tasks × shards
+      StoreManifest.routeToBuckets(sharded, PostingsBuckets, "bucket")
+        .write.mode("overwrite").partitionBy("bucket").parquet(path)
+      // doc→shard manifest build is LAZY (round 14): a stored index that
+      // is only ever queried never probes one; the first upsert/delete's
+      // backfill builds it from the postings' own (doc_id, bucket) pairs
+      corpusStats(tokenized).write.mode("overwrite").parquet(statsPath)
+    } finally { tokenized.unpersist(blocking = false); () }
   }
 
-  private def bm25IndexWritePinned(
-      tokenized: DataFrame,
-      path: String,
-      statsPath: String): Unit = {
-    val postings = tokenized
-      .select(col("doc_id"), size(col("tk")).as("len"), explode(col("tk")).as("token"))
-      .groupBy(col("doc_id"), col("len"), col("token"))
-      .agg(count(lit(1)).as("tf"))
-      .withColumn("df", count(lit(1)).over(Window.partitionBy(col("token"))))
-      .select(col("token"), col("doc_id"), col("len"), col("tf"), col("df"))
-    val stats = tokenized
-      .agg(
-        count(lit(1)).as("n_docs"),
-        sum(size(col("tk")).cast("long")).as("sum_len"))
-      .withColumn("avg_len", col("sum_len").cast("double") / col("n_docs"))
-      .select(col("n_docs"), col("sum_len"), col("avg_len"))
-    val sharded = postings.withColumn("bucket", bucketOfCol(col("token")))
-    // one writer task per shard (explicit count — AQE would coalesce a
-    // count-less repartition to one task; StoreManifest.routeToBuckets
-    // note), and exactly one file per shard directory per build instead
-    // of input-tasks × shards
-    StoreManifest.routeToBuckets(sharded, PostingsBuckets, "bucket")
-      .write.mode("overwrite").partitionBy("bucket").parquet(path)
-    // doc→shard manifest build is LAZY (round 14): a stored index that
-    // is only ever queried never probes one; the first upsert/delete's
-    // heal path builds it from the postings' own (doc_id, bucket) pairs
-    stats.write.mode("overwrite").parquet(statsPath)
-  }
-
-  /** Answer the panel FROM the stored index: the panel's terms select
-    * their shard directories via a literal `bucket IN (...)` that lands
-    * in the scan's PartitionFilters (file-level pruning — the
-    * [[Similarity.ivfStoredTopK]] contract, spec-asserted), the `token
-    * IN (...)` literal prunes further via parquet min/max, and the
-    * ranking is [[rankBm25]]'s — storage must be result-invisible, so
-    * the stored entry shares `bm25_topk`'s oracle. The panel-term
-    * collect is bounded (≤ [[PanelQueries]]·[[QueryTermCount]] strings),
-    * the same class as the probe-list boundary.
-    */
   /** INCREMENTAL index maintenance — the daily-crawl shape for the
     * lexical index, mirroring [[Similarity.ivfStoreUpsert]]'s
     * semantics: a batch document REPLACES its old postings everywhere
     * they live (a re-crawled doc's token set can change, so its stale
     * postings may sit in buckets the new text never touches — the
-    * old-home pass below is required for correctness, and the gate's
+    * old-home pass is required for correctness, and the gate's
     * re-texted doc makes skipping it a hash mismatch); new documents
     * append.
     *
     * Why this can be bucket-local at all: a token's ENTIRE postings
     * list lives in its one hash bucket, so df — denormalized onto the
     * posting rows — is recomputable from the merged content of the
-    * touched buckets alone, and untouched buckets' df cannot have
-    * changed (no posting of a batch doc lives there, by the definition
-    * of touched). The corpus stats update is exact long arithmetic:
+    * touched buckets alone ([[withDf]]), and untouched buckets' df
+    * cannot have changed (no posting of a batch doc lives there, by the
+    * definition of touched). The same denormalized df is why even an
+    * insert-only batch rewrites its touched buckets instead of
+    * appending. The corpus stats update is exact long arithmetic:
     * (n_docs, sum_len) − replaced + batch. Cost ∝ batch + touched-
     * bucket bytes + one (doc_id, bucket)-projected old-home pass —
     * never corpus bytes. Returns the touched bucket ids.
     *
-    * Crash-consistency scope: the [[StoreManifest.beginMaintenance]]
-    * pending-marker transaction covers ALL THREE artifacts — the
-    * marker goes down before the stats write and is cleared only after
-    * the manifest swap, so a crash anywhere in the window (stats
-    * written but store not swapped; store swapped but manifest stale)
-    * leaves the marker standing, the probe falls back to the
-    * always-correct full-store scan, and the next completed
-    * maintenance call heals by rebuilding the manifest AND the stats
-    * from the store's own post-swap content
-    * ([[writeStatsFromStore]] — `(doc_id, len)` is denormalized onto
-    * every posting row, so the store alone reproduces the exact
-    * counters). A lakehouse table format would commit the three writes
-    * in one transaction; this is the plain-parquet equivalent.
+    * The probe, marker, swap and manifest steps are the keyed-store
+    * maintenance transaction ([[StoreManifest.maintain]]); the stats
+    * file rides it as the sidecar leg ([[statsLeg]]), so the pending
+    * marker covers all three artifacts. A lakehouse table format would
+    * commit the three writes in one transaction; this is the
+    * plain-parquet equivalent.
     */
   def bm25IndexUpsert(
       spark: org.apache.spark.sql.SparkSession,
       docsBatch: DataFrame,
       path: String,
-      statsPath: String): Seq[Int] = {
-    val store = graft.sources.Tables.readStable(spark, path)
-    // Pin the batch's tokenization ONCE: without it the batch is
+      statsPath: String): Seq[Int] =
+    // the pinned batch is the tokenization: without it the batch is
     // re-tokenized for the new-home collect, the merge union, the
-    // manifest adds AND the stats delta — 4 explode+aggregate jobs over
-    // the same rows, the dominant fixed cost of the whole upsert at
-    // tiny SF and 4 redundant batch-sized jobs at 100 TB. All three
-    // frames below are ∝ batch; released in the finally.
-    val tokenized = StoreManifest.pinBatch(
-      graft.sources.Tables.fanOut(docsBatch)
-        .select(col("doc_id"), expr(toks).as("tk")))
-    // derived from the pinned tokenized frame — lazy pins (no eager
-    // count): they materialize inside the probe's first action, and a
-    // concurrent branch only re-reads the warm tokenized cache
-    // (StoreManifest.pinDerived note; two driver actions saved)
-    val batchIds = StoreManifest.pinDerived(
-      tokenized.select(col("doc_id")).distinct())
-    val batchRaw = StoreManifest.pinDerived(
-      tokenized
-        .select(col("doc_id"), size(col("tk")).as("len"), explode(col("tk")).as("token"))
-        .groupBy(col("doc_id"), col("len"), col("token"))
-        .agg(count(lit(1)).as("tf")))
-    try bm25IndexUpsertPinned(spark, store, tokenized, batchIds, batchRaw, path, statsPath)
-    finally Seq(tokenized, batchIds, batchRaw).foreach(_.unpersist(blocking = false))
-  }
+    // manifest adds AND the stats delta
+    StoreManifest.maintain(spark, path, PostingsStore, tokens(docsBatch)) {
+      (store, tokenized) =>
+        // derived from the pinned tokenized frame — lazy pins (no eager
+        // count): they materialize inside the probe's first action, and a
+        // concurrent branch only re-reads the warm tokenized cache
+        // (StoreManifest.pinDerived note; two driver actions saved)
+        val batchIds = StoreManifest.pinDerived(tokenized.select(col("doc_id")).distinct())
+        val postings = StoreManifest.pinDerived(rawPostings(tokenized))
+        StoreManifest.Change(
+          batchIds, Some(postings.withColumn("bucket", bucketOfCol(col("token")))), PostingCols,
+          rederive = Some(withDf),
+          sidecar = statsLeg(spark, store, batchIds, Some(tokenized.select(size(col("tk")).as("len"))),
+            path, statsPath),
+          pins = Seq(batchIds, postings))
+    }
 
-  private def bm25IndexUpsertPinned(
+  private val PostingsStore = StoreManifest.KeyedStore("doc_id", "bucket", idUnique = false)
+
+  /** A posting row's own columns; `df` and the bucket are derived. */
+  private val PostingCols = Seq("doc_id", "len", "token", "tf")
+
+  /** df over bucket-complete postings — every merged token's full
+    * postings list is present — via the token-partition count window
+    * (a self-join's two branches would each rescan the buckets), in
+    * the one field layout every bucket directory carries.
+    */
+  private def withDf(postings: DataFrame): DataFrame =
+    postings
+      .withColumn("df", count(lit(1)).over(Window.partitionBy(col("token"))))
+      .select(col("token"), col("doc_id"), col("len"), col("tf"), col("df"), col("bucket"))
+
+  /** The corpus-stats sidecar leg of BM25 maintenance. After the
+    * marker is down it computes the exact new `(n_docs, sum_len)`
+    * against the PRE-swap store in ONE driver action: the old stats row
+    * cross-joined with the replaced docs' totals and the `added` docs'
+    * totals (an insert-only batch replaces nothing — no store scan).
+    * The write lands after the swap, so the time-travel sidecar first
+    * captures the pre-write stats as the committed generation's.
+    *
+    * On heal the live stats file is a crashed call's untrusted
+    * leftover: it is neither archived (`sidecarAsOf` then refuses the
+    * generation rather than score with wrong n_docs/avg_len — ADVICE
+    * r14) nor patched, but rebuilt from the post-swap store —
+    * `(doc_id, len)` is denormalized onto every posting row — before
+    * the manifest update clears the marker, so a crash between the two
+    * re-enters the heal.
+    */
+  private def statsLeg(
       spark: org.apache.spark.sql.SparkSession,
       store: DataFrame,
-      tokenized: DataFrame,
-      batchIds: DataFrame,
-      batchRaw: DataFrame,
+      ids: DataFrame,
+      added: Option[DataFrame],
       path: String,
-      statsPath: String): Seq[Int] = {
-    // old homes via the doc→shard manifest — cost ∝ batch, never
-    // store bytes (r12 verdict #2); the replaced-doc read below is
-    // then partition-pruned to exactly those shards. No broadcast
-    // hint anywhere: a daily batch's id frame grows with the batch
-    // (r12 verdict #1) — AQE broadcasts it when it measures small.
-    // Old-home + new-home + mpart collects fused into two actions
-    // (VERDICT r13 #1: through r13 these were three separate jobs and
-    // the per-action fixed cost dominated the entry at bench SF).
-    val pr = StoreManifest.probeFused(
-      spark, path, batchIds, "doc_id",
-      newHomes = Some(batchRaw.select(bucketOfCol(col("token")).as("bucket"))),
-      store = Some(store))
-    val touched = pr.touched
-    if (touched.isEmpty) return touched
-
-    // Pending-marker transaction now COVERS THE STATS FILE too
-    // (VERDICT r13 #2): the marker goes down before the stats write,
-    // so a crash anywhere between stats, store swap and manifest swap
-    // leaves the marker standing — the next maintenance call rebuilds
-    // manifest AND stats from the store's own post-swap content
-    // (see the heal branch at the bottom) and the one-batch stats
-    // drift the r13 scaladoc documented as open cannot survive a heal.
-    val heal = StoreManifest.beginMaintenance(spark, path)
-
-    // exact stats deltas computed against the PRE-swap store; the
-    // WRITE moves after the swap so the time-travel sidecar can
-    // capture the pre-state (see the sidecar note below). ONE driver
-    // action: the three one-row frames (old stats, replaced-doc
-    // deltas, batch deltas) cross-joined and collected together (r13
-    // ran three separate collects). For an insert-only batch (probe
-    // proved no batch id lives in the store) the replaced deltas are
-    // zero by construction — no store scan at all, the old-home pass
-    // disappears (VERDICT r13 #1).
-    val newStats: Option[(Long, Long)] =
+      statsPath: String)(pr: StoreManifest.ProbeResult, heal: Boolean): () => Unit = {
+    import spark.implicits._
+    val newStats =
       if (heal) None
       else {
         val old = graft.sources.Tables.readStable(spark, statsPath).select(col("n_docs"), col("sum_len"))
-        val batchStats = tokenized
-          .agg(
-            count(lit(1)).as("n_b"),
-            sum(size(col("tk")).cast("long")).as("len_b"))
         val replaced =
-          if (pr.insertOnly) {
-            import spark.implicits._
-            Seq((0L, 0L)).toDF("n_rep", "len_rep")
-          } else
-            store
+          if (pr.insertOnly) Seq((0L, 0L)).toDF("n", "len")
+          else
+            docTotals(store
               .filter(col("bucket").isin(pr.oldHomes.map(Int.box): _*))
-              .join(batchIds, Seq("doc_id"))
-              .select(col("doc_id"), col("len")).distinct()
-              .agg(
-                coalesce(count(lit(1)), lit(0L)).as("n_rep"),
-                coalesce(sum(col("len").cast("long")), lit(0L)).as("len_rep"))
-        val row = old.crossJoin(replaced).crossJoin(batchStats).collect()(0)
-        Some((
-          row.getLong(0) - row.getLong(2) + row.getLong(4),
-          row.getLong(1) - row.getLong(3) + row.getLong(5)))
+              .join(ids, Seq("doc_id"))
+              .select(col("doc_id"), col("len")).distinct())
+        val row = (Seq(old, replaced) ++ added.map(docTotals)).reduce(_ crossJoin _).collect()(0)
+        def plus(i: Int) = if (row.length > i) row.getLong(i) else 0L
+        Some((row.getLong(0) - row.getLong(2) + plus(4), row.getLong(1) - row.getLong(3) + plus(5)))
       }
-
-    // merged content of the touched buckets: surviving old postings
-    // (batch docs' rows dropped wherever they live) ∪ batch postings —
-    // then df recomputed WITHIN the merge, valid because every merged
-    // token's full postings list is present. Insert-only batches skip
-    // the survivor anti-join (nothing to drop — the probe proved it);
-    // the touched-bucket rewrite itself cannot become an append here
-    // because df is denormalized onto every posting row and the
-    // arriving docs change df for every token they share with the
-    // bucket's existing rows.
-    val base = store
-      .filter(col("bucket").isin(touched.map(Int.box): _*))
-      .select(col("doc_id"), col("len"), col("token"), col("tf"))
-    val survivors =
-      if (pr.insertOnly) base else base.join(batchIds, Seq("doc_id"), "left_anti")
-    val mergedRaw = survivors.unionByName(batchRaw.select(col("doc_id"), col("len"), col("token"), col("tf")))
-    // df via the token-partition count window (the postingsAndStats
-    // rationale: a self-join's two branches would each rescan the
-    // touched buckets); column order matches bm25IndexWrite's files so
-    // every bucket directory carries one field layout
-    val merged = mergedRaw
-      .withColumn("df", count(lit(1)).over(Window.partitionBy(col("token"))))
-      .select(col("token"), col("doc_id"), col("len"), col("tf"), col("df"),
-        bucketOfCol(col("token")).as("bucket"))
-    StoreManifest.swapPartitions(spark, merged, path, Seq("bucket"), touched.map(b => s"bucket=$b"))
-    // time-travel: the corpus stats must snapshot WITH the buckets —
-    // the swap committed generation K, so the PRE-write stats file is
-    // exactly the stats at K; copy it into the archive before the
-    // live overwrite below (no-op when versioning is off). NOT on the
-    // heal path (ADVICE r14): heal means the live stats file is
-    // exactly the untrusted value a crashed run left behind — copying
-    // it would make a later as-of read silently score with wrong
-    // n_docs/avg_len. Skipped, the generation has no stats sidecar
-    // and sidecarAsOf REFUSES it — the crash-lost contract.
-    if (!heal) StoreGenerations.archiveSidecar(spark, path, statsPath, "stats")
-    newStats match {
-      case Some((nDocs, sumLen)) =>
-        import spark.implicits._
-        Seq((nDocs, sumLen, sumLen.toDouble / nDocs))
-          .toDF("n_docs", "sum_len", "avg_len")
-          .write.mode("overwrite").parquet(statsPath)
-      case None =>
-        // heal path: the store content is now right — rebuild the
-        // stats from it BEFORE the manifest update clears the marker,
-        // so a crash between the two rebuilds re-enters the heal
-        writeStatsFromStore(spark, path, statsPath)
+    () => {
+      if (!heal) StoreGenerations.archiveSidecar(spark, path, statsPath, "stats")
+      val (nDocs, sumLen) = newStats.getOrElse {
+        val r = docTotals(graft.sources.Tables.readStable(spark, path)
+          .select(col("doc_id"), col("len")).distinct()).collect()(0)
+        (r.getLong(0), r.getLong(1))
+      }
+      Seq((nDocs, sumLen, sumLen.toDouble / nDocs))
+        .toDF("n_docs", "sum_len", "avg_len")
+        .write.mode("overwrite").parquet(statsPath)
     }
-    StoreManifest.update(
-      spark, path, "doc_id",
-      adds = Some(batchRaw.select(col("doc_id"), bucketOfCol(col("token")).as("bucket"))),
-      heal = heal)
-    touched
   }
 
-  /** Rebuild the one-row corpus-stats file from the postings store
-    * itself — the stats leg of the pending-marker heal: `(doc_id, len)`
-    * is denormalized onto every posting row, so distinct pairs give the
-    * exact `(n_docs, sum_len)` the delta arithmetic maintains. A
-    * 2-column pruned readback of the store, run only on the heal path.
-    */
-  private def writeStatsFromStore(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      statsPath: String): Unit = {
-    val row = graft.sources.Tables.readStable(spark, path)
-      .select(col("doc_id"), col("len")).distinct()
-      .agg(count(lit(1)).as("n_docs"), sum(col("len").cast("long")).as("sum_len"))
-      .collect()(0)
-    import spark.implicits._
-    Seq((row.getLong(0), row.getLong(1), row.getLong(1).toDouble / row.getLong(0)))
-      .toDF("n_docs", "sum_len", "avg_len")
-      .write.mode("overwrite").parquet(statsPath)
-  }
+  /** One row: the docs' count and summed length. */
+  private def docTotals(docs: DataFrame): DataFrame =
+    docs.agg(
+      coalesce(count(lit(1)), lit(0L)).as("n"),
+      coalesce(sum(col("len").cast("long")), lit(0L)).as("len"))
 
   /** Right-to-be-forgotten DELETION from the sharded lexical index —
     * [[Similarity.storeDelete]]'s semantics on the postings layout. A
@@ -486,83 +380,21 @@ object Retrieval {
     * touched buckets (valid for the same reason as the upsert: a
     * token's full postings list lives in its one shard, and untouched
     * shards hold no deleted rows so their df cannot have changed), and
-    * the corpus stats shrink by exact long deltas. Untouched shard
-    * directories stay byte-identical; a shard emptied by the deletion
-    * is swept. Cost ∝ touched-shard bytes, never corpus bytes.
+    * the corpus stats shrink by exact long deltas ([[statsLeg]]).
+    * Untouched shard directories stay byte-identical; a shard emptied
+    * by the deletion is swept. Cost ∝ touched-shard bytes, never corpus
+    * bytes.
     */
   def bm25IndexDelete(
       spark: org.apache.spark.sql.SparkSession,
       deleteIds: DataFrame,
       path: String,
-      statsPath: String): Seq[Int] = {
-    val store = graft.sources.Tables.readStable(spark, path)
-    // pin the delete set (probe, removed-stats join, survivor anti-join,
-    // manifest update — 4 evaluations without it; memory ∝ delete set)
-    val ids = StoreManifest.pinBatch(deleteIds.select(col("doc_id")).distinct())
-    try bm25IndexDeletePinned(spark, store, ids, path, statsPath)
-    finally ids.unpersist(blocking = false)
-  }
-
-  private def bm25IndexDeletePinned(
-      spark: org.apache.spark.sql.SparkSession,
-      store: DataFrame,
-      ids: DataFrame,
-      path: String,
-      statsPath: String): Seq[Int] = {
-    // old homes via the doc→shard manifest (cost ∝ delete set); the
-    // removed-doc stats read is then partition-pruned to those shards.
-    // Fused probe: the mpart collect rides action 1 and the manifest
-    // update reuses the parts (VERDICT r13 #1).
-    val pr = StoreManifest.probeFused(
-      spark, path, ids, "doc_id", newHomes = None, store = Some(store))
-    val touched = pr.oldHomes
-    if (touched.isEmpty) return touched
-
-    // marker covers the stats write too (VERDICT r13 #2 — see the
-    // upsert's transaction note); heal rebuilds stats from the store
-    val heal = StoreManifest.beginMaintenance(spark, path)
-
-    // exact stats shrink computed pre-swap, WRITTEN post-swap (the
-    // upsert's sidecar discipline): ONE driver action for the deltas
-    val newStats: Option[(Long, Long)] =
-      if (heal) None
-      else {
-        val removed = store
-          .filter(col("bucket").isin(touched.map(Int.box): _*))
-          .join(ids, Seq("doc_id"))
-          .select(col("doc_id"), col("len")).distinct()
-          .agg(
-            coalesce(count(lit(1)), lit(0L)).as("n_rm"),
-            coalesce(sum(col("len").cast("long")), lit(0L)).as("len_rm"))
-        val old = graft.sources.Tables.readStable(spark, statsPath).select(col("n_docs"), col("sum_len"))
-        val row = old.crossJoin(removed).collect()(0)
-        Some((row.getLong(0) - row.getLong(2), row.getLong(1) - row.getLong(3)))
-      }
-
-    val survivors = store
-      .filter(col("bucket").isin(touched.map(Int.box): _*))
-      .join(ids, Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("len"), col("token"), col("tf"))
-    val merged = survivors
-      .withColumn("df", count(lit(1)).over(Window.partitionBy(col("token"))))
-      .select(col("token"), col("doc_id"), col("len"), col("tf"), col("df"),
-        bucketOfCol(col("token")).as("bucket"))
-    StoreManifest.swapPartitions(spark, merged, path, Seq("bucket"), touched.map(b => s"bucket=$b"))
-    // heal ⇒ live stats are the crashed run's untrusted leftovers —
-    // skip the sidecar; sidecarAsOf refuses the generation (ADVICE r14)
-    if (!heal) StoreGenerations.archiveSidecar(spark, path, statsPath, "stats")
-    newStats match {
-      case Some((nDocs, sumLen)) =>
-        import spark.implicits._
-        Seq((nDocs, sumLen, sumLen.toDouble / nDocs))
-          .toDF("n_docs", "sum_len", "avg_len")
-          .write.mode("overwrite").parquet(statsPath)
-      case None => writeStatsFromStore(spark, path, statsPath)
+      statsPath: String): Seq[Int] =
+    StoreManifest.maintain(spark, path, PostingsStore, deleteIds.select(col("doc_id")).distinct()) {
+      (store, ids) =>
+        StoreManifest.Change(ids, None, PostingCols, rederive = Some(withDf),
+          sidecar = statsLeg(spark, store, ids, None, path, statsPath))
     }
-    // append-only manifest: a pure delete writes nothing (class note)
-    StoreManifest.update(spark, path, "doc_id", adds = None, heal = heal)
-    touched
-  }
 
   /** Bound the small files that streaming/daily upserts leave in the
     * postings shards — the same maintenance pass as the IVF float and
@@ -597,6 +429,16 @@ object Retrieval {
     (local, rows.map(_.getString(1)).distinct)
   }
 
+  /** Answer the panel FROM the stored index: the panel's terms select
+    * their shard directories via a literal `bucket IN (...)` that lands
+    * in the scan's PartitionFilters (file-level pruning — the
+    * [[Similarity.ivfStoredTopK]] contract, spec-asserted), the `token
+    * IN (...)` literal prunes further via parquet min/max, and the
+    * ranking is [[rankBm25]]'s — storage must be result-invisible, so
+    * the stored entry shares `bm25_topk`'s oracle. The panel-term
+    * collect is bounded (≤ [[PanelQueries]]·[[QueryTermCount]] strings),
+    * the same class as the probe-list boundary.
+    */
   def bm25StoredTopK(
       spark: org.apache.spark.sql.SparkSession,
       docs: DataFrame,

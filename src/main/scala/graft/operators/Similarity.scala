@@ -761,15 +761,15 @@ object Similarity {
     * already exists in the store REPLACES it (re-embedded doc); new ids
     * append.
     *
-    * Only the buckets PRESENT IN THE BATCH are touched: the merged
-    * content of those buckets (surviving old rows ⟕ batch rows) goes
-    * through the one store write transaction,
-    * [[StoreManifest.swapPartitions]]: staged to a sibling directory,
-    * then renamed in per bucket, leaving every other bucket's files
-    * untouched (spec-asserted byte-for-byte on the untouched
-    * directories). At 100 TB a daily batch touches the
-    * buckets its vectors land in — cost ∝ batch + touched-bucket bytes,
-    * never corpus bytes. Returns the touched bucket ids.
+    * Only the buckets the batch lands in, and those where a batch id
+    * currently lives, are touched: the keyed-store maintenance
+    * transaction ([[StoreManifest.maintain]]) appends an insert-only
+    * batch, or swaps the touched buckets' surviving old rows ⟕ batch
+    * rows in, leaving every other bucket's files untouched
+    * (spec-asserted byte-for-byte on the untouched directories). At
+    * 100 TB a daily batch touches the buckets its vectors land in —
+    * cost ∝ batch + touched-bucket bytes, never corpus bytes. Returns
+    * the touched bucket ids.
     */
   def ivfStoreUpsert(
       spark: SparkSession,
@@ -783,97 +783,20 @@ object Similarity {
     * payload = one packed BIGINT) and the float store (payload = the
     * embedding array) share this body, so the incremental-maintenance
     * semantics certified by `ann_ivf_incremental` carry over to the
-    * serving-memory tier verbatim.
+    * serving-memory tier verbatim. The probe, marker, append-or-swap
+    * and manifest steps are the keyed-store transaction,
+    * [[StoreManifest.maintain]].
     */
   def storeUpsert(
       spark: SparkSession,
       assignedBatch: DataFrame,
       path: String,
-      payloadCols: Seq[String]): Seq[Int] = {
-    val store = graft.sources.Tables.readStable(spark, path)
-    // pin the batch for the call: the frame below feeds the old-home
-    // probe, the new-home collect, the survivor anti-join, the merge
-    // union and the manifest adds — 5 evaluations of the batch's
-    // upstream plan (centroid assignment / PQ encode) without the pin.
-    // Memory ∝ batch, never corpus; released in the finally.
-    val batch = StoreManifest.pinBatch(assignedBatch)
-    try storeUpsertPinned(spark, store, batch, path, payloadCols)
-    finally batch.unpersist(blocking = false)
-  }
-
-  private def storeUpsertPinned(
-      spark: SparkSession,
-      store: DataFrame,
-      assignedBatch: DataFrame,
-      path: String,
-      payloadCols: Seq[String]): Seq[Int] = {
-    val batchIds = assignedBatch.select(col("vec_id"))
-    // Touched = buckets the batch lands in ∪ buckets where a batch id
-    // CURRENTLY lives: a re-embedded vector can move cells, and its
-    // stale row in the OLD bucket must go too (caught by the verify
-    // drive: skipping this left the store serving both embeddings).
-    // No broadcast hint on the id probe: a daily batch's id frame grows
-    // with the batch, and a forced broadcast would hit the driver
-    // ceiling at real increment sizes (the Layout.zorderUpsert fix) —
-    // AQE broadcasts it when it measures small. The probe itself reads
-    // the (vec_id, bucket) manifest, not the store — cost ∝ batch +
-    // manifest partitions the batch ids hash into, never corpus bytes.
-    // Old-home + new-home + mpart collects FUSED into two actions
-    // (VERDICT r13 #1 — the per-action fixed cost dominated the entry).
-    val pr = StoreManifest.probeFused(
-      spark, path, batchIds, "vec_id",
-      newHomes = Some(assignedBatch.select(col("bucket"))),
-      store = Some(store))
-    val touched = pr.touched
-    if (touched.isEmpty) return touched
-    val outCols =
-      col("vec_id") +: payloadCols.map(col) :+ col("bucket").cast("int").as("bucket")
-    // insert-only fast path: NO batch id lives in the store (every
-    // streaming append micro-batch and every pure-insert daily batch),
-    // so the touched buckets' existing rows are all survivors — append
-    // the batch into its bucket directories (one write job; the small
-    // files are [[ivfStoreCompact]]'s existing business) and append the
-    // manifest pairs. Still inside the pending-marker transaction: a
-    // crash between the two appends would otherwise let a later upsert
-    // of the same id miss the store row and append a duplicate.
-    if (pr.insertOnly) {
-      // time-travel: record the touched buckets' pre-append FILE LISTS
-      // as the next generation — metadata only, zero byte copies
-      // (VERDICT r14 #1); one FS check when versioning is off
-      StoreGenerations.archivePreAppend(spark, path, touched, "bucket")
-      val heal = StoreManifest.beginMaintenance(spark, path)
-      // one writer task per touched bucket (explicit count — the
-      // routeToBuckets note: AQE coalesces a count-less repartition)
-      StoreManifest.routeToBuckets(
-        assignedBatch.select(outCols: _*), touched.size, "bucket")
-        .write.mode("append").partitionBy("bucket").parquet(path)
-      StoreManifest.update(
-        spark, path, "vec_id",
-        adds = Some(assignedBatch.select(col("vec_id"), col("bucket"))),
-        heal = heal, idUnique = true)
-      return touched
+      payloadCols: Seq[String]): Seq[Int] =
+    StoreManifest.maintain(spark, path, VecStore, assignedBatch) { (_, batch) =>
+      StoreManifest.Change(batch.select(col("vec_id")), Some(batch), "vec_id" +: payloadCols)
     }
-    val survivors = store
-      .filter(col("bucket").isin(touched.map(Int.box): _*))
-      .join(batchIds, Seq("vec_id"), "left_anti")
-    val merged = survivors
-      .select(outCols: _*)
-      .unionByName(assignedBatch.select(outCols: _*))
-    // swap-window transaction: marker down, store swap, manifest swap,
-    // marker up — a crash in between leaves the marker for the probe's
-    // fallback and the next call's heal (StoreManifest class note)
-    val heal = StoreManifest.beginMaintenance(spark, path)
-    StoreManifest.swapPartitions(
-      spark, merged.select(outCols: _*), path, Seq("bucket"), touched.map(b => s"bucket=$b"))
-    // manifest rides the same maintenance call: the batch's new pairs
-    // APPEND (old pairs stay as harmless garbage until the next
-    // rebuild — the StoreManifest class note's superset contract)
-    StoreManifest.update(
-      spark, path, "vec_id",
-      adds = Some(assignedBatch.select(col("vec_id"), col("bucket"))),
-      heal = heal, idUnique = true)
-    touched
-  }
+
+  private val VecStore = StoreManifest.KeyedStore("vec_id", "bucket", idUnique = true)
 
   /** Right-to-be-forgotten DELETION from a bucket-partitioned store —
     * the maintenance operation a privacy request (GDPR erasure, consent
@@ -883,55 +806,21 @@ object Similarity {
     * store alike — the [[storeUpsert]] genericity carried over).
     *
     * Only the buckets where a deleted id CURRENTLY lives are touched
-    * (one (vec_id, bucket)-projected pass with the id set broadcast —
-    * the upsert's old-home probe reused as the whole plan); their
-    * surviving rows are staged and swapped back, untouched buckets stay
-    * byte-identical, and a bucket emptied by the deletion has its
-    * directory swept (the [[StoreManifest.swapPartitions]] contract) so it
-    * cannot keep serving ghost rows. Cost ∝ touched-bucket bytes —
-    * never corpus bytes. Returns the touched bucket ids.
+    * (the [[StoreManifest.maintain]] old-home probe reused as the whole
+    * plan); their surviving rows are staged and swapped back, untouched
+    * buckets stay byte-identical, and a bucket emptied by the deletion
+    * has its directory swept (the [[StoreManifest.swapPartitions]]
+    * contract) so it cannot keep serving ghost rows. Cost ∝
+    * touched-bucket bytes — never corpus bytes. Returns the touched
+    * bucket ids.
     */
   def storeDelete(
       spark: SparkSession,
       deleteIds: DataFrame,
-      path: String): Seq[Int] = {
-    val store = graft.sources.Tables.readStable(spark, path)
-    // pin the delete set: it feeds the old-home probe, the survivor
-    // anti-join and the manifest update — 3+ evaluations of the id
-    // frame's upstream plan without it. Memory ∝ delete set.
-    val ids = StoreManifest.pinBatch(deleteIds.select(col("vec_id")).distinct())
-    try storeDeletePinned(spark, store, ids, path)
-    finally ids.unpersist(blocking = false)
-  }
-
-  private def storeDeletePinned(
-      spark: SparkSession,
-      store: DataFrame,
-      ids: DataFrame,
-      path: String): Seq[Int] = {
-    // old homes via the id→bucket manifest (cost ∝ delete set, never
-    // store bytes); no broadcast hint — AQE decides (r12 verdict #1).
-    // Fused probe: the mpart collect rides action 1, and the manifest
-    // update below reuses the parts instead of re-collecting them.
-    val pr = StoreManifest.probeFused(
-      spark, path, ids, "vec_id", newHomes = None, store = Some(store))
-    val touched = pr.oldHomes
-    if (touched.isEmpty) return touched
-    val outCols = store.columns.filterNot(_ == "bucket").map(col) :+
-      col("bucket").cast("int").as("bucket")
-    val survivors = store
-      .filter(col("bucket").isin(touched.map(Int.box): _*))
-      .join(ids, Seq("vec_id"), "left_anti")
-      .select(outCols: _*)
-    val heal = StoreManifest.beginMaintenance(spark, path)
-    StoreManifest.swapPartitions(spark, survivors, path, Seq("bucket"), touched.map(b => s"bucket=$b"))
-    // append-only manifest: a pure delete writes nothing — the deleted
-    // ids' pairs stay as garbage the next rebuild sweeps; probes they
-    // inflate remain supersets (extra touched bucket, never a miss)
-    StoreManifest.update(
-      spark, path, "vec_id", adds = None, heal = heal, idUnique = true)
-    touched
-  }
+      path: String): Seq[Int] =
+    StoreManifest.maintain(spark, path, VecStore, deleteIds.select(col("vec_id")).distinct()) {
+      (store, ids) => StoreManifest.Change(ids, None, store.columns.toSeq.filterNot(_ == "bucket"))
+    }
 
   /** Compact the small files that daily [[ivfStoreUpsert]] batches leave
     * behind (each upsert writes ≥1 new file into every touched bucket;

@@ -46,15 +46,33 @@ import org.apache.spark.sql.functions._
   * The direction that WOULD be unsafe — a pair MISSING for a live
   * row, making the old-home probe miss a moved id's true bucket and
   * leave a ghost row serving forever — can only arise from a crash
-  * between the store swap and the manifest append. The poor-man's
-  * transaction closing that window: every maintenance call plants a
-  * PENDING MARKER ([[beginMaintenance]]) before its store swap and
-  * clears it only after the manifest append lands; while the marker
-  * exists, [[probe]] refuses the manifest and falls back to the
-  * always-correct full-store scan, and the next completed maintenance
-  * call's [[update]] HEALS by rebuilding the whole manifest from the
-  * store's own post-swap content (a 2-column readback) instead of
-  * patching a base that can't be trusted.
+  * between the store write and the manifest append. The poor-man's
+  * transaction closing that window is [[maintain]], THE keyed-store
+  * maintenance transaction every incremental upsert/delete runs (IVF
+  * float and PQ code stores, the Z-order layout, the BM25 postings).
+  * Its phases, in order:
+  *
+  *   1. pin — the batch, eagerly ([[pinBatch]]), released at the end;
+  *   2. probe — [[probeFused]]: the touched buckets, in two driver
+  *      actions; nothing touched ends the call here;
+  *   3. marker — an append first records the touched buckets'
+  *      pre-append file lists (`StoreGenerations.archivePreAppend`);
+  *      then [[beginMaintenance]] plants the PENDING MARKER and reports
+  *      whether a crashed call left one (heal);
+  *   4. sidecar prepare — the caller's extra leg, computed against the
+  *      pre-write store (the BM25 corpus-stats delta);
+  *   5. write — an insert-only batch APPENDS into its buckets; anything
+  *      else swaps the touched buckets' survivors ∪ batch in through
+  *      [[swapPartitions]] (which archives by rename);
+  *   6. sidecar write — the prepared leg lands after the swap;
+  *   7. manifest — [[update]] appends the batch's pairs (or rebuilds the
+  *      manifest on heal) and clears the marker.
+  *
+  * While the marker exists, [[probeFused]] distrusts the manifest and
+  * falls back to the always-correct full-store scan, and the next
+  * completed call's [[update]] HEALS by rebuilding the whole manifest
+  * from the store's own post-swap content (a 2-column readback)
+  * instead of patching a base that can't be trusted.
   */
 object StoreManifest {
 
@@ -73,11 +91,9 @@ object StoreManifest {
     * dominated the whole entry):
     *
     *   - `oldHomes`: distinct store buckets where any batch id
-    *     CURRENTLY lives ([[probe]]'s answer),
+    *     CURRENTLY lives (the old-home probe's answer),
     *   - `newHomes`: distinct buckets the batch lands in (when the
-    *     caller supplied a new-homes frame — empty for a delete),
-    *   - `mparts`: the manifest partitions the batch ids hash into —
-    *     handed back so [[update]] never re-collects them.
+    *     caller supplied a new-homes frame — empty for a delete).
     *
     * `insertOnly` (no batch id lives anywhere in the store — true for
     * every pure-insert daily batch and every streaming append
@@ -85,30 +101,131 @@ object StoreManifest {
     * APPENDED to (no survivor anti-join, no staged swap) and the
     * manifest update collapses to an append of the new pairs.
     */
-  final case class ProbeResult(
-      oldHomes: Seq[Int],
-      newHomes: Seq[Int],
-      mparts: Seq[Int]) {
+  final case class ProbeResult(oldHomes: Seq[Int], newHomes: Seq[Int]) {
     def touched: Seq[Int] = (oldHomes ++ newHomes).distinct.sorted
     def insertOnly: Boolean = oldHomes.isEmpty
   }
 
-  /** [[probe]] + the new-home collect + the mpart collect, fused:
+  /** A keyed bucket store: rows keyed by `idCol`, partitioned into
+    * `<bucketCol>=<int>` directories. `idUnique` when an id has one row
+    * (float/PQ index, Z-order layout), not one per shard (BM25
+    * postings) — the manifest heal then skips its dedup shuffle.
+    */
+  private[graft] final case class KeyedStore(idCol: String, bucketCol: String, idUnique: Boolean)
+
+  /** What one [[maintain]] call changes, built from the pinned batch:
+    *
+    *   - `ids`: the batch ids (one `idCol` column) — probed, and
+    *     anti-joined out of the touched buckets' survivors;
+    *   - `rows`: the batch's new rows, carrying the bucket column;
+    *     `None` for a delete;
+    *   - `cols`: the columns a rewritten row keeps, bucket aside;
+    *   - `rederive`: recomputes columns that depend on a row's
+    *     bucket-mates over the merged content (BM25's denormalized df);
+    *     such a store never takes the append fast path;
+    *   - `sidecar`: the caller's extra leg, given the probe and the
+    *     heal flag after the marker is down; it computes against the
+    *     pre-write store and returns the step that lands after the write;
+    *   - `pins`: frames the caller pinned from the batch, released with it.
+    */
+  private[graft] final case class Change(
+      ids: DataFrame,
+      rows: Option[DataFrame],
+      cols: Seq[String],
+      rederive: Option[DataFrame => DataFrame] = None,
+      sidecar: (ProbeResult, Boolean) => () => Unit = (_, _) => () => (),
+      pins: Seq[DataFrame] = Nil)
+
+  /** THE keyed-store maintenance transaction (phases in the class
+    * note): pin `batch`, build the [[Change]] from the store and the
+    * pinned batch, probe, plant the marker, run the sidecar leg, append
+    * or swap, land the sidecar, update the manifest. Cost ∝ batch +
+    * touched-bucket bytes, never store bytes. Returns the touched
+    * buckets.
+    */
+  private[graft] def maintain(
+      spark: SparkSession,
+      path: String,
+      key: KeyedStore,
+      batch: DataFrame)(
+      plan: (DataFrame, DataFrame) => Change): Seq[Int] = {
+    val store = graft.sources.Tables.readStable(spark, path)
+    // the batch feeds the probe, the survivor anti-join, the merge and
+    // the manifest adds: 4-6 evaluations of its upstream plan without
+    // the pin (pinBatch note); memory ∝ batch, released in the finally
+    val pinned = pinBatch(batch)
+    val change = plan(store, pinned)
+    try transact(spark, path, key, store, change)
+    finally (pinned +: change.pins).foreach(_.unpersist(blocking = false))
+  }
+
+  private def transact(
+      spark: SparkSession,
+      path: String,
+      key: KeyedStore,
+      store: DataFrame,
+      change: Change): Seq[Int] = {
+    val b = key.bucketCol
+    // touched = buckets the batch lands in ∪ buckets where a batch id
+    // CURRENTLY lives: a moved row's stale copy in its OLD bucket must
+    // go too (skipping the old homes left stores serving both versions)
+    val pr = probeFused(spark, path, store, change.ids, key.idCol, change.rows.map(_.select(col(b))), b)
+    val touched = pr.touched
+    if (touched.isEmpty) return touched
+    val out = change.cols.map(col) :+ col(b).cast("int").as(b)
+    val appendable = pr.insertOnly && change.rederive.isEmpty
+    // time-travel: an append records the touched buckets' pre-append
+    // FILE LISTS as the next generation — metadata only; a swap
+    // archives by rename inside swapPartitions
+    if (appendable) StoreGenerations.archivePreAppend(spark, path, touched, b)
+    val heal = beginMaintenance(spark, path)
+    val landSidecar = change.sidecar(pr, heal)
+    (change.rows, appendable) match {
+      case (Some(rows), true) =>
+        // insert-only fast path: every existing row of the touched
+        // buckets survives, so the batch appends into its bucket
+        // directories (one write job, one writer task per bucket —
+        // routeToBuckets note); small files are the compaction pass's
+        // business
+        routeToBuckets(rows.select(out: _*), touched.size, b)
+          .write.mode("append").partitionBy(b).parquet(path)
+      case _ =>
+        val base = store.filter(col(b).isin(touched.map(Int.box): _*))
+        val survivors =
+          (if (pr.insertOnly) base else base.join(change.ids, Seq(key.idCol), "left_anti"))
+            .select(out: _*)
+        val merged = change.rows.fold(survivors)(r => survivors.unionByName(r.select(out: _*)))
+        swapPartitions(spark, change.rederive.fold(merged)(_(merged)), path, Seq(b),
+          touched.map(t => s"$b=$t"))
+    }
+    landSidecar()
+    // the batch's new pairs APPEND; a moved or deleted id's old pair
+    // stays as garbage until the next rebuild (the superset contract)
+    update(spark, path, key.idCol, change.rows.map(_.select(col(key.idCol), col(b))), b,
+      heal, key.idUnique)
+    touched
+  }
+
+  /** The old-home probe with the new-home and mpart collects fused:
     * action 1 is ONE collect over the union of the batch ids' mparts
     * and the (optional) new-home buckets — both sides projections of
-    * caller-pinned batch frames; action 2 is the old-home probe itself
-    * (manifest partitions pruned to `mparts`, or the always-correct
-    * full-store fallback when the manifest is absent/pending). Replaces
-    * the 3 separate actions every maintenance body ran through r13.
+    * caller-pinned batch frames; action 2 is the old-home probe itself.
+    * Manifest present and trusted: read only the manifest partitions
+    * the batch ids hash into (a literal `mpart IN (...)` in the scan's
+    * PartitionFilters) and equi-join the id set — AQE broadcasts the
+    * small side when it measures small (no forced hint: a daily batch's
+    * id frame grows with the batch). Manifest absent, or a pending
+    * marker standing: the always-correct (id, bucket)-projected pass
+    * over `store`, the caller's already-resolved store frame.
     */
   def probeFused(
       spark: SparkSession,
       storePath: String,
+      store: DataFrame,
       batchIds: DataFrame,
       idCol: String,
       newHomes: Option[DataFrame],
-      storeBucketCol: String = "bucket",
-      store: Option[DataFrame] = None): ProbeResult = {
+      bucketCol: String = "bucket"): ProbeResult = {
     val mp = batchIds.select(lit(0).as("k"), mpartCol(col(idCol)).as("v"))
     val fused = newHomes match {
       case Some(nh) =>
@@ -124,14 +241,9 @@ object StoreManifest {
     val oldHomes = {
       val frame =
         if (!manifestTrusted)
-          // full-store fallback: reuse the caller's already-resolved
-          // store frame when given — a second graft.sources.Tables.readStable(spark, path)
-          // re-lists and re-infers the same relation (a whole listing
-          // job per maintenance call before round 15's threshold fix,
-          // and still a redundant footer read after it)
-          store.getOrElse(graft.sources.Tables.readStable(spark, storePath))
+          store
             .join(batchIds.select(col(idCol)), Seq(idCol))
-            .select(col(storeBucketCol).cast("int").as("bucket")).distinct()
+            .select(col(bucketCol).cast("int").as("bucket")).distinct()
         else
           graft.sources.Tables.readStable(spark, manifestPath(storePath))
             .filter(col("mpart").isin(mparts.map(Int.box): _*))
@@ -139,7 +251,7 @@ object StoreManifest {
             .select(col("bucket")).distinct()
       frame.collect().map(_.getInt(0)).toSeq.sorted
     }
-    ProbeResult(oldHomes, newBuckets, mparts)
+    ProbeResult(oldHomes, newBuckets)
   }
 
   def manifestPath(storePath: String): String =
@@ -154,8 +266,8 @@ object StoreManifest {
     * at tiny SF is the dominant fixed cost of the whole maintenance
     * entry and at 100 TB is 4-6 redundant batch-sized jobs per day.
     * Memory is bounded by the BATCH (never the store/corpus) and
-    * spills to disk; callers unpersist in a finally once the last
-    * write lands. persist alone is lazy — the count() forces it so two
+    * spills to disk; [[maintain]] unpersists it in a finally once the
+    * last write lands. persist alone is lazy — the count() forces it so two
     * concurrent downstream stages cannot race to build it twice (the
     * cachedView lesson, SparkEntry.scala).
     */
@@ -394,12 +506,11 @@ object StoreManifest {
     if (fs.exists(p)) fs.delete(p, false)
   }
 
-  /** Plant the pending marker — call IMMEDIATELY BEFORE the store's
-    * touched-partition swap in every upsert/delete. Returns TRUE when
-    * a marker was ALREADY present (a previous maintenance call crashed
-    * in its swap window, so the manifest may be stale): the caller
-    * must pass that through to [[update]]'s `heal` so this call
-    * rebuilds rather than patches. This call's own marker is cleared
+  /** Plant the pending marker — [[maintain]]'s phase 3, IMMEDIATELY
+    * BEFORE the store write. Returns TRUE when a marker was ALREADY
+    * present (a previous maintenance call crashed in its swap window,
+    * so the manifest may be stale): [[maintain]] passes that through to
+    * [[update]]'s `heal` so this call rebuilds rather than patches. This call's own marker is cleared
     * by [[update]] once the manifest swap lands.
     *
     * CONCURRENCY (round 15): acquisition is an ATOMIC create-if-absent
@@ -485,45 +596,8 @@ object StoreManifest {
       .parquet(manifestPath(storePath))
   }
 
-  /** Distinct buckets where any batch id CURRENTLY lives — the
-    * old-home probe. Manifest present: read only the manifest
-    * partitions the batch ids hash into (the distinct-mpart collect is
-    * bounded by [[Parts]]) and equi-join the id set — AQE broadcasts
-    * the small side when it measures small (no forced hint: a daily
-    * batch's id frame grows with the batch — the Layout.zorderUpsert
-    * driver-ceiling lesson). Manifest absent (legacy store): the
-    * round-12 behavior, one (id, bucket)-projected pass over the
-    * store. Returns a single int `bucket` column.
-    */
-  def probe(
-      spark: SparkSession,
-      storePath: String,
-      batchIds: DataFrame,
-      idCol: String,
-      storeBucketCol: String = "bucket"): DataFrame = {
-    val mp = manifestPath(storePath)
-    // manifest absent (legacy store) OR a pending marker from a
-    // maintenance call that crashed between the store swap and the
-    // manifest swap (the manifest exists but may be stale — trusting
-    // it could miss a moved id's true bucket): the always-correct
-    // full-store scan, until [[update]] heals
-    if (!pathExists(spark, mp) || pendingExists(spark, storePath))
-      graft.sources.Tables.readStable(spark, storePath)
-        .join(batchIds.select(col(idCol)), Seq(idCol))
-        .select(col(storeBucketCol).cast("int").as("bucket")).distinct()
-    else {
-      val parts = batchIds
-        .select(mpartCol(col(idCol)).as("mpart")).distinct()
-        .collect().map(_.getInt(0))
-      graft.sources.Tables.readStable(spark, mp)
-        .filter(col("mpart").isin(parts.map(Int.box): _*))
-        .join(batchIds.select(col(idCol).as("id")).distinct(), Seq("id"))
-        .select(col("bucket")).distinct()
-    }
-  }
-
-  /** Manifest maintenance inside the same upsert/delete call that
-    * swapped the store — APPEND-ONLY (round 14): the manifest is a
+  /** Manifest maintenance, [[maintain]]'s last phase, inside the call
+    * that wrote the store — APPEND-ONLY (round 14): the manifest is a
     * CONSERVATIVE index, so the hot path never rewrites it.
     *
     *   - An upsert APPENDS the batch's new `(id, bucket)` pairs into
@@ -533,9 +607,9 @@ object StoreManifest {
     *   - A pure delete appends NOTHING — the deleted ids' pairs stay
     *     behind as garbage.
     *
-    * Why garbage is safe: [[probe]] answers "where might this id
-    * live?", and a stale pair only ADDS a bucket to the answer — the
-    * maintenance bodies then rewrite that bucket's survivors
+    * Why garbage is safe: the old-home probe answers "where might this id
+    * live?", and a stale pair only ADDS a bucket to the answer —
+    * [[maintain]] then rewrites that bucket's survivors
     * unchanged (cost ∝ one extra touched bucket, never a correctness
     * hole). The UNSAFE direction — a pair MISSING for a live row —
     * can only arise from a crash inside the swap window, which is
@@ -559,7 +633,6 @@ object StoreManifest {
       idCol: String,
       adds: Option[DataFrame],
       bucketCol: String = "bucket",
-      storeBucketCol: String = "bucket",
       heal: Boolean = false,
       idUnique: Boolean = false): Unit = {
     val mp = manifestPath(storePath)
@@ -584,7 +657,7 @@ object StoreManifest {
     if (heal) {
       // id-unique stores skip the dedup shuffle: the 2-column readback
       // is pair-unique by construction (one row per id)
-      write(graft.sources.Tables.readStable(spark, storePath), storePath, idCol, storeBucketCol,
+      write(graft.sources.Tables.readStable(spark, storePath), storePath, idCol, bucketCol,
         distinctPairs = !idUnique)
       clearBackfill(spark, storePath)
       clearPending(spark, storePath)
@@ -619,11 +692,11 @@ object StoreManifest {
       spark: SparkSession,
       storePath: String,
       idCol: String,
-      storeBucketCol: String = "bucket",
+      bucketCol: String = "bucket",
       idUnique: Boolean = false): Unit =
     if (pathExists(spark, manifestPath(storePath)) ||
       backfillRequested(spark, storePath)) {
-      write(graft.sources.Tables.readStable(spark, storePath), storePath, idCol, storeBucketCol,
+      write(graft.sources.Tables.readStable(spark, storePath), storePath, idCol, bucketCol,
         distinctPairs = !idUnique)
       clearBackfill(spark, storePath)
     }

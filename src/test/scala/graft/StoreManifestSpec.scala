@@ -1,7 +1,9 @@
 package graft
 
-import graft.operators.{Similarity, StoreManifest}
+import graft.operators.{Layout, Similarity, StoreManifest}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,9 +22,12 @@ class StoreManifestSpec extends AnyFunSuite {
       (col("id") * 2).cast("double").as("val"),
       pmod(col("id"), lit(8L)).cast("int").as("bucket"))
 
-  private def storePairs(path: String): Seq[(Long, Int)] =
+  private def storePairs(
+      path: String,
+      idCol: String = "vec_id",
+      bucketCol: String = "bucket"): Seq[(Long, Int)] =
     spark.read.parquet(path)
-      .select(col("vec_id"), col("bucket").cast("int"))
+      .select(col(idCol), col(bucketCol).cast("int"))
       .distinct().collect()
       .map(r => (r.getLong(0), r.getInt(1))).sortBy(identity).toSeq
 
@@ -32,6 +37,48 @@ class StoreManifestSpec extends AnyFunSuite {
       .distinct().collect()
       .map(r => (r.getLong(0), r.getInt(1))).sortBy(identity).toSeq
 
+  /** The old-home probe's answer for `ids` (the fused probe's second
+    * action), against the store frame a maintenance call would pass.
+    */
+  private def oldHomes(
+      path: String,
+      ids: DataFrame,
+      idCol: String = "vec_id",
+      bucketCol: String = "bucket"): Set[Int] =
+    StoreManifest.probeFused(spark, path, spark.read.parquet(path), ids, idCol, None, bucketCol)
+      .oldHomes.toSet
+
+  private def allScans(p: SparkPlan): Seq[FileSourceScanExec] = {
+    val here = p match {
+      case a: AdaptiveSparkPlanExec => allScans(a.executedPlan)
+      case q: QueryStageExec => allScans(q.plan)
+      case s: FileSourceScanExec => Seq(s)
+      case o => o.children.flatMap(allScans)
+    }
+    here ++ p.subqueries.flatMap(allScans)
+  }
+
+  /** Run `body` and return the executed plans of the `actions` driver
+    * actions it ran (the execution listener is posted asynchronously,
+    * so wait for them, bounded).
+    */
+  private def executedPlans[T](actions: Int)(body: => T): (T, Seq[SparkPlan]) = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      val out = body
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (seen.size < actions && System.nanoTime() < deadline) Thread.sleep(50)
+      import scala.jdk.CollectionConverters._
+      (out, seen.asScala.toSeq)
+    } finally spark.listenerManager.unregister(l)
+  }
+
   test("probe reads only the manifest partitions the batch ids hash into") {
     val path = java.nio.file.Files.createTempDirectory("graft_manifest_probe").toString + "/store"
     Similarity.ivfStoreWrite(baseStore, path)
@@ -40,26 +87,17 @@ class StoreManifestSpec extends AnyFunSuite {
     StoreManifest.write(spark.read.parquet(path), path, "vec_id")
     import spark.implicits._
     val ids = Seq(7L, 123L).toDF("vec_id")
-    val probed = StoreManifest.probe(spark, path, ids, "vec_id")
-    val got = probed.collect().map(_.getInt(0)).toSet
+    // the fused probe runs two actions: the mpart collect over the ids,
+    // then the old-home probe
+    val (got, plans) = executedPlans(2)(oldHomes(path, ids))
     assert(got === Set((7 % 8), (123 % 8)))
 
     // the scan under the probe hits the manifest, with the mpart
     // IN-list in PartitionFilters, reading exactly the ids' partitions
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def allScans(p: SparkPlan): Seq[FileSourceScanExec] = {
-      val here = p match {
-        case a: AdaptiveSparkPlanExec => allScans(a.executedPlan)
-        case q: QueryStageExec => allScans(q.plan)
-        case s: FileSourceScanExec => Seq(s)
-        case o => o.children.flatMap(allScans)
-      }
-      here ++ p.subqueries.flatMap(allScans)
-    }
+    val scans = plans.flatMap(allScans)
     val mp = StoreManifest.manifestPath(path)
-    val scan = allScans(probed.queryExecution.executedPlan)
-      .find(_.relation.location.rootPaths.exists(_.toString.contains(".manifest")))
+    val scan = scans
+      .find(_.relation.location.rootPaths.exists(_.toString.contains(mp)))
       .getOrElse(fail("manifest scan not found in executed plan"))
     // expected mparts via the same public hash the manifest routes on
     val expectedParts = ids
@@ -75,9 +113,9 @@ class StoreManifestSpec extends AnyFunSuite {
     assert(scan.partitionFilters.nonEmpty, "mpart IN-list did not reach PartitionFilters")
     assert(numFiles === filesUnder(expectedParts).toLong, "probe did not prune to the ids' manifest partitions")
     assert(numFiles < total.toLong, "nothing was pruned — all manifest partitions were read")
-    // and NO scan of the store itself anywhere in the probe plan
+    // and NO scan of the store itself anywhere in the probe plans
     assert(
-      !allScans(probed.queryExecution.executedPlan)
+      !scans
         .exists(s => s.relation.location.rootPaths.exists(p =>
           p.toString.contains(path) && !p.toString.contains(".manifest"))),
       "probe plan scanned the store — the manifest exists to prevent exactly this")
@@ -129,9 +167,7 @@ class StoreManifestSpec extends AnyFunSuite {
     assert(sp.toSet.subsetOf(mp.toSet), "live pair missing from the manifest")
     assert(mp.size > sp.size, "fixture failed to create garbage pairs")
     import spark.implicits._
-    val probed = StoreManifest
-      .probe(spark, path, Seq(105L).toDF("vec_id"), "vec_id")
-      .collect().map(_.getInt(0)).toSet
+    val probed = oldHomes(path, Seq(105L).toDF("vec_id"))
     val trueHome = sp.filter(_._1 == 105L).map(_._2).toSet
     assert(trueHome.subsetOf(probed), "probe missed the true home")
 
@@ -178,7 +214,7 @@ class StoreManifestSpec extends AnyFunSuite {
 
     import spark.implicits._
     val ids = Seq(7L, 123L).toDF("vec_id")
-    val got = StoreManifest.probe(spark, path, ids, "vec_id").collect().map(_.getInt(0)).toSet
+    val got = oldHomes(path, ids)
     assert(got === Set((7 % 8), (123 % 8)), "legacy fallback probe wrong")
 
     // first maintenance op on a legacy store requests the backfill
@@ -351,9 +387,7 @@ class StoreManifestSpec extends AnyFunSuite {
 
     // with the marker present the probe refuses the manifest: it
     // reports the TRUE current bucket from the store scan
-    val probed = StoreManifest
-      .probe(spark, path, Seq(42L).toDF("vec_id"), "vec_id")
-      .collect().map(_.getInt(0)).toSet
+    val probed = oldHomes(path, Seq(42L).toDF("vec_id"))
     assert(probed === Set(5), "marker fallback did not reach the store's truth")
 
     // the next completed maintenance call heals: deleting id 42 must
@@ -366,6 +400,62 @@ class StoreManifestSpec extends AnyFunSuite {
     assert(
       !marker.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(marker),
       "pending marker not cleared after the healing maintenance call")
+  }
+
+  test("crash in the swap window on a Z-order store (event_id/z_cell): fallback probe finds the true cell, next zorderUpsert heals") {
+    val path = java.nio.file.Files.createTempDirectory("graft_manifest_crash_z").toString + "/layout"
+    // 256 events: user_id walks x_bucket, the event day walks y_bucket
+    val events = spark.range(256).select(
+      col("id").as("event_id"),
+      pmod(col("id"), lit(16L)).as("user_id"),
+      timestamp_seconds(col("id") * 86400L).as("ts"),
+      col("id").cast("double").as("value"))
+    Layout.zorderWrite(events, path)
+    StoreManifest.write(spark.read.parquet(path), path, "event_id", "z_cell")
+    def cellsOf(id: Long): Set[Int] =
+      storePairs(path, "event_id", "z_cell").filter(_._1 == id).map(_._2).toSet
+    def corrected(userId: Long, value: Double): DataFrame =
+      events.filter(col("event_id") === 42L)
+        .withColumn("user_id", lit(userId)).withColumn("value", lit(value))
+
+    // move event 42 to another user's cell with a REAL upsert, then
+    // reconstruct a crash between the store swap and the manifest
+    // append: manifest rolled back to its PRE-MOVE content, marker planted
+    import spark.implicits._
+    val oldCell = cellsOf(42L)
+    val preMove = spark.read.parquet(StoreManifest.manifestPath(path))
+      .select(col("id").cast("long"), col("bucket")).collect()
+      .map(r => (r.getLong(0), r.getInt(1)))
+    Layout.zorderUpsert(spark, corrected(3L, -9.0), path)
+    val trueCell = cellsOf(42L)
+    assert(trueCell.size === 1 && trueCell != oldCell, "fixture did not move the event")
+    StoreManifest.write(preMove.toSeq.toDF("event_id", "z_cell"), path, "event_id", "z_cell")
+    assert(StoreManifest.beginMaintenance(spark, path) === false)
+    val manifestClaim = spark.read.parquet(StoreManifest.manifestPath(path))
+      .filter(col("id") === 42L).collect().map(_.getAs[Int]("bucket")).toSet
+    assert(manifestClaim === oldCell, "fixture did not reconstruct the stale state")
+
+    // the marker makes the probe scan the layout: the true cell
+    assert(oldHomes(path, Seq(42L).toDF("event_id"), "event_id", "z_cell") === trueCell,
+      "marker fallback did not reach the layout's truth")
+
+    // the next zorderUpsert corrects event 42 again: exactly one row
+    // survives (no ghost in the cell the stale manifest forgot), the
+    // manifest is rebuilt exact and the marker is cleared
+    Layout.zorderUpsert(spark, corrected(7L, -10.0), path)
+    val rows = spark.read.parquet(path).filter(col("event_id") === 42L)
+      .select(col("value"), col("z_cell").cast("int")).collect()
+    val newCell = Layout.bucketized(corrected(7L, -10.0)).select(col("z_cell")).head().getInt(0)
+    assert(rows.map(r => (r.getDouble(0), r.getInt(1))).toSeq === Seq((-10.0, newCell)),
+      "ghost row survived the healed upsert")
+    assert(
+      manifestPairs(path) === storePairs(path, "event_id", "z_cell"),
+      "heal left manifest inconsistent")
+    assert(spark.read.parquet(path).count() === 256)
+    val marker = new org.apache.hadoop.fs.Path(StoreManifest.pendingPath(path))
+    assert(
+      !marker.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(marker),
+      "pending marker not cleared after the healing upsert")
   }
 
   test("pending-marker acquisition is atomic: racing maintainers get exactly one clean slot") {

@@ -5,7 +5,8 @@
 # validation ran all round).
 #
 #   tools/preflight.sh          # compile main + tests + no partitionOverwriteMode
-#                               #   under src/ + entry-count pin
+#                               #   under src/ + no store maintenance outside
+#                               #   StoreManifest.maintain + entry-count pin
 #   tools/preflight.sh --full   # + graft.Verify at sf0.01 replayed in DuckDB,
 #                               #   + short serve and maintain benchmark runs,
 #                               #   which must answer every operation correctly
@@ -24,6 +25,15 @@ sbt -batch compile Test/compile
 # every later overwrite+partitionBy write in the same session.
 if grep -rn partitionOverwriteMode src/; then
   echo "preflight FAIL: partitionOverwriteMode under src/ (use StoreManifest.swapPartitions)"
+  exit 1
+fi
+
+# One keyed-store maintenance transaction: the pending marker and the
+# manifest update are phases of StoreManifest.maintain, so no other
+# main source may plant the marker or update a manifest itself.
+if grep -rnE 'beginMaintenance\(|StoreManifest\.update\(' src/main \
+    | grep -v '^src/main/scala/graft/operators/StoreManifest\.scala:'; then
+  echo "preflight FAIL: store maintenance outside StoreManifest.maintain (use the one transaction)"
   exit 1
 fi
 
