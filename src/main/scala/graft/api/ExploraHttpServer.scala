@@ -6,6 +6,8 @@ import java.util.concurrent.Executors
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import org.apache.spark.scheduler.SparkListenerEvent
+import org.apache.spark.sql.graftshim.Shim
 
 /** The reference's REST entry point, re-expressed over the library
   * facade: a JDK `com.sun.net.httpserver` listener (no extra
@@ -45,11 +47,15 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   * and snapshot results are per-timestamp / per-cell aggregates already
   * reduced by the distributed plan, the same cardinality the reference
   * serializes from its TreeMap. A one-split GET (its probed slice is one
-  * input split, [[ExploraService]]) collects with `executeCollect` on
-  * its shape's prepared physical plan, bound to its values, and the
-  * envelope is written from the `InternalRow`s; any other GET collects
-  * its DataFrame. Both are one call under the `explora:<route>` job
-  * description, and both write the same bytes.
+  * input split, [[ExploraService]]) runs the one partition of its
+  * shape's prepared physical plan, bound to its values, on the handler
+  * thread itself: no Spark job, scheduler round trip or executor
+  * hand-off. The envelope is written from the `InternalRow`s. Any other
+  * GET collects its DataFrame as a Spark job under the
+  * `explora:<route>` job description. Both write the same bytes. The
+  * in-thread run gives up Spark's job events, replaced by one
+  * [[ExploraGet]] listener event per 200 GET, and cancelling by job
+  * group: a request deadline needs its own check on that path.
   *
   * Replicas (the reference runs 3 — kubernetes/explora-kafka-
   * deployment.yaml): the reference NEEDS its replicas to co-own query
@@ -180,9 +186,9 @@ class ExploraHttpServer(service: ExploraService, requestedPort: Int = 0) {
 
     try {
       // local: Map<ts, Aggregate{count,sum,avg}> (QueryingService.java:258-261)
-      val rows = run("history", service.historyRequest(params, Option.when(!local)(agg)))
-      respond(ex, 200,
-        if (local) localJson(rows) else messageJson(columns = Seq("timestamp", agg), data = rows, metricId = metricId))
+      run(ex, "history", service.historyRequest(params, Option.when(!local)(agg))) { rows =>
+        if (local) localJson(rows) else messageJson(columns = Seq("timestamp", agg), data = rows, metricId = metricId)
+      }
     } catch {
       case e: IllegalArgumentException =>
         respond(ex, 400, errorJson(s"[getAirQualityHistory] ${e.getMessage}", 400))
@@ -241,25 +247,36 @@ class ExploraHttpServer(service: ExploraService, requestedPort: Int = 0) {
       precision = precision, resolution = resolution, geoIndex = geoIndex)
 
     try {
-      val rows = run("snapshot", service.snapshotRequest(params, Option.when(!local)(agg)))
-      respond(ex, 200,
-        if (local) localJson(rows) else messageJson(columns = Seq("geohash", agg), data = rows, metricId = metricId))
+      run(ex, "snapshot", service.snapshotRequest(params, Option.when(!local)(agg))) { rows =>
+        if (local) localJson(rows) else messageJson(columns = Seq("geohash", agg), data = rows, metricId = metricId)
+      }
     } catch {
       case e: IllegalArgumentException =>
         respond(ex, 400, errorJson(s"[getAirQualitySnapshot] ${e.getMessage}", 400))
     }
   }
 
-  /** `request`'s rows under the job description `explora:<route>`, so
-    * that a listener or the UI can tell a GET's job from others. The
-    * handler threads are pooled and a local property stays with its
-    * thread, so the description is cleared again whatever happens.
+  /** Answer 200 with `envelope` of `request`'s rows, collected under
+    * the job description `explora:<route>`, so that a listener or the
+    * UI can tell a GET's job from others. The handler threads are
+    * pooled and a local property stays with its thread, so the
+    * description is cleared again whatever happens. An in-thread GET
+    * starts no job, so every 200 GET also posts one [[ExploraGet]] on
+    * the listener bus; it is posted before the response is written, so
+    * a client that has its answer can count on the event being queued.
     */
-  private def run(route: String, request: ExploraService.Request): Seq[Seq[Any]] = {
+  private def run(ex: HttpExchange, route: String, request: ExploraService.Request)(
+      envelope: Seq[Seq[Any]] => String): Unit = {
+    val label = s"explora:$route"
+    val start = System.nanoTime()
     val sc = request.spark.sparkContext
-    sc.setJobDescription(s"explora:$route")
-    try request.collect()
-    finally sc.setJobDescription(null)
+    sc.setJobDescription(label)
+    val rows =
+      try request.collect()
+      finally sc.setJobDescription(null)
+    val body = envelope(rows)
+    Shim.postEvent(request.spark, ExploraGet(label, request.inThread, rows.size, System.nanoTime() - start))
+    respond(ex, 200, body)
   }
 
   // ---- envelopes -----------------------------------------------------
@@ -335,6 +352,14 @@ class ExploraHttpServer(service: ExploraService, requestedPort: Int = 0) {
     finally os.close()
   }
 }
+
+/** One answered (200) GET, posted on the Spark listener bus: the
+  * `explora:<route>` label its job would carry, whether it ran in-thread
+  * (and so started no job), its row count, and the nanoseconds from the
+  * start of the collect to the envelope being ready.
+  */
+final case class ExploraGet(label: String, inThread: Boolean, rows: Int, durationNs: Long)
+    extends SparkListenerEvent
 
 object ExploraHttpServer {
 

@@ -63,19 +63,21 @@ final case class SnapshotParams(
   *   quadtiling's all-digit directories (`00`…`33`) as integers, and a
   *   prefix such as `"03"` would then compare against `3`.
   *
-  *   One split, one job: when the `geo_part` directories a probe
+  *   One split, one task: when the `geo_part` directories a probe
   *   selects pack into ONE input split — decided with Spark's own
   *   packing (`FilePartition.maxSplitBytes`, then the open-cost
   *   bin-packing of `FilePartition.getFilePartitions`) over the file
   *   index the view already holds, so deciding plans nothing — the
   *   pruned slice is `coalesce(1)`-ed. Its single partition satisfies
   *   the distribution the query's `groupBy` and `orderBy` require, so
-  *   the probe runs as one job of one task with no hash or range
-  *   exchange, instead of a scan stage plus exchange stages and their
-  *   per-job driver overhead. This is safe because the scan was one
-  *   task anyway: the coalesce removes only the exchanges, never scan
-  *   parallelism, and the rows are the same. A slice spanning several
-  *   splits (the 100 TB case) keeps the parallel plan unchanged.
+  *   the probe is one task with no hash or range exchange, instead of a
+  *   scan stage plus exchange stages and their per-job driver overhead
+  *   (a DataFrame runs it as a one-task Spark job; the HTTP
+  *   facade runs it on its handler thread, below). This is safe
+  *   because the scan was one task anyway: the coalesce removes only
+  *   the exchanges, never scan parallelism, and the rows are the same.
+  *   A slice spanning several splits (the 100 TB case) keeps the
+  *   parallel plan unchanged.
   *
   *   When None, views are kept as in-process persisted DataFrames
   *   (harness mode), also unchanged by the one-split rule.
@@ -105,9 +107,14 @@ final case class SnapshotParams(
   *     setting are unchanged). A GET binds its values into a copy of
   *     that plan — the scan's partition filters, and so its selected
   *     partitions and its pushed filters, are derived again from them
-  *     — and runs the copy with `executeCollect`. No optimizer,
-  *     planner, AQE wrapper, SQL execution event or row encoder runs
-  *     per request.
+  *     — and runs the copy's one partition on the calling thread, as a
+  *     task of its own without a Spark job ([[Shim.runOnePartition]]).
+  *     No optimizer, planner, AQE wrapper, SQL execution event, row
+  *     encoder, scheduler, task serialization or task-binary broadcast
+  *     runs per request. What the in-thread run gives up: it posts no
+  *     job events (the HTTP facade posts its own per-GET event), and no
+  *     job group can cancel it, so a request deadline needs its own
+  *     check on this path.
   *
   * A view store is read once (its file listing is kept in
   * `View.parts`), so a prepared plan never needs to outlive it;
@@ -427,7 +434,7 @@ object ExploraService {
     * non-adaptive physical plan, prepared from it on first use (class
     * scaladoc).
     */
-  private final class Prepared(spark: SparkSession, val analyzed: LogicalPlan, oneSplit: Boolean) {
+  private final class Prepared(spark: SparkSession, val analyzed: LogicalPlan, val oneSplit: Boolean) {
     lazy val physical: Option[SparkPlan] = Option.when(oneSplit)(Shim.preparedPlan(spark, analyzed))
   }
 
@@ -449,15 +456,20 @@ object ExploraService {
     def physicalPlan: Option[SparkPlan] =
       prepared.physical.map(p => Shim.withActive(spark)(Slot.bind(p, values, sets)))
 
+    /** Whether [[collect]] runs on the calling thread: a one-split shape. */
+    def inThread: Boolean = prepared.oneSplit
+
     /** The result rows as Scala values, strings as `String`. A one-split
-      * request runs its bound physical plan with `executeCollect` and
-      * reads the values straight from the `InternalRow`s; any other
-      * request collects its frame.
+      * request runs the one partition of its bound physical plan on the
+      * calling thread ([[Shim.runOnePartition]]: no Spark job, so no job
+      * event and no job-group cancel) and reads the values straight from
+      * the `InternalRow`s; any other request collects its frame, as a
+      * Spark job.
       */
     def collect(): Seq[Seq[Any]] = physicalPlan match {
       case Some(plan) =>
         val types = plan.output.map(_.dataType)
-        Shim.withActive(spark)(plan.executeCollect()).toSeq.map { r =>
+        Shim.runOnePartition(spark, plan).toSeq.map { r =>
           types.indices.map { i =>
             if (r.isNullAt(i)) null
             else r.get(i, types(i)) match {

@@ -4,7 +4,7 @@ import java.net.{HttpURLConnection, URI}
 import java.nio.charset.StandardCharsets
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import graft.api.{ExploraHttpServer, ExploraService, HistoryParams, SnapshotParams}
+import graft.api.{ExploraGet, ExploraHttpServer, ExploraService, HistoryParams, SnapshotParams}
 import graft.geo.{GeoHash, QuadKey}
 import graft.sources.SensorGrid
 import org.apache.spark.metrics.source.CodegenMetrics
@@ -12,6 +12,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.rules.RuleExecutor
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import scala.jdk.CollectionConverters._
 
 /** Drives REAL HTTP GETs against a live [[ExploraHttpServer]] and
   * checks the payloads — both the success envelopes (row-for-row equal
@@ -629,27 +631,63 @@ class HttpFacadeSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally pool.shutdown()
   }
 
-  test("a one-split GET is one Spark job labelled explora:<route>") {
+  test("an in-thread GET cleans up: a missing file answers 500, no task context, memory or reader stays behind") {
+    val store = java.nio.file.Files.createTempDirectory("graft-http-cleanup")
+    val broken = new ExploraService(SensorGrid.readings(spark, Sf0001).repartition(1), viewStore = Some(store.toString))
+    val brokenBase = serve(broken)
+    assert(getRaw(brokenBase, historyPath(january))._1 === 200) // warm: the view is written and listed
+    val request = broken.historyRequest(january, Some("avg"))
+    assert(request.inThread)
+    val clicks = java.nio.file.Files.walk(store.resolve("geohashing_p6_day/metric=click"))
+    val parquet = try clicks.iterator.asScala.filter(_.toString.endsWith(".parquet")).toList finally clicks.close()
+    assert(parquet.nonEmpty)
+    java.nio.file.Files.delete(parquet.head)
+    val (code, body) = getRaw(brokenBase, historyPath(january))
+    assert(code === 500, body)
+    assert(mapper.readTree(body).get("errorMessage").asText === ExploraHttpServer.InternalErrorText)
+    // the same run on this thread: it fails, and leaves the thread and the memory manager as it found them
+    intercept[Exception](request.collect())
+    assert(org.apache.spark.TaskContext.get() === null)
+    assert(org.apache.spark.SparkEnv.get.memoryManager.executionMemoryUsed === 0L)
+
+    def openFds(): Int = new java.io.File("/proc/self/fd").list().length
+    // an intact store: in-thread runs leave no reader open
+    (1 to 10).foreach(_ => assert(getRaw(diskBase, historyPath(january))._1 === 200))
+    val fds0 = openFds()
+    (1 to 200).foreach(_ => assert(getRaw(diskBase, historyPath(january))._1 === 200))
+    val grown = openFds() - fds0
+    assert(grown <= 16, s"200 in-thread GETs left $grown more open file descriptors")
+  }
+
+  test("a one-split GET starts no Spark job and posts one explora:<route> event") {
     val sc = spark.sparkContext
-    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val gets = new java.util.concurrent.ConcurrentLinkedQueue[ExploraGet]()
     val marker = s"prepared-marker-${java.util.UUID.randomUUID()}"
     val markerSeen = new java.util.concurrent.CountDownLatch(1)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker)) markerSeen.countDown()
-        else descriptions.add(Option(e.properties).map(_.getProperty("spark.job.description")).orNull)
+        else jobs.add(Option(e.properties).map(_.getProperty("spark.job.description")).orNull)
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case g: ExploraGet => gets.add(g)
+        case _             =>
+      }
     }
     val paths = Seq(historyPath(january), snapshotPath(antwerp))
-    assert(disk.historyRequest(january, Some("avg")).physicalPlan.isDefined &&
-      disk.snapshotRequest(antwerp, Some("avg")).physicalPlan.isDefined)
+    assert(disk.historyRequest(january, Some("avg")).inThread && disk.snapshotRequest(antwerp, Some("avg")).inThread)
     paths.foreach(p => assert(getRaw(diskBase, p)._1 === 200)) // warm: views built before counting
     sc.addSparkListener(listener)
     try {
-      paths.foreach(p => assert(getRaw(diskBase, p)._1 === 200))
+      val bodies = paths.map(getRaw(diskBase, _)._2)
       sc.setJobGroup(marker, "listener flush")
       sc.parallelize(Seq(1), 1).count()
       assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      assert(descriptions.toArray.toSeq === Seq("explora:history", "explora:snapshot"))
+      assert(jobs.isEmpty, s"one-split GETs started Spark jobs: $jobs")
+      val got = gets.toArray(Array.empty[ExploraGet]).toSeq
+      assert(got.map(_.label) === Seq("explora:history", "explora:snapshot"))
+      assert(got.forall(g => g.inThread && g.durationNs > 0), got)
+      assert(got.map(_.rows) === bodies.map(b => mapper.readTree(b).get("data").size))
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)

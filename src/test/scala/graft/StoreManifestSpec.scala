@@ -289,7 +289,7 @@ class StoreManifestSpec extends AnyFunSuite {
         .select(col("bucket").cast("int")).collect().map(_.getInt(0)).toSeq === Seq(0))
   }
 
-  test("maintenance job counts stay collapsed: insert-only upsert ≤5 jobs, delete ≤6 (VERDICT r13 #1)") {
+  test("maintenance job counts stay collapsed: insert-only upsert ≤5 jobs, delete ≤5 (VERDICT r13 #1)") {
     val path = java.nio.file.Files.createTempDirectory("graft_manifest_jobs").toString + "/store"
     Similarity.ivfStoreWrite(baseStore, path)
     // burn the lazy-build deferral on a throwaway batch and

@@ -6,7 +6,8 @@
 #
 #   tools/preflight.sh          # compile main + tests + no partitionOverwriteMode
 #                               #   under src/ + no store maintenance outside
-#                               #   StoreManifest.maintain + entry-count pin
+#                               #   StoreManifest.maintain + no task context
+#                               #   outside graftshim + entry-count pin
 #   tools/preflight.sh --full   # + graft.Verify at sf0.01 replayed in DuckDB,
 #                               #   + short serve and maintain benchmark runs,
 #                               #   which must answer every operation correctly
@@ -34,6 +35,16 @@ fi
 if grep -rnE 'beginMaintenance\(|StoreManifest\.update\(' src/main \
     | grep -v '^src/main/scala/graft/operators/StoreManifest\.scala:'; then
   echo "preflight FAIL: store maintenance outside StoreManifest.maintain (use the one transaction)"
+  exit 1
+fi
+
+# Spark internals stay in the shim: an in-thread run's task context,
+# task memory and block-manager registration are built and released in
+# one place (Shim.runOnePartition), so no other main source may build
+# or install a task context or register a task itself.
+if grep -rnE 'TaskContextImpl|TaskMemoryManager|setTaskContext|registerTask\(' src/main \
+    | grep -v '^src/main/scala/org/apache/spark/sql/graftshim/'; then
+  echo "preflight FAIL: task context outside org/apache/spark/sql/graftshim/ (use Shim.runOnePartition)"
   exit 1
 fi
 
