@@ -48,9 +48,9 @@ import org.apache.spark.sql.graftshim.Shim
   * reduced by the distributed plan, the same cardinality the reference
   * serializes from its TreeMap. A one-split GET (its probed slice is one
   * input split, [[ExploraService]]) runs the one partition of its
-  * shape's prepared physical plan, bound to its values, on the handler
-  * thread itself: no Spark job, scheduler round trip or executor
-  * hand-off. The envelope is written from the `InternalRow`s. Any other
+  * shape's kept pipeline, under its own values and split, on the
+  * handler thread itself: no Spark job, scheduler round trip or
+  * executor hand-off. The envelope is written from the `InternalRow`s. Any other
   * GET collects its DataFrame as a Spark job under the
   * `explora:<route>` job description. Both write the same bytes. The
   * in-thread run gives up Spark's job events, replaced by one
@@ -143,6 +143,7 @@ class ExploraHttpServer(service: ExploraService, requestedPort: Int = 0) {
     * defaults and early-out error texts.
     */
   private def history(ex: HttpExchange, metricId: String, agg: String): Unit = {
+    val start = System.nanoTime()
     val q = queryParams(ex)
     val geohashes = q.getOrElse("geohashes", "").toLowerCase
     if (geohashes.isEmpty)
@@ -186,7 +187,7 @@ class ExploraHttpServer(service: ExploraService, requestedPort: Int = 0) {
 
     try {
       // local: Map<ts, Aggregate{count,sum,avg}> (QueryingService.java:258-261)
-      run(ex, "history", service.historyRequest(params, Option.when(!local)(agg))) { rows =>
+      run(ex, "history", start, service.historyRequest(params, Option.when(!local)(agg))) { rows =>
         if (local) localJson(rows) else messageJson(columns = Seq("timestamp", agg), data = rows, metricId = metricId)
       }
     } catch {
@@ -201,6 +202,7 @@ class ExploraHttpServer(service: ExploraService, requestedPort: Int = 0) {
     * the reference) or quadtiling.
     */
   private def snapshot(ex: HttpExchange, metricId: String, agg: String): Unit = {
+    val start = System.nanoTime()
     val q = queryParams(ex)
 
     val tsMs =
@@ -247,7 +249,7 @@ class ExploraHttpServer(service: ExploraService, requestedPort: Int = 0) {
       precision = precision, resolution = resolution, geoIndex = geoIndex)
 
     try {
-      run(ex, "snapshot", service.snapshotRequest(params, Option.when(!local)(agg))) { rows =>
+      run(ex, "snapshot", start, service.snapshotRequest(params, Option.when(!local)(agg))) { rows =>
         if (local) localJson(rows) else messageJson(columns = Seq("geohash", agg), data = rows, metricId = metricId)
       }
     } catch {
@@ -256,26 +258,32 @@ class ExploraHttpServer(service: ExploraService, requestedPort: Int = 0) {
     }
   }
 
-  /** Answer 200 with `envelope` of `request`'s rows, collected under
-    * the job description `explora:<route>`, so that a listener or the
-    * UI can tell a GET's job from others. The handler threads are
-    * pooled and a local property stays with its thread, so the
-    * description is cleared again whatever happens. An in-thread GET
-    * starts no job, so every 200 GET also posts one [[ExploraGet]] on
-    * the listener bus; it is posted before the response is written, so
-    * a client that has its answer can count on the event being queued.
+  /** Answer 200 with `envelope` of the rows of `resolve`'s request,
+    * collected under the job description `explora:<route>`, so that a
+    * listener or the UI can tell a GET's job from others. The handler
+    * threads are pooled and a local property stays with its thread, so
+    * the description is cleared again whatever happens. An in-thread
+    * GET starts no job, so every 200 GET also posts one [[ExploraGet]]
+    * on the listener bus, with its time split into layers from `start`,
+    * when the handler began parsing; it is posted before the response
+    * is written, so a client that has its answer can count on the event
+    * being queued.
     */
-  private def run(ex: HttpExchange, route: String, request: ExploraService.Request)(
+  private def run(ex: HttpExchange, route: String, start: Long, resolve: => ExploraService.Request)(
       envelope: Seq[Seq[Any]] => String): Unit = {
     val label = s"explora:$route"
-    val start = System.nanoTime()
+    val request = resolve
+    val resolved = System.nanoTime()
     val sc = request.spark.sparkContext
     sc.setJobDescription(label)
     val rows =
       try request.collect()
       finally sc.setJobDescription(null)
+    val ran = System.nanoTime()
     val body = envelope(rows)
-    Shim.postEvent(request.spark, ExploraGet(label, request.inThread, rows.size, System.nanoTime() - start))
+    val end = System.nanoTime()
+    Shim.postEvent(request.spark, ExploraGet(label, request.inThread, rows.size, end - start,
+      resolveNs = resolved - start, runNs = ran - resolved, envelopeNs = end - ran, rowsRead = request.rowsRead))
     respond(ex, 200, body)
   }
 
@@ -356,9 +364,21 @@ class ExploraHttpServer(service: ExploraService, requestedPort: Int = 0) {
 /** One answered (200) GET, posted on the Spark listener bus: the
   * `explora:<route>` label its job would carry, whether it ran in-thread
   * (and so started no job), its row count, and the nanoseconds from the
-  * start of the collect to the envelope being ready.
+  * start of parsing to the envelope being ready, split into its layers:
+  * `resolveNs` parses, validates, covers, probes and packs the request;
+  * `runNs` is the in-thread run, or the Spark job; `envelopeNs` writes
+  * the body. `rowsRead` is the rows the in-thread run's scan produced,
+  * or -1 for a job.
   */
-final case class ExploraGet(label: String, inThread: Boolean, rows: Int, durationNs: Long)
+final case class ExploraGet(
+    label: String,
+    inThread: Boolean,
+    rows: Int,
+    durationNs: Long,
+    resolveNs: Long,
+    runNs: Long,
+    envelopeNs: Long,
+    rowsRead: Long)
     extends SparkListenerEvent
 
 object ExploraHttpServer {

@@ -2,7 +2,7 @@ package graft.api
 
 import java.time.Instant
 
-import graft.functions.{Slot, TimestampParam}
+import graft.functions.{Binding, Slot, TimestampParam}
 import graft.geo.{GeoHash, QuadKey}
 import graft.operators.{ExploraQueries, QueryValidation, ViewBuilder}
 import graft.operators.ExploraQueries.{History, Route, Snapshot}
@@ -12,7 +12,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.datasources.{
-  HadoopFsRelation, LogicalRelation, PartitionDirectory}
+  FilePartition, HadoopFsRelation, LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Shim
 import org.apache.spark.sql.types.{DataType, StringType, TimestampType}
@@ -104,12 +104,20 @@ final case class SnapshotParams(
   *     facade runs it: the shape's analyzed plan is also optimized and
   *     planned once into a NON-adaptive physical plan (Spark's own
   *     preparation of a subquery's plan; the session and its AQE
-  *     setting are unchanged). A GET binds its values into a copy of
-  *     that plan — the scan's partition filters, and so its selected
-  *     partitions and its pushed filters, are derived again from them
-  *     — and runs the copy's one partition on the calling thread, as a
-  *     task of its own without a Spark job ([[Shim.runOnePartition]]).
-  *     No optimizer, planner, AQE wrapper, SQL execution event, row
+  *     setting are unchanged), and that plan, still over slots, is
+  *     executed once into the shape's kept in-thread pipeline
+  *     ([[Shim.keptPipeline]]): its code is generated and compiled, its
+  *     closures cleaned and its Hadoop conf broadcast once, and its file
+  *     scan is a leaf that reads whatever the current run hands it. A
+  *     GET hands the pipeline a [[graft.functions.Binding]]: its slot
+  *     values, which the generated code reads once per run; the one
+  *     input split its probe packed; and the shape's data filters with
+  *     its values in place, translated by Spark into the filters pushed
+  *     to Parquet's row-group and page filters. It runs the pipeline's
+  *     one partition on the calling thread, as a task of its own
+  *     without a Spark job ([[Shim.runOnePartition]]). No plan copy,
+  *     `execute()`, code generation, broadcast, closure clean,
+  *     optimizer, planner, AQE wrapper, SQL execution event, row
   *     encoder, scheduler, task serialization or task-binary broadcast
   *     runs per request. What the in-thread run gives up: it posts no
   *     job events (the HTTP facade posts its own per-GET event), and no
@@ -119,7 +127,8 @@ final case class SnapshotParams(
   * A view store is read once (its file listing is kept in
   * `View.parts`), so a prepared plan never needs to outlive it;
   * anything that rewrites a served view must drop the listing and the
-  * shapes' analyzed and physical plans in one step.
+  * shapes' analyzed plans and kept pipelines (with the Hadoop-conf
+  * broadcast each pipeline holds) in one step.
   */
 class ExploraService(
     readings: DataFrame,
@@ -187,7 +196,7 @@ class ExploraService(
           // and no probe names a null metric
           val parts = index.listFiles(Nil, Nil).filterNot(d => d.values.isNullAt(m) || d.values.isNullAt(g))
           View(df, Some(parts.groupBy(_.values.getString(m)).map { case (metric, ds) =>
-            metric -> ds.map(d => d.values.getString(g) -> d).toMap
+            metric -> ds.map(d => d.values.getString(g) -> d)
           }))
         case None =>
           View(
@@ -201,7 +210,8 @@ class ExploraService(
     * history, the truncated instant for a snapshot. On a disk view the
     * slice read is `metric`'s `geo_part` partitions under the cover (a
     * SUPERSET of the row-level geo predicate, which still applies),
-    * coalesced to one partition when their files are one input split.
+    * coalesced to one partition when their files are one input split,
+    * which is then the split a one-split request's run reads.
     */
   private def probe(
       key: ViewKey,
@@ -218,19 +228,25 @@ class ExploraService(
         (prefixes, Some(prefixes.head.length),
           Map("lower" -> Literal(lower)) ++ upper.map(u => "upper" -> Literal(u)))
     }
-    val (parts, oneSplit) = v.parts match {
+    val (parts, split) = v.parts match {
       case Some(byMetric) =>
-        // a prefix coarser than the partition key selects every partition under it
+        // a prefix coarser than the partition key selects every partition
+        // under it; the file index's order is kept, and with it Spark's
+        // file order within the split, which float sums depend on
         val qs = keys.map(_.take(geoPartLen)).distinct
-        val selected = byMetric.getOrElse(metric, Map.empty).filter { case (part, _) => qs.exists(part.startsWith) }
-        (selected.keys.toSeq, Tables.splitCount(spark, selected.values.toSeq) <= 1)
-      case None => (Nil, false)
+        val selected = byMetric.getOrElse(metric, Nil).filter { case (part, _) => qs.exists(part.startsWith) }
+        (selected.map(_._1), Tables.filePartitions(spark, selected.map(_._2)) match {
+          case Seq()    => Some(FilePartition(0, Array.empty))
+          case Seq(one) => Some(one)
+          case _        => None
+        })
+      case None => (Nil, None)
     }
-    val shape = Shape(key, route, agg, prefixLen, oneSplit)
+    val shape = Shape(key, route, agg, prefixLen, oneSplit = split.isDefined)
     val values = Map[String, Expression]("metric" -> Literal(metric)) ++ bounds ++
       tsSlots(route).zip(times.map(t => TimestampParam.ofSecond(t.getEpochSecond)))
     new Request(spark, plans.getOrElseUpdate(shape, new Once(prepare(shape, v))).value,
-      values, Map("geo" -> keys, "geo_part" -> parts))
+      values, Map("geo" -> keys, "geo_part" -> parts), split)
   }
 
   private def tsSlots(route: Route): Seq[String] = route match {
@@ -409,10 +425,10 @@ object ExploraService {
   private final case class ViewKey(geoIndex: String, precision: Int, resolution: String, raw: Boolean = false)
 
   /** A cached view. `parts` lists a disk view's files by `metric`, then
-    * by `geo_part` value, taken once from the view's own file index
-    * (None in-process and raw).
+    * by `geo_part` value in the file index's order, taken once from the
+    * view's own file index (None in-process and raw).
     */
-  private final case class View(df: DataFrame, parts: Option[Map[String, Map[String, PartitionDirectory]]])
+  private final case class View(df: DataFrame, parts: Option[Map[String, Seq[(String, PartitionDirectory)]]])
 
   /** A request's spatial cover: exact cells, or prefixes of one length. */
   private sealed trait Cover
@@ -431,45 +447,63 @@ object ExploraService {
 
   /** The prepared plans of a shape: the analyzed plan of
     * [[ExploraQueries.query]] over slots and, for a one-split shape, its
-    * non-adaptive physical plan, prepared from it on first use (class
+    * kept in-thread pipeline, built from it on first use (class
     * scaladoc).
     */
   private final class Prepared(spark: SparkSession, val analyzed: LogicalPlan, val oneSplit: Boolean) {
-    lazy val physical: Option[SparkPlan] = Option.when(oneSplit)(Shim.preparedPlan(spark, analyzed))
+    lazy val pipeline: Option[Shim.Pipeline] = Option.when(oneSplit)(Shim.keptPipeline(spark, analyzed))
   }
 
-  /** One request: its values, bound on demand into its shape's plans. */
+  /** One request: its values, bound on demand into its shape's plans,
+    * and, for a one-split shape, the one input split it reads.
+    */
   private[graft] final class Request private[ExploraService] (
       val spark: SparkSession,
       prepared: Prepared,
       values: Map[String, Expression],
-      sets: Map[String, Seq[String]]) {
+      sets: Map[String, Seq[String]],
+      split: Option[FilePartition]) {
 
     /** The DataFrame of the bound analyzed plan: it is optimized and
       * planned when it runs, like any frame.
       */
     def frame: DataFrame = Shim.analyzedFrame(spark, Slot.bind(prepared.analyzed, values, sets))
 
-    /** For a one-split shape, a copy of its physical plan with the values
-      * bound, ready to run; None for any other shape.
+    /** For a one-split shape, the physical plan it runs: its shape's
+      * plan over slots, shared by every request of the shape; None for
+      * any other shape.
       */
-    def physicalPlan: Option[SparkPlan] =
-      prepared.physical.map(p => Shim.withActive(spark)(Slot.bind(p, values, sets)))
+    def physicalPlan: Option[SparkPlan] = prepared.pipeline.map(_.plan)
+
+    /** For a one-split shape, this request's run of its shape's pipeline:
+      * the slot values, the split and the filters pushed to Parquet
+      * (the shape's data filters with the values in place); None for
+      * any other shape.
+      */
+    lazy val binding: Option[Binding] = prepared.pipeline.map(p =>
+      Binding(values, sets, split.get, Shim.pushedFilters(p.dataFilters.map(Slot.bind(_, values, sets)))))
 
     /** Whether [[collect]] runs on the calling thread: a one-split shape. */
     def inThread: Boolean = prepared.oneSplit
 
-    /** The result rows as Scala values, strings as `String`. A one-split
-      * request runs the one partition of its bound physical plan on the
-      * calling thread ([[Shim.runOnePartition]]: no Spark job, so no job
-      * event and no job-group cancel) and reads the values straight from
-      * the `InternalRow`s; any other request collects its frame, as a
-      * Spark job.
+    /** The rows the in-thread run's scan produced in [[collect]]; -1 for
+      * a request collected as a Spark job.
       */
-    def collect(): Seq[Seq[Any]] = physicalPlan match {
-      case Some(plan) =>
-        val types = plan.output.map(_.dataType)
-        Shim.runOnePartition(spark, plan).toSeq.map { r =>
+    def rowsRead: Long = binding.fold(-1L)(_.rowsRead)
+
+    /** The result rows as Scala values, strings as `String`. A one-split
+      * request runs the one partition of its shape's kept pipeline on
+      * the calling thread, under its [[binding]]
+      * ([[Shim.runOnePartition]]: no plan copy, `execute()`, code
+      * generation or broadcast, and no Spark job, so no job event and
+      * no job-group cancel), and reads the values straight from the
+      * `InternalRow`s; any other request collects its frame, as a Spark
+      * job.
+      */
+    def collect(): Seq[Seq[Any]] = prepared.pipeline match {
+      case Some(p) =>
+        val types = p.plan.output.map(_.dataType)
+        Binding.run(binding.get)(Shim.runOnePartition(p.rdd)).toSeq.map { r =>
           types.indices.map { i =>
             if (r.isNullAt(i)) null
             else r.get(i, types(i)) match {

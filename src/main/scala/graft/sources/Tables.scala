@@ -166,20 +166,24 @@ object Tables {
     if (cols.isEmpty) df
     else df.select(col("*") +: cols.map { case (n, c) => c.as(n) }: _*)
 
-  /** Input splits a scan of `dirs` reads — Spark's own split size,
-    * file splitting and bin-packing (what FileSourceScanExec applies;
-    * parquet is splittable), from file metadata only: no job, no
-    * physical planning.
+  /** The input splits a scan of `dirs` reads — Spark's own split
+    * size, file splitting and bin-packing (what FileSourceScanExec
+    * applies; parquet is splittable), with the files in Spark's order
+    * (length, descending; `dirs` in the file index's order) — from file
+    * metadata only: no job, no physical planning.
     */
-  def splitCount(spark: SparkSession, dirs: Seq[PartitionDirectory]): Int = {
+  def filePartitions(spark: SparkSession, dirs: Seq[PartitionDirectory]): Seq[FilePartition] = {
     val maxSplitBytes = FilePartition.maxSplitBytes(spark, dirs)
     val splits = for {
       d <- dirs
       f <- d.files
       s <- PartitionedFileUtil.splitFiles(f, f.getPath, true, maxSplitBytes, d.values)
     } yield s
-    FilePartition.getFilePartitions(spark, splits.sortBy(-_.length), maxSplitBytes).size
+    FilePartition.getFilePartitions(spark, splits.sortBy(-_.length), maxSplitBytes)
   }
+
+  /** The number of [[filePartitions]] of `dirs`. */
+  def splitCount(spark: SparkSession, dirs: Seq[PartitionDirectory]): Int = filePartitions(spark, dirs).size
 
   /** Spread a narrow compute-heavy stage across the cluster when the
     * scan gives too few input splits. The test corpus is ONE sub-MB

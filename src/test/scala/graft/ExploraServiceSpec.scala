@@ -510,10 +510,7 @@ class ExploraServiceSpec extends AnyFunSuite {
     }
   }
 
-  // ---- prepared physical plans: a one-split request runs a bound copy
-
-  private def scanOf(r: ExploraService.Request): FileSourceScanExec =
-    r.physicalPlan.get.collect { case f: FileSourceScanExec => f }.head
+  // ---- prepared physical plans: a one-split request runs its shape's kept pipeline
 
   // the HTTP facade's specs compare the GET bodies of both paths; a
   // polygon snapshot (cells, not prefixes) has no route
@@ -530,20 +527,55 @@ class ExploraServiceSpec extends AnyFunSuite {
   }
 
   test("prepared physical plans: the bound scan prunes geo_part partitions and pushes the geo predicates") {
+    /** The `(metric, geo_part)` directory names of each file of a run's split. */
+    def dirsOf(r: ExploraService.Request): Seq[(String, String)] =
+      r.binding.get.split.files.toSeq.map { f =>
+        val dir = f.toPath.getParent
+        (dir.getParent.getName, dir.getName)
+      }
+    def pushedOf(r: ExploraService.Request): String = r.binding.get.filters.mkString("[", ", ", "]")
     // a box inside the cell u1555j: one geo_part of several at geoPartLen 5
     val cellBox = smallBox.copy(
       north = u1555jLat + 0.002, west = u1555jLon - 0.002, south = u1555jLat - 0.002, east = u1555jLon + 0.002)
     assert(coverOf(cellBox) === Seq("u1555j"))
-    val snap = scanOf(disk5.snapshotRequest(cellBox, Some("count")))
-    assert(snap.metadata.getOrElse("PartitionFilters", "").contains("geo_part"), snap.metadata)
+    val snap = disk5.snapshotRequest(cellBox, Some("count"))
+    val snapDirs = dirsOf(snap)
+    assert(snapDirs.nonEmpty && snapDirs.forall(_ == ("metric=signup", "geo_part=u1555")), snapDirs)
+    // the split is every file of the selected directory, and only those
+    val selected = new java.io.File(s"$disk5Store/geohashing_p6_day/metric=signup/geo_part=u1555")
+      .listFiles().count(_.getName.endsWith(".parquet"))
+    assert(snapDirs.size === selected)
     val allParts = new java.io.File(s"$disk5Store/geohashing_p6_day/metric=signup")
       .listFiles().count(_.getName.startsWith("geo_part="))
-    assert(snap.selectedPartitions.partitionCount < allParts, "the bound scan reads every signup partition")
-    val pushedRange = snap.metadata.getOrElse("PushedFilters", "")
+    assert(snapDirs.distinct.size < allParts, "the run reads every signup partition")
+    val pushedRange = pushedOf(snap)
     assert(pushedRange.contains("GreaterThanOrEqual(geo,") && pushedRange.contains("LessThan(geo,"), pushedRange)
-    val hist = scanOf(disk2.historyRequest(januaryHistory, Some("avg")))
-    assert(hist.metadata.getOrElse("PartitionFilters", "").contains("geo_part"), hist.metadata)
-    assert(hist.metadata.getOrElse("PushedFilters", "").contains("In(geo,"), hist.metadata)
+    val hist = disk2.historyRequest(januaryHistory, Some("avg"))
+    assert(dirsOf(hist).nonEmpty && dirsOf(hist).forall(_._1 == "metric=click"), dirsOf(hist))
+    assert(pushedOf(hist).contains("In(geo,"), pushedOf(hist))
+  }
+
+  test("prepared physical plans: Parquet pushdown reaches the in-thread run, which reads what the frame scan reads") {
+    // the view store written as the service writes it, but with row
+    // groups of at most 10 rows, so the geo predicate can skip some
+    val base = tempDir("graft-vs-rowgroups")
+    ViewBuilder.build(storeReadings, substring(col("gh12"), 1, 6), "day")
+      .withColumn("geo_part", substring(col("geo"), 1, 2))
+      .sortWithinPartitions(col("metric"), col("geo_part"), col("geo"), col("ts"))
+      .write.option("parquet.block.row.count.limit", 10L)
+      .partitionBy("metric", "geo_part").parquet(s"$base/geohashing_p6_day")
+    val small = new ExploraService(storeReadings, viewStore = Some(base))
+    val p = januaryHistory.copy(geohashes = gh6.slice(10, 12))
+    val r = small.historyRequest(p, Some("avg"))
+    assert(r.inThread)
+    val rows = r.collect()
+    assert(rows.nonEmpty)
+    val frame = r.frame
+    assert(frame.collect().toSeq.map(_.toSeq) === rows)
+    val scanned = scansOf(frame).head.metrics("numOutputRows").value
+    val partitionRows = spark.read.parquet(s"$base/geohashing_p6_day/metric=click/geo_part=u1").count()
+    assert(r.rowsRead === scanned, s"the run read ${r.rowsRead} rows, the frame scan $scanned")
+    assert(r.rowsRead < partitionRows, s"the run read all $partitionRows rows of its partition")
   }
 
   test("disk-backed view store: a probe spanning several input splits keeps its exchanges") {

@@ -10,6 +10,7 @@ import graft.sources.SensorGrid
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.rules.RuleExecutor
+import org.apache.spark.sql.graftshim.Shim
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -611,6 +612,33 @@ class HttpFacadeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(compiled === 0, s"the reruns compiled $compiled classes")
   }
 
+  /** Every broadcast id the driver's block manager holds. */
+  private def broadcastIds(): Set[Long] =
+    org.apache.spark.SparkEnv.get.blockManager.getMatchingBlockIds(_.isBroadcast).collect {
+      case org.apache.spark.storage.BroadcastBlockId(id, _) => id
+    }.toSet
+
+  test("warmed one-split GETs generate no code and broadcast nothing") {
+    val day = 86400000L
+    val quad = antwerp.copy(aggregate = "sum", precision = 14, geoIndex = "quadtiling")
+    val warm = Seq(historyPath(january), snapshotPath(antwerp), snapshotPath(quad))
+    val reruns = Seq(
+      historyPath(january.copy(geohashes = gh6.drop(4).take(12), fromMs = Some(fromMs + 2 * day), toMs = toMs - 3 * day)),
+      snapshotPath(antwerp.copy(tsMs = snapTsMs + day, west = 4.35, east = 4.52)),
+      snapshotPath(quad.copy(tsMs = snapTsMs + day, west = 4.34, east = 4.47)))
+    warm.foreach(p => assert(getRaw(diskBase, p)._1 === 200, p))
+    val codegen0 = org.apache.spark.sql.execution.WholeStageCodegenExec.codeGenTime
+    val broadcasts0 = broadcastIds()
+    val got = reruns.map(getRaw(diskBase, _))
+    val codegen = org.apache.spark.sql.execution.WholeStageCodegenExec.codeGenTime - codegen0
+    val newBroadcasts = broadcastIds() -- broadcasts0
+    got.zip(reruns).foreach { case ((code, body), p) =>
+      assert(code === 200 && mapper.readTree(body).get("data").size > 0, s"$p: $body")
+    }
+    assert(codegen === 0L, s"the reruns spent $codegen ns generating whole-stage code")
+    assert(newBroadcasts.isEmpty, s"the reruns broadcast ${newBroadcasts.size} values")
+  }
+
   test("8 concurrent one-split GETs binding distinct values each get their own answer") {
     val day = 86400000L
     val params = (0 until 8).map(i => january.copy(
@@ -692,5 +720,101 @@ class HttpFacadeSpec extends AnyFunSuite with BeforeAndAfterAll {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
+  }
+
+  test("runOnePartition runs the partition's completion listeners, whether it succeeds or throws") {
+    val completed = new java.util.concurrent.atomic.AtomicInteger()
+    val listening = org.apache.spark.sql.functions.udf { (x: Long) =>
+      org.apache.spark.TaskContext.get().addTaskCompletionListener[Unit](_ => completed.incrementAndGet())
+      if (x < 0) throw new IllegalStateException(s"row $x fails")
+      x
+    }
+    def onePartition(from: Long) = spark.range(from, from + 1, 1, 1)
+      .select(listening(org.apache.spark.sql.functions.col("id"))).queryExecution.executedPlan.execute()
+    assert(Shim.runOnePartition(onePartition(1)).map(_.getLong(0)).toSeq === Seq(1L))
+    assert(completed.get === 1, "a run that succeeds did not run its completion listener")
+    intercept[Exception](Shim.runOnePartition(onePartition(-1)))
+    assert(completed.get === 2, "a run that throws did not run its completion listener")
+    assert(org.apache.spark.TaskContext.get() === null)
+  }
+
+  test("an explora:<route> event splits its GET into resolve, run and envelope, and counts the rows read") {
+    val sc = spark.sparkContext
+    val gets = new java.util.concurrent.ConcurrentLinkedQueue[ExploraGet]()
+    val markers = new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.CountDownLatch]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).flatMap(id => Option(markers.get(id)))
+          .foreach(_.countDown())
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case g: ExploraGet => gets.add(g)
+        case _             =>
+      }
+    }
+    // every event posted before a marker job is delivered before its start
+    def flush(): Unit = {
+      val marker = s"layers-marker-${java.util.UUID.randomUUID()}"
+      val seen = new java.util.concurrent.CountDownLatch(1)
+      markers.put(marker, seen)
+      sc.setJobGroup(marker, "listener flush")
+      sc.parallelize(Seq(1), 1).count()
+      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    }
+    // two in-thread GETs, and one over the in-process views, a Spark job
+    val paths = Seq(diskBase -> historyPath(january), diskBase -> snapshotPath(antwerp), base -> historyPath(january))
+    sc.addSparkListener(listener)
+    try {
+      paths.foreach { case (b, p) => assert(getRaw(b, p)._1 === 200) } // warm
+      flush()
+      gets.clear()
+      paths.foreach { case (b, p) => assert(getRaw(b, p)._1 === 200) }
+      flush()
+      val got = gets.toArray(Array.empty[ExploraGet]).toSeq
+      assert(got.map(_.inThread) === Seq(true, true, false), got)
+      got.foreach { g =>
+        assert(g.resolveNs > 0 && g.runNs > 0 && g.envelopeNs > 0, g)
+        assert(g.resolveNs + g.runNs + g.envelopeNs <= g.durationNs, g)
+        assert(g.rows > 0, g)
+        if (g.inThread) assert(g.rowsRead >= g.rows, g) else assert(g.rowsRead === -1L, g)
+      }
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("concurrent one-split GETs of three shapes, each binding its own values, each get their frame's body") {
+    val day = 86400000L
+    val quad = antwerp.copy(aggregate = "sum", precision = 14, geoIndex = "quadtiling")
+    // (path, the frame body it must equal): 8 bindings of each shape
+    val requests: Seq[(String, String)] = (0 until 8).flatMap { i =>
+      val h = january.copy(geohashes = gh6.drop(i).take(3 + 2 * i), fromMs = Some(fromMs + i * day), toMs = toMs - (7 - i) * day)
+      val g = antwerp.copy(tsMs = snapTsMs + (i - 4) * day, west = 4.31 + 0.005 * i, east = 4.50 + 0.005 * i)
+      val q = quad.copy(tsMs = snapTsMs + (i - 4) * day, north = 51.31 - 0.004 * i, south = 51.17 - 0.004 * i)
+      Seq(
+        historyPath(h) -> frameBody(disk.history(h), Seq("timestamp", "avg"), "click"),
+        snapshotPath(g) -> frameBody(disk.snapshot(g), Seq("geohash", "avg"), "signup"),
+        snapshotPath(q) -> frameBody(disk.snapshot(q), Seq("geohash", "sum"), "signup"))
+    }
+    assert(requests.map(_._2).distinct.size === requests.size, "two bindings share an answer")
+    assert(requests.count(r => mapper.readTree(r._2).get("data").size > 0) >= requests.size / 2)
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      // each thread walks all shapes and bindings from its own offset
+      val futures = (0 until 8).map(t => pool.submit(new java.util.concurrent.Callable[Seq[String]] {
+        def call(): Seq[String] = {
+          go.await()
+          (0 until 25).flatMap { k =>
+            val (path, want) = requests((t * 5 + k) % requests.size)
+            val (code, body) = getRaw(diskBase, path)
+            Option.when(code != 200 || body != want)(s"thread $t, $path: $code")
+          }
+        }
+      }))
+      go.countDown()
+      val wrong = futures.flatMap(_.get(300, java.util.concurrent.TimeUnit.SECONDS))
+      assert(wrong.isEmpty, wrong.take(5).mkString("; "))
+    } finally pool.shutdown()
   }
 }

@@ -7,7 +7,8 @@
 #   tools/preflight.sh          # compile main + tests + no partitionOverwriteMode
 #                               #   under src/ + no store maintenance outside
 #                               #   StoreManifest.maintain + no task context
-#                               #   outside graftshim + entry-count pin
+#                               #   or scan internals outside graftshim +
+#                               #   entry-count pin
 #   tools/preflight.sh --full   # + graft.Verify at sf0.01 replayed in DuckDB,
 #                               #   + short serve and maintain benchmark runs,
 #                               #   which must answer every operation correctly
@@ -45,6 +46,17 @@ fi
 if grep -rnE 'TaskContextImpl|TaskMemoryManager|setTaskContext|registerTask\(' src/main \
     | grep -v '^src/main/scala/org/apache/spark/sql/graftshim/'; then
   echo "preflight FAIL: task context outside org/apache/spark/sql/graftshim/ (use Shim.runOnePartition)"
+  exit 1
+fi
+
+# The kept scan of a one-split GET stays in the shim too: its reader
+# factory, the Hadoop conf it broadcasts once per shape and the
+# translation of its pushed filters are built in one place
+# (org.apache.spark.sql.graftshim), so no other main source may build
+# a Parquet reader, wrap a Hadoop conf or translate filters itself.
+if grep -rnE 'ParquetPartitionReaderFactory|SerializableConfiguration|DataSourceStrategy' src/main \
+    | grep -v '^src/main/scala/org/apache/spark/sql/graftshim/'; then
+  echo "preflight FAIL: scan internals outside org/apache/spark/sql/graftshim/ (use the shim's kept scan)"
   exit 1
 fi
 
